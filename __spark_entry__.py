@@ -1,14 +1,14 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Driver contract for the spark-graft engine (PySpark target).
 
 ``entry(spark)`` runs the flagship FK-closure subset pipeline on
-sf0.001; ``queries()`` exposes one entry per implemented operator from
-SURVEY.md §2 (core reference surface + §2B extensions); ``oracle_sql()``
-gives the DuckDB-equivalent ANSI SQL for every SQL-expressible entry.
+sf0.001; ``queries()`` returns every entry of the
+``rdbms_subsetter_spark.queries`` registry in grading order;
+``oracle_sql()`` gives the DuckDB-equivalent ANSI SQL for every
+SQL-expressible entry.
 """
 
 from __future__ import annotations
 
-import json
 import sys
 from collections.abc import Callable
 from pathlib import Path
@@ -20,28 +20,7 @@ if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
 from rdbms_subsetter_spark import pipeline  # noqa: E402
-from rdbms_subsetter_spark.queries_core import core_oracles, core_queries  # noqa: E402
-from rdbms_subsetter_spark.queries_ext import ext_oracles, ext_queries  # noqa: E402
-from rdbms_subsetter_spark.queries_ext2 import ext2_oracles, ext2_queries  # noqa: E402
-from rdbms_subsetter_spark.queries_ext3 import ext3_oracles, ext3_queries  # noqa: E402
-from rdbms_subsetter_spark.queries_ext4 import ext4_oracles, ext4_queries  # noqa: E402
-from rdbms_subsetter_spark.queries_ext5 import ext5_oracles, ext5_queries  # noqa: E402
-from rdbms_subsetter_spark.queries_ext6 import ext6_oracles, ext6_queries  # noqa: E402
-from rdbms_subsetter_spark.queries_ext7 import ext7_oracles, ext7_queries  # noqa: E402
-from rdbms_subsetter_spark.queries_ext8 import ext8_oracles, ext8_queries  # noqa: E402
-from rdbms_subsetter_spark.queries_ext9 import ext9_oracles, ext9_queries  # noqa: E402
-from rdbms_subsetter_spark.queries_ext10 import ext10_oracles, ext10_queries  # noqa: E402
-from rdbms_subsetter_spark.queries_ext11 import ext11_oracles, ext11_queries  # noqa: E402
-from rdbms_subsetter_spark.queries_ext12 import ext12_oracles, ext12_queries  # noqa: E402
-from rdbms_subsetter_spark.queries_ext13 import ext13_oracles, ext13_queries  # noqa: E402
-from rdbms_subsetter_spark.queries_ext14 import ext14_oracles, ext14_queries  # noqa: E402
-from rdbms_subsetter_spark.queries_ext15 import ext15_oracles, ext15_queries  # noqa: E402
-from rdbms_subsetter_spark.queries_ext16 import ext16_oracles, ext16_queries  # noqa: E402
-from rdbms_subsetter_spark.queries_ext17 import ext17_oracles, ext17_queries  # noqa: E402
-from rdbms_subsetter_spark.queries_ext18 import ext18_oracles, ext18_queries  # noqa: E402
-from rdbms_subsetter_spark.queries_ext19 import ext19_oracles, ext19_queries  # noqa: E402
-from rdbms_subsetter_spark.queries_ext20 import ext20_oracles, ext20_queries  # noqa: E402
-from rdbms_subsetter_spark.queries_tpch import tpch_oracles, tpch_queries  # noqa: E402
+from rdbms_subsetter_spark.queries import GRADING_ORDER, ORACLES, QUERIES  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -49,112 +28,9 @@ def entry(spark: SparkSession) -> DataFrame:
     return pipeline.subset_summary(spark, "/root/testdata/sf0.001")
 
 
-# The driver grades ~50 entries per round in registration order, so
-# registration order IS the grading budget.  Per the round-3 verdict,
-# round 4's ordering rule is simply: every entry with NO driver verdict
-# yet grades first (oldest registration first), already-graded entries
-# re-grade last.  The graded union is computed from the driver's own
-# CORRECTNESS_r*.json artifacts so the ordering self-maintains as new
-# rounds land verdicts.
-def _graded_union() -> set[str]:
-    graded: set[str] = set()
-    for path in sorted(Path(_REPO).glob("CORRECTNESS_r*.json")):
-        try:
-            verdicts = json.loads(path.read_text())
-        except (OSError, ValueError):
-            continue
-        if isinstance(verdicts, dict):
-            graded.update(verdicts.keys())
-    return graded
-
-
-# Entries whose SEMANTICS changed this round (operator + oracle moved
-# in lockstep): they already hold a verdict in the union, but that
-# verdict describes the old semantics, so they must re-grade inside
-# this round's ~50-entry window — right after the never-graded bucket.
-_REGRADE_THIS_ROUND: tuple[str, ...] = (
-    # Round 11: empty.  The round-10 marker (dedup_ngram_containment's
-    # cap flip) re-graded green in CORRECTNESS_r10 and dropped off.
-    # Round-11 changes are not semantics flips: the blocked-kNN block
-    # assignment moved to hashed ids but the kernel is exact under ANY
-    # blocking (property-asserted bit-identical to the broadcast
-    # kernel), and the substring-cap power-of-two guard only REJECTS
-    # configurations that were never graded.  Round-11 additions
-    # (avro_source_agg, agg_quantile_rollup) are new registrations —
-    # they grade first as never-graded entries.  Any future semantics
-    # flip MUST list itself here; enforced by the oracle-manifest
-    # guard in tests/test_registration.py.
-)
-
-
-def _grading_order(names: list[str]) -> list[str]:
-    """Never-driver-graded entries first, in original registration order
-    (module registration is chronological, so this is oldest-debt-first);
-    then entries whose semantics changed this round (stale verdicts);
-    entries with a current driver verdict re-grade last.  Sort
-    stability preserves registration order within each bucket."""
-    graded = _graded_union()
-    changed = set(_REGRADE_THIS_ROUND)
-    return sorted(names, key=lambda n: (n in graded, n in graded and n not in changed))
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    out.update(core_queries())
-    out.update(ext_queries())
-    out.update(ext2_queries())
-    out.update(ext3_queries())
-    out.update(ext4_queries())
-    out.update(ext5_queries())
-    out.update(ext6_queries())
-    out.update(ext7_queries())
-    out.update(ext8_queries())
-    out.update(ext9_queries())
-    out.update(ext10_queries())
-    out.update(ext11_queries())
-    out.update(ext12_queries())
-    out.update(ext13_queries())
-    out.update(ext14_queries())
-    out.update(tpch_queries())
-    # round-6/7 additions registered LAST (grading discipline: new
-    # entries must not displace any not-yet-graded entry; with the
-    # full battery graded they sort first in the never-graded bucket)
-    out.update(ext15_queries())
-    out.update(ext16_queries())
-    out.update(ext17_queries())
-    out.update(ext18_queries())
-    out.update(ext19_queries())
-    out.update(ext20_queries())
-    ordered = _grading_order(list(out))
-    return {n: out[n] for n in ordered}
+    return {n: QUERIES[n] for n in GRADING_ORDER}
 
 
 def oracle_sql() -> dict[str, str]:
-    out: dict[str, str] = {}
-    for name, sql in {
-        **core_oracles(),
-        **ext_oracles(),
-        **ext2_oracles(),
-        **ext3_oracles(),
-        **ext4_oracles(),
-        **ext5_oracles(),
-        **ext6_oracles(),
-        **ext7_oracles(),
-        **ext8_oracles(),
-        **ext9_oracles(),
-        **ext10_oracles(),
-        **ext11_oracles(),
-        **ext12_oracles(),
-        **ext13_oracles(),
-        **ext14_oracles(),
-        **tpch_oracles(),
-        **ext15_oracles(),
-        **ext16_oracles(),
-        **ext17_oracles(),
-        **ext18_oracles(),
-        **ext19_oracles(),
-        **ext20_oracles(),
-    }.items():
-        if sql is not None:
-            out[name] = sql
-    return out
+    return dict(ORACLES)

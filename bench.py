@@ -439,6 +439,9 @@ def _summary_line(
       entry that merely got faster can never leave the printed set and
       read as "dropped_from_bench"; only after the carried set fits
       does the remaining budget admit the current slowest.
+
+    An entry that does not fit is skipped (later, shorter entries may
+    still fit); a skipped carried entry is reported on stderr.
     """
     summary = {
         "metric": "headline_queries_total_sec",
@@ -461,7 +464,11 @@ def _summary_line(
         summary["queries"][name] = round(timings[name], 2)
         if len(json.dumps(summary, **compact)) > budget:
             del summary["queries"][name]
-            break
+            if name in carried:
+                print(
+                    f"bench: carried entry {name} dropped from the summary line",
+                    file=sys.stderr,
+                )
     return json.dumps(summary, **compact)
 
 

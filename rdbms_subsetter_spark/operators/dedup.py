@@ -122,11 +122,13 @@ def _scan_task_estimate(docs: DataFrame) -> int | None:
             raw = conf.get(key)
         except Exception:
             return default
-        raw = str(raw).lower().strip()
-        for suf, mult in (("g", 1 << 30), ("m", 1 << 20), ("k", 1 << 10), ("b", 1)):
-            if raw.endswith(suf):
-                return int(float(raw[: -len(suf)]) * mult)
-        return int(raw)
+        # Spark byte strings: "134217728b", "128m", "128mb", "1g", "2t", "1pb"
+        num = str(raw).lower().strip().removesuffix("b")
+        shift = {"k": 10, "m": 20, "g": 30, "t": 40, "p": 50}.get(num[-1:], 0)
+        try:
+            return int(float(num[:-1] if shift else num) * (1 << shift))
+        except ValueError:
+            return default
 
     max_pb = _bytes_conf("spark.sql.files.maxPartitionBytes", 128 << 20)
     open_cost = _bytes_conf("spark.sql.files.openCostInBytes", 4 << 20)

@@ -8,7 +8,7 @@ module turns that boundary into a ONE-JAR UPGRADE instead of a rewrite:
 the classpath AND the session extension installed — both are required
 for ``MERGE INTO`` to parse and plan) and dispatches to a real Delta
 MERGE when present, else to the dynamic-partition-overwrite MERGE
-(`queries_ext14.merge_partition_pruned_table`), which is the strongest
+(`queries.sources.merge_partition_pruned_table`), which is the strongest
 plain-parquet form (write cost ∝ touched partitions, byte-identity of
 untouched partitions asserted in tests).
 
@@ -104,7 +104,7 @@ def merge_upsert_auto(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     hashes identically)."""
     if delta_merge_available(spark):
         return _merge_delta(spark, sf_dir), "delta"
-    from rdbms_subsetter_spark.queries_ext14 import merge_partition_pruned_table
+    from rdbms_subsetter_spark.queries.sources import merge_partition_pruned_table
 
     return merge_partition_pruned_table(spark, sf_dir), "dynamic-overwrite"
 

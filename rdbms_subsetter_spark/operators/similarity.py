@@ -396,7 +396,7 @@ def auto_planes_per_band(
     stress run measured 34× growth at fixed planes).
 
     Exact formula — mirrored verbatim by the DuckDB oracle
-    (queries_ext._srp_near_dup_oracle), so keep the two in lockstep:
+    (queries.dedup._srp_near_dup_oracle), so keep the two in lockstep:
     ``n < target → min_planes`` else
     ``max(min_planes, floor(log2(n / target)) + 1)``.  Both engines
     evaluate log2 on IEEE doubles; the floor is stable because

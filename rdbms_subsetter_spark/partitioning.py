@@ -54,13 +54,6 @@ def write_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> No
     df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
 
 
-def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, on: list[str], how: str = "inner"
-) -> DataFrame:
-    """Join two same-bucketed tables on the bucket key (shuffle-free)."""
-    return spark.table(left_table).join(spark.table(right_table), on=on, how=how)
-
-
 # ---------------------------------------------------------------------------
 # skew salting
 # ---------------------------------------------------------------------------

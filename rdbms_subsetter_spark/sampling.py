@@ -91,11 +91,6 @@ def sample_modulo(df: DataFrame, pk_col: str, modulus: int, remainder: int = 0) 
     return df.filter(F.col(pk_col) % modulus == remainder)
 
 
-def forced_rows(df: DataFrame, pk_col: str, values: list) -> DataFrame:
-    """``--force table:pk`` seed rows (reference op #14)."""
-    return df.filter(F.col(pk_col).isin(values))
-
-
 def sample_stratified_modulo(
     df: DataFrame, pk_col: str, strata_col: str, rates: dict[str, int], default: int = 0
 ) -> DataFrame:

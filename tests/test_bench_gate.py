@@ -286,6 +286,42 @@ def test_tripwire_skips_identical_committed_run(tmp_path, monkeypatch):
     assert _check() == 0
 
 
+def test_tripwire_matches_the_current_runs_sf(tmp_path, monkeypatch):
+    """ADVICE r12: the previous committed run was looked up at a literal
+    sf 0.1, so an sf0.01 history compared against (or skipped to) the
+    wrong scale.  The newest committed run here is sf0.1 and flat; the
+    sf0.01 run behind it breached, and only that one counts."""
+    hist = {n: {"first": 1.0, "first_commit": "aaaa", "min": 1.0} for n in
+            [*bench_gate.CANARIES[:5], "q_heavy"]}
+    monkeypatch.setattr(
+        bench_gate, "HISTORY", _write(tmp_path, "BENCH_HISTORY.json", hist)
+    )
+    monkeypatch.setattr(bench_gate, "REPINS", tmp_path / "BENCH_REPINS.json")
+    monkeypatch.setattr(bench_gate, "REPORT", tmp_path / "BENCH_GATE_REPORT.json")
+    now = {n: 1.0 for n in bench_gate.CANARIES[:5]}
+    now["q_heavy"] = 1.8
+    monkeypatch.setattr(
+        bench_gate,
+        "DETAIL",
+        _write(tmp_path, "BENCH_DETAIL.json", {"sf": 0.01, "queries": now}),
+    )
+    committed = {
+        "sf01sha": {"sf": 0.1, "queries": dict(now, q_heavy=1.0)},
+        "sf001sha": {"sf": 0.01, "queries": dict(now, q_heavy=1.7)},
+    }
+
+    def fake_git(*args):
+        if args[0] == "log":
+            return "sf01sha\nsf001sha"
+        if args[0] == "show":
+            return json.dumps(committed[args[1].split(":")[0]])
+        raise AssertionError(args)
+
+    monkeypatch.setattr(bench_gate, "_git", fake_git)
+    assert _check() == 1
+    assert json.load(open(bench_gate.REPORT))["consecutive_breaches"] == ["q_heavy"]
+
+
 def test_protocol_detection(monkeypatch):
     sources = {
         "old": "def main(): pass\n",

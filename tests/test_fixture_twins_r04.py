@@ -34,13 +34,13 @@ def _boundary_margin(x: float, decimals: int) -> float:
 
 
 def test_srp_fixture_literals_match_mirror():
-    from rdbms_subsetter_spark.queries_ext14 import _SRP_EXPECT
+    from rdbms_subsetter_spark.queries.similarity import _SRP_EXPECT
 
     assert srp_expect_rounded() == _SRP_EXPECT
 
 
 def test_pca_fixture_literals_match_mirror():
-    from rdbms_subsetter_spark.queries_ext14 import _PCA_EXPECT
+    from rdbms_subsetter_spark.queries.similarity import _PCA_EXPECT
 
     assert pca_expect_rounded() == _PCA_EXPECT
 
@@ -65,7 +65,7 @@ def test_srp_fixture_operator_agrees(spark):
     """The Spark operator reproduces the mirror bit-for-bit on the
     fixture (the parity suite checks this against the SQL oracle too;
     this is the direct operator-vs-mirror pin)."""
-    from rdbms_subsetter_spark.queries_ext14 import q_ann_srp_fixture
+    from rdbms_subsetter_spark.queries.similarity import q_ann_srp_fixture
 
     got = sorted(
         (r["query_id"], r["neighbor_id"], r["cosine"], r["rank"])
@@ -75,7 +75,7 @@ def test_srp_fixture_operator_agrees(spark):
 
 
 def test_pca_fixture_operator_agrees(spark):
-    from rdbms_subsetter_spark.queries_ext14 import q_embed_pca_fixture
+    from rdbms_subsetter_spark.queries.similarity import q_embed_pca_fixture
 
     got = sorted(
         (r["vec_id"], r["label"], r["pc1"], r["evr1"], r["pc2"], r["evr2"])
@@ -95,7 +95,7 @@ def test_sketch_bounds_all_true_every_sf(spark):
 
     from tests.conftest import SF_SMALL
 
-    from rdbms_subsetter_spark.queries_ext14 import q_agg_sketch_error_bounds
+    from rdbms_subsetter_spark.queries.sql import q_agg_sketch_error_bounds
 
     root = os.path.dirname(SF_SMALL.rstrip("/"))
     sf_dirs = sorted(

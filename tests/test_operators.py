@@ -89,10 +89,7 @@ def test_ivf_recall_vs_brute_force(spark):
 
 
 def test_approx_sketches_close_to_exact(spark):
-    from rdbms_subsetter_spark.queries_ext2 import (
-        q_agg_approx_sketches,
-        q_agg_distinct_percentile,
-    )
+    from rdbms_subsetter_spark.queries.sql import q_agg_approx_sketches, q_agg_distinct_percentile
     from tests.conftest import SF_SMALL
 
     approx = {r["l_returnflag"]: r for r in q_agg_approx_sketches(spark, SF_SMALL).collect()}
@@ -324,7 +321,7 @@ def test_er_dictionary_reduction_equals_naive(spark):
     the same best matches as the naive blocked row-level join."""
     from pyspark.sql import Window, functions as F
     from rdbms_subsetter_spark.catalog import Catalog
-    from rdbms_subsetter_spark.queries_ext10 import q_er_fuzzy_join
+    from rdbms_subsetter_spark.queries.similarity import q_er_fuzzy_join
 
     sf = "/root/testdata/sf0.001"
     got = {
@@ -367,10 +364,7 @@ def test_runtime_bloom_filter_fires(spark):
     from pyspark.sql import functions as F
 
     from rdbms_subsetter_spark.catalog import Catalog
-    from rdbms_subsetter_spark.queries_ext14 import (
-        _BLOOM_CONFS,
-        q_join_runtime_bloom,
-    )
+    from rdbms_subsetter_spark.queries.sql import _BLOOM_CONFS, q_join_runtime_bloom
     from tests.conftest import SF_SMALL
 
     from rdbms_subsetter_spark.session import conf_window
@@ -416,7 +410,7 @@ def test_merge_partition_pruned_rewrites_only_touched_partitions(spark):
     import hashlib
     import os
 
-    from rdbms_subsetter_spark.queries_ext14 import (
+    from rdbms_subsetter_spark.queries.sources import (
         merge_partition_pruned_table,
         q_merge_partition_pruned,
     )

@@ -115,7 +115,7 @@ def test_interpolation_invariants(spark, points):
     values; leading/trailing gaps clamp to the nearest known value."""
     import datetime
 
-    from rdbms_subsetter_spark.queries_ext6 import interpolate_hourly
+    from rdbms_subsetter_spark.queries.events import interpolate_hourly
 
     present = [(h, float(h * 3 + 1)) for h, p in points if p]
     if not present:

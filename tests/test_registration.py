@@ -1,98 +1,68 @@
-"""Registration-integrity guards for the driver contract: no query
-module may silently shadow another module's entry (a collision once
-hid round 1's agg_unpivot behind a round-2 namesake), and every oracle
-key must have a query.
+"""Registration-integrity guards for the driver contract: no entry may
+silently shadow another (a collision once hid round 1's agg_unpivot
+behind a round-2 namesake), every oracle key must have a query, and
+``GRADING_ORDER`` must name each registered entry exactly once.
 """
 
 from __future__ import annotations
 
+import pytest
 
-def _module_dicts():
+
+def test_register_raises_on_duplicate_name():
     import __spark_entry__  # noqa: F401  (ensures sys.path setup)
-    from rdbms_subsetter_spark import (
-        queries_core, queries_ext, queries_ext2, queries_ext3, queries_ext4,
-        queries_ext5, queries_ext6, queries_ext7, queries_ext8, queries_ext9,
-        queries_ext10, queries_ext11, queries_ext12, queries_ext13, queries_ext14,
-        queries_ext15, queries_ext16, queries_ext17, queries_ext18, queries_ext19,
-        queries_ext20,
-        queries_tpch,
+    from rdbms_subsetter_spark.queries import ORACLES, QUERIES, register
+
+    before = (dict(QUERIES), dict(ORACLES))
+    with pytest.raises(ValueError, match="subset_summary"):
+        register("subset_summary", oracle="SELECT 1")(lambda spark, sf_dir: None)
+    assert (QUERIES, ORACLES) == before
+
+
+def test_grading_order_names_the_registered_set_once():
+    import __spark_entry__  # noqa: F401
+    from rdbms_subsetter_spark.queries import GRADING_ORDER, QUERIES
+
+    dupes = sorted({n for n in GRADING_ORDER if GRADING_ORDER.count(n) > 1})
+    assert not dupes, f"GRADING_ORDER lists these more than once: {dupes}"
+    assert set(GRADING_ORDER) == set(QUERIES), (
+        f"unregistered: {sorted(set(GRADING_ORDER) - set(QUERIES))}, "
+        f"missing from GRADING_ORDER: {sorted(set(QUERIES) - set(GRADING_ORDER))}"
     )
-
-    return {
-        "core": queries_core.core_queries(),
-        "ext": queries_ext.ext_queries(),
-        "ext2": queries_ext2.ext2_queries(),
-        "ext3": queries_ext3.ext3_queries(),
-        "ext4": queries_ext4.ext4_queries(),
-        "ext5": queries_ext5.ext5_queries(),
-        "ext6": queries_ext6.ext6_queries(),
-        "ext7": queries_ext7.ext7_queries(),
-        "ext8": queries_ext8.ext8_queries(),
-        "ext9": queries_ext9.ext9_queries(),
-        "ext10": queries_ext10.ext10_queries(),
-        "ext11": queries_ext11.ext11_queries(),
-        "ext12": queries_ext12.ext12_queries(),
-        "ext13": queries_ext13.ext13_queries(),
-        "ext14": queries_ext14.ext14_queries(),
-        "ext15": queries_ext15.ext15_queries(),
-        "ext16": queries_ext16.ext16_queries(),
-        "ext17": queries_ext17.ext17_queries(),
-        "ext18": queries_ext18.ext18_queries(),
-        "ext19": queries_ext19.ext19_queries(),
-        "ext20": queries_ext20.ext20_queries(),
-        "tpch": queries_tpch.tpch_queries(),
-    }
-
-
-def test_no_cross_module_name_collisions():
-    seen: dict[str, str] = {}
-    dupes = []
-    for tag, d in _module_dicts().items():
-        for name in d:
-            if name in seen:
-                dupes.append((name, seen[name], tag))
-            seen[name] = tag
-    assert not dupes, f"colliding query names: {dupes}"
 
 
 def test_every_oracle_has_a_query_and_total_matches():
     import __spark_entry__ as m
+    from rdbms_subsetter_spark.queries import QUERIES
 
     qs, oracles = m.queries(), m.oracle_sql()
     assert set(oracles) <= set(qs)
-    total = sum(len(d) for d in _module_dicts().values())
-    assert len(qs) == total  # nothing shadowed in the merge
+    assert len(qs) == len(QUERIES)  # nothing dropped between registry and contract
 
 
 def test_oracle_changes_carry_a_regrade_marker():
-    """Round-7 grading-order contract, mechanized (r07 verdict ask #8):
-    a graded entry whose oracle TEXT changes without listing itself in
-    ``_REGRADE_THIS_ROUND`` would sail on under a verdict describing
-    the OLD semantics — debt disguised as coverage.  The committed
-    manifest (tests/oracle_manifest.json) pins every oracle's md5;
-    regenerate it with ``python tools/update_oracle_manifest.py`` after
-    any intentional change, and ALSO add the entry to
-    ``_REGRADE_THIS_ROUND`` when the change is semantic."""
+    """Grading-order contract, mechanized (r07 verdict ask #8): a graded
+    entry whose oracle TEXT changes would sail on under a verdict
+    describing the OLD semantics — debt disguised as coverage.  The
+    committed manifest (tests/oracle_manifest.json) pins every oracle's
+    md5.  After an intentional semantic change, move the entry to the
+    front of ``rdbms_subsetter_spark.queries.GRADING_ORDER`` so it
+    re-grades first, then regenerate the manifest with
+    ``python tools/update_oracle_manifest.py``."""
     import json
     from pathlib import Path
 
-    import __spark_entry__ as m
     from tools.update_oracle_manifest import oracle_hashes
 
     manifest = json.loads(
         (Path(__file__).parent / "oracle_manifest.json").read_text()
     )
     live = oracle_hashes()
-    regrade = set(m._REGRADE_THIS_ROUND)
-    changed = [
-        n
-        for n in manifest.keys() & live.keys()
-        if manifest[n] != live[n] and n not in regrade
-    ]
+    changed = [n for n in manifest.keys() & live.keys() if manifest[n] != live[n]]
     assert not changed, (
-        f"oracle text changed without a _REGRADE_THIS_ROUND marker: {changed} "
-        f"— if semantic, add the name(s) to __spark_entry__._REGRADE_THIS_ROUND; "
-        f"then regenerate with `python tools/update_oracle_manifest.py`"
+        f"oracle text changed: {changed} — if semantic, move the name(s) to the "
+        f"front of rdbms_subsetter_spark.queries.GRADING_ORDER; then regenerate "
+        f"with `python tools/update_oracle_manifest.py`"
     )
     stale = manifest.keys() ^ live.keys()
     assert not stale, (

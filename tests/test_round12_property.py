@@ -166,6 +166,40 @@ def test_scan_task_estimate_decision_parity(spark):
         assert (est * 4 < target) == (actual * 4 < target), (t, est, actual)
 
 
+@pytest.mark.parametrize(
+    "max_pb,want_bytes",
+    [
+        ("128mb", 128 << 20),
+        ("1gb", 1 << 30),
+        ("2t", 2 << 40),
+        ("1pb", 1 << 50),
+        ("134217728b", 128 << 20),  # the value Spark reports when unset
+        ("lots", 128 << 20),  # unparsable: falls back to the default
+    ],
+)
+def test_scan_task_estimate_parses_byte_suffixes(tmp_path, max_pb, want_bytes):
+    """ADVICE r12: ``spark.sql.files.maxPartitionBytes`` set as ``128mb``,
+    ``1gb``, ``2t`` or ``1pb`` crashed the estimate.  A 3 GiB sparse
+    file on one core makes the task count ``ceil(size / maxPartitionBytes)``."""
+    from types import SimpleNamespace
+
+    f = tmp_path / "part-0.parquet"
+    with open(f, "wb") as fh:
+        fh.truncate(3 << 30)
+    confs = {
+        "spark.sql.files.maxPartitionBytes": max_pb,
+        "spark.sql.files.openCostInBytes": "0",
+    }
+    docs = SimpleNamespace(
+        inputFiles=lambda: [f"file://{f}"],
+        sparkSession=SimpleNamespace(
+            conf=SimpleNamespace(get=confs.__getitem__),
+            sparkContext=SimpleNamespace(defaultParallelism=1),
+        ),
+    )
+    assert dedup._scan_task_estimate(docs) == -(-(3 << 30) // want_bytes)
+
+
 def test_scan_task_estimate_none_for_local_relation(spark):
     df = spark.createDataFrame([(1, "a")], "doc_id long, text string")
     assert dedup._scan_task_estimate(df) is None
@@ -264,3 +298,20 @@ def test_bench_summary_carries_previous_round_printed_set():
     assert len(line) < 2000  # the driver captures the LAST 2000 bytes
     printed = set(json.loads(line)["queries"])
     assert carried & set(timings) <= printed
+
+
+def test_bench_summary_skips_an_entry_that_does_not_fit(monkeypatch, capsys):
+    """ADVICE r12: an oversized carried entry used to ``break`` the fill
+    loop, dropping every entry after it.  It is now skipped (with a
+    stderr warning) and the smaller entries behind it still print."""
+    import json
+
+    import bench
+
+    big = "carried_" + "x" * 1900
+    monkeypatch.setattr(bench, "_prev_round_printed", lambda: {big, "small_a"})
+    timings = {big: 9.0, "small_a": 1.0, "small_b": 0.5}
+    line = bench._summary_line(timings, 10.5, 0.1, 0)
+    assert len(line) <= 1900
+    assert set(json.loads(line)["queries"]) == {"small_a", "small_b"}
+    assert big in capsys.readouterr().err

@@ -74,7 +74,7 @@ def test_lakehouse_merge_probe_and_fallback(spark):
         merge_upsert_auto,
         read_merged,
     )
-    from rdbms_subsetter_spark.queries_ext14 import q_merge_partition_pruned
+    from rdbms_subsetter_spark.queries.sources import q_merge_partition_pruned
     from pyspark.sql import functions as F
 
     assert delta_merge_available(spark) is False
@@ -153,10 +153,7 @@ def test_udf_cogrouped_merge_edge_groups_parity(spark, adversarial_cogroup_dir):
     the edge groups the testdata can't guarantee: one-side-only keys,
     all-NULL value groups (pandas skipna sum == SQL sum + coalesce), and
     slice exclusion."""
-    from rdbms_subsetter_spark.queries_ext14 import (
-        _SQL_COGROUPED_MERGE,
-        q_udf_cogrouped_merge,
-    )
+    from rdbms_subsetter_spark.queries.sql import _SQL_COGROUPED_MERGE, q_udf_cogrouped_merge
 
     sf_dir = adversarial_cogroup_dir
     got = _canon(
@@ -183,10 +180,7 @@ def test_udtf_dynamic_schema_empty_token_parity(spark, adversarial_docs_dir):
     oracle's nullif(split_part(...), '') on every adversarial shape:
     consecutive, leading, trailing, all-space, empty, and NULL text
     (ADVICE r04: 'confirm on data with consecutive spaces')."""
-    from rdbms_subsetter_spark.queries_ext14 import (
-        _SQL_UDTF_DYNAMIC,
-        q_udtf_dynamic_schema,
-    )
+    from rdbms_subsetter_spark.queries.sql import _SQL_UDTF_DYNAMIC, q_udtf_dynamic_schema
 
     got = _canon(
         (r["first_tok"], r["n_docs"], r["n_full_width"])
@@ -375,7 +369,7 @@ def test_variant_extract_survives_malformed_json_spark_only(spark):
     """Spark-only (DuckDB's json functions throw on invalid JSON, so no
     shared oracle): try_parse_json turns malformed props into NULL
     variants instead of failing the scan, and they land in n_null_k."""
-    from rdbms_subsetter_spark.queries_ext8 import q_json_variant_extract
+    from rdbms_subsetter_spark.queries.sql import q_json_variant_extract
 
     out = os.path.join(tempfile.gettempdir(), "rss_r05_malformed_events")
     import shutil

@@ -912,7 +912,7 @@ def test_portable_pct_and_hash_bucket_match_md5_replica(spark, keys, seed):
     from pyspark.sql import functions as F
 
     from rdbms_subsetter_spark.partitioning import portable_pct
-    from rdbms_subsetter_spark.queries_ext5 import _hash_bucket
+    from rdbms_subsetter_spark.queries.text import _hash_bucket
 
     rows = [(i, str(k)) for i, k in enumerate(keys)]
     df = spark.createDataFrame(rows, "rid long, k string")

@@ -291,7 +291,7 @@ def test_hll_rollup_booleans_and_partials(spark):
     exact columns match an independent exact aggregation, and merging
     the per-day partials tracks the direct single-pass sketch."""
     from rdbms_subsetter_spark.catalog import Catalog
-    from rdbms_subsetter_spark.queries_ext17 import q_agg_hll_rollup
+    from rdbms_subsetter_spark.queries.sql import q_agg_hll_rollup
     from tests.conftest import SF_SMALL
 
     rows = {r["event_type"]: r for r in q_agg_hll_rollup(spark, SF_SMALL).collect()}
@@ -316,7 +316,7 @@ def test_regression_agg_matches_numpy(spark):
     import numpy as np
 
     from rdbms_subsetter_spark.catalog import Catalog
-    from rdbms_subsetter_spark.queries_ext17 import q_agg_regression
+    from rdbms_subsetter_spark.queries.sql import q_agg_regression
     from tests.conftest import SF_SMALL
 
     got = {r["l_returnflag"]: r for r in q_agg_regression(spark, SF_SMALL).collect()}

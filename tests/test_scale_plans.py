@@ -136,7 +136,7 @@ def test_asof_join_single_shuffle(cat):
 
 
 def test_partitioned_source_query_prunes(spark):
-    from rdbms_subsetter_spark.queries_ext3 import q_partitioned_source_prune
+    from rdbms_subsetter_spark.queries.sources import q_partitioned_source_prune
 
     df = q_partitioned_source_prune(spark, SF_SMALL)
     plan = physical_plan(df, "formatted")
@@ -145,7 +145,7 @@ def test_partitioned_source_query_prunes(spark):
 
 
 def test_not_in_plans_null_aware_anti_join(spark):
-    from rdbms_subsetter_spark.queries_ext3 import q_sql_not_in_null_aware
+    from rdbms_subsetter_spark.queries.sql import q_sql_not_in_null_aware
 
     df = q_sql_not_in_null_aware(spark, SF_SMALL)
     plan = physical_plan(df, "simple")
@@ -156,7 +156,7 @@ def test_not_in_plans_null_aware_anti_join(spark):
 def test_tpch_q6_predicates_all_reach_scan(spark):
     """Q6's whole WHERE clause (date range, discount band, quantity cap)
     must push to the parquet scan, leaving a 1-exchange global agg."""
-    from rdbms_subsetter_spark.queries_tpch import q_tpch_forecast_revenue
+    from rdbms_subsetter_spark.queries.tpch import q_tpch_forecast_revenue
 
     df = q_tpch_forecast_revenue(spark, SF_SMALL)
     pushed = " ".join(pushed_filters(df))
@@ -169,7 +169,7 @@ def test_tpch_q19_disjunction_splits_and_pushes(spark):
     """Q19's OR-of-conjunctions must be factored per side: the part scan
     gets the brand/size disjunction, the lineitem scan the quantity
     bands — neither scan reads unfiltered."""
-    from rdbms_subsetter_spark.queries_tpch import q_tpch_disjunctive_filter
+    from rdbms_subsetter_spark.queries.tpch import q_tpch_disjunctive_filter
 
     df = q_tpch_disjunctive_filter(spark, SF_SMALL)
     pushed = " ".join(pushed_filters(df))
@@ -181,7 +181,7 @@ def test_tpch_q19_disjunction_splits_and_pushes(spark):
 def test_tpch_q9_dims_broadcast_single_shuffle(spark):
     """Q9's part/supplier/nation sides are broadcast; the only exchange
     is the final group-by (orders is broadcast at this SF by AQE)."""
-    from rdbms_subsetter_spark.queries_tpch import q_tpch_product_profit
+    from rdbms_subsetter_spark.queries.tpch import q_tpch_product_profit
 
     df = q_tpch_product_profit(spark, SF_SMALL)
     assert has_broadcast_hash_join(df)
@@ -192,7 +192,7 @@ def test_interpolate_windows_share_one_sort(spark):
     """events_interpolate's four ignore-nulls window passes must share a
     single sort (same partition key + ordering): 1 Sort, ≤2 exchanges
     (hourly agg + window repartition)."""
-    from rdbms_subsetter_spark.queries_ext6 import q_events_interpolate
+    from rdbms_subsetter_spark.queries.events import q_events_interpolate
 
     df = q_events_interpolate(spark, SF_SMALL)
     plan = physical_plan(df, "simple")
@@ -243,7 +243,7 @@ def test_no_cartesian_product_anywhere(name, fn, spark):
 def test_per_source_cap_uses_window_group_limit(spark):
     """The top-5-per-source cut must prune pre-shuffle: WindowGroupLimit
     forwards at most 5 candidates per (task, source)."""
-    from rdbms_subsetter_spark.queries_ext14 import q_docs_per_source_cap
+    from rdbms_subsetter_spark.queries.text import q_docs_per_source_cap
 
     plan = physical_plan(q_docs_per_source_cap(spark, SF_SMALL), "simple")
     assert "WindowGroupLimit" in plan and ", Partial" in plan
@@ -251,7 +251,7 @@ def test_per_source_cap_uses_window_group_limit(spark):
 
 
 def test_eval_balanced_sample_uses_window_group_limit(spark):
-    from rdbms_subsetter_spark.queries_ext14 import q_eval_balanced_sample
+    from rdbms_subsetter_spark.queries.text import q_eval_balanced_sample
 
     plan = physical_plan(q_eval_balanced_sample(spark, SF_SMALL), "simple")
     assert "WindowGroupLimit" in plan
@@ -260,7 +260,7 @@ def test_eval_balanced_sample_uses_window_group_limit(spark):
 def test_paragraph_dedup_single_scan_no_owner_broadcast(spark):
     """One corpus scan/explode; ownership via window — the corpus-scale
     owner relation must never appear as a broadcast join side."""
-    from rdbms_subsetter_spark.queries_ext14 import q_dedup_paragraph_exact
+    from rdbms_subsetter_spark.queries.dedup import q_dedup_paragraph_exact
 
     plan = physical_plan(q_dedup_paragraph_exact(spark, SF_SMALL), "simple")
     assert plan.count("FileScan parquet") == 1
@@ -271,7 +271,7 @@ def test_paragraph_dedup_single_scan_no_owner_broadcast(spark):
 def test_hybrid_rrf_rankings_are_take_ordered(spark):
     """Both ranking lists must cut via TakeOrderedAndProject (distributed
     partial top-k), never a global sort of the corpus."""
-    from rdbms_subsetter_spark.queries_ext14 import q_hybrid_search_rrf
+    from rdbms_subsetter_spark.queries.similarity import q_hybrid_search_rrf
 
     plan = physical_plan(q_hybrid_search_rrf(spark, SF_SMALL), "simple")
     assert plan.count("TakeOrderedAndProject") >= 2
@@ -280,7 +280,7 @@ def test_hybrid_rrf_rankings_are_take_ordered(spark):
 def test_incremental_delta_closure_is_semi_anti_joins(spark):
     """Delta closure = semi-joins up the FK chain + anti-joins against
     the existing key sets; no inner row-level joins of full tables."""
-    from rdbms_subsetter_spark.queries_ext14 import q_subset_incremental_delta
+    from rdbms_subsetter_spark.queries.subset import q_subset_incremental_delta
 
     plan = physical_plan(q_subset_incremental_delta(spark, SF_SMALL), "simple")
     assert "LeftAnti" in plan
@@ -290,7 +290,7 @@ def test_incremental_delta_closure_is_semi_anti_joins(spark):
 def test_join_hints_take_effect(spark):
     """The MERGE branch must plan SortMergeJoin and the SHUFFLE_HASH
     branch ShuffledHashJoin — hints override AQE's broadcast choice."""
-    from rdbms_subsetter_spark.queries_ext14 import q_join_strategy_hints
+    from rdbms_subsetter_spark.queries.sql import q_join_strategy_hints
 
     plan = physical_plan(q_join_strategy_hints(spark, SF_SMALL), "simple")
     assert "SortMergeJoin" in plan
@@ -325,7 +325,7 @@ def test_qualify_topk_uses_window_group_limit(spark):
     """The QUALIFY-style rn<=3 predicate must compile to the same
     physical shape native QUALIFY engines produce: WindowGroupLimit
     pruning to ≤3 candidates per group before the window sort."""
-    from rdbms_subsetter_spark.queries_ext15 import q_sql_qualify_topk
+    from rdbms_subsetter_spark.queries.sql import q_sql_qualify_topk
 
     plan = physical_plan(q_sql_qualify_topk(spark, SF_SMALL), "simple")
     assert "WindowGroupLimit" in plan
@@ -336,7 +336,7 @@ def test_join_cardinality_sketch_never_joins_to_estimate(spark):
     the only join in the plan is the exact-audit side (one broadcast
     of the selective build keys); each HLL is a partial-final
     aggregate over its own scan."""
-    from rdbms_subsetter_spark.queries_ext15 import q_join_cardinality_sketch
+    from rdbms_subsetter_spark.queries.sql import q_join_cardinality_sketch
 
     plan = physical_plan(q_join_cardinality_sketch(spark, SF_SMALL), "simple")
     assert plan.count("SortMergeJoin") == 0
@@ -350,7 +350,7 @@ def test_cross_corpus_minhash_broadcasts_eval_bands(spark):
     decontamination) must broadcast into the band-bucket join — the
     train corpus's band rows stream without a symmetric shuffle — and
     nothing in the plan is a cartesian product."""
-    from rdbms_subsetter_spark.queries_ext16 import q_dedup_minhash_cross_corpus
+    from rdbms_subsetter_spark.queries.dedup import q_dedup_minhash_cross_corpus
 
     plan = physical_plan(q_dedup_minhash_cross_corpus(spark, SF_SMALL), "simple")
     assert "BroadcastHashJoin" in plan
@@ -362,7 +362,7 @@ def test_approx_top_k_is_single_shuffle_objecthash(spark):
     one final ObjectHashAggregate around a single exchange per stage) —
     the whole point of grading it next to the exact heavy-hitters
     groupBy, whose shuffle carries every distinct token."""
-    from rdbms_subsetter_spark.queries_ext16 import q_agg_approx_top_k
+    from rdbms_subsetter_spark.queries.sql import q_agg_approx_top_k
 
     plan = physical_plan(q_agg_approx_top_k(spark, SF_SMALL), "simple")
     assert "ObjectHashAggregate" in plan
@@ -395,7 +395,7 @@ def test_agg_regression_single_exchange_pruned_scan(spark):
     pruning reaches the scan (three referenced columns only)."""
     import re
 
-    from rdbms_subsetter_spark.queries_ext17 import q_agg_regression
+    from rdbms_subsetter_spark.queries.sql import q_agg_regression
 
     df = q_agg_regression(spark, SF_SMALL)
     assert count_exchanges(df) == 1
@@ -409,7 +409,7 @@ def test_hll_rollup_merges_partial_sketches(spark):
     (hll_union_agg over the daily hll_sketch_agg buffers), never raw
     rows, through ObjectHashAggregate; the tiny merged side broadcasts
     into the audit join."""
-    from rdbms_subsetter_spark.queries_ext17 import q_agg_hll_rollup
+    from rdbms_subsetter_spark.queries.sql import q_agg_hll_rollup
 
     plan = physical_plan(q_agg_hll_rollup(spark, SF_SMALL), "simple")
     low = plan.lower()
@@ -426,7 +426,7 @@ def test_salted_running_total_window_is_bucket_scoped(spark):
     task."""
     import re
 
-    from rdbms_subsetter_spark.queries_ext17 import q_window_salted_running_total
+    from rdbms_subsetter_spark.queries.sql import q_window_salted_running_total
 
     plan = physical_plan(
         q_window_salted_running_total(spark, SF_SMALL), "simple"

@@ -88,7 +88,7 @@ def test_capped_jaccard_candidate_volume_bounded(spark, docs_x1):
     capped volume stays under its linear ceiling and strictly below
     uncapped.  Fails if the cap filter stops being applied."""
     from rdbms_subsetter_spark.operators.dedup import shingles
-    from rdbms_subsetter_spark.queries_ext import NGRAM_MAX_DOC_FREQ
+    from rdbms_subsetter_spark.queries.dedup import NGRAM_MAX_DOC_FREQ
     from tools.scale_stress import scaled_copies
 
     docs_dup4 = scaled_copies(docs_x1, X4, ["doc_id"]).localCheckpoint(eager=True)
@@ -262,7 +262,7 @@ def test_substring_candidate_volume_capped_under_boilerplate(spark):
     so a boilerplate-heavy corpus — every doc ending in the same
     ≥8-token license footer — detonates the footer's run classes into
     C(n_docs, 2) pairs unless ``max_run_freq`` drops them.  The graded
-    entry pins the cap at 16 (queries_ext17, oracle in lockstep);
+    entry pins the cap at 16 (queries/dedup.py, oracle in lockstep);
     reverting that pin, or breaking the cap's left_anti application,
     fails this test immediately instead of surfacing as a ×64
     wall-clock timeout.
@@ -310,10 +310,7 @@ def test_graded_substring_entry_pins_the_cap(spark):
     while every graded SF stays green, since the cap is inert there).
     Asserted on the same boilerplate corpus by calling the graded
     wiring's constants directly."""
-    from rdbms_subsetter_spark.queries_ext17 import (
-        _SUBSTR_MAX_RUN_FREQ,
-        _SQL_SUBSTRING_EXACT,
-    )
+    from rdbms_subsetter_spark.queries.dedup import _SUBSTR_MAX_RUN_FREQ, _SQL_SUBSTRING_EXACT
 
     assert _SUBSTR_MAX_RUN_FREQ is not None and 1 <= _SUBSTR_MAX_RUN_FREQ <= 64
     # the oracle must carry the SAME cap (lockstep contract)
@@ -385,7 +382,7 @@ def test_recall_audit_degenerate_corpus_is_false_not_null(spark):
     pairs and __hits/__pairs is NULL — the audit must emit a
     deterministic FALSE (clear signal) instead of a NULL that would
     surface as an opaque hash mismatch against the oracle's TRUE."""
-    from rdbms_subsetter_spark.queries_ext18 import _recall_audit
+    from rdbms_subsetter_spark.queries.similarity import _recall_audit
 
     emb = spark.createDataFrame(
         [(1, [1.0] * 4), (2, [0.5] * 4)], "vec_id long, embedding array<float>"
@@ -402,10 +399,7 @@ def test_graded_simhash_pairs_entry_pins_the_cap(spark):
     pinned (a revert to None re-opens the quadratic bucket path while
     every graded SF stays green, since the cap is inert there) and the
     oracle must carry the SAME cap (lockstep contract)."""
-    from rdbms_subsetter_spark.queries_ext19 import (
-        _SIMHASH_MAX_BUCKET_FREQ,
-        _simhash_pairs_oracle,
-    )
+    from rdbms_subsetter_spark.queries.dedup import _SIMHASH_MAX_BUCKET_FREQ, _simhash_pairs_oracle
 
     assert _SIMHASH_MAX_BUCKET_FREQ is not None and 1 <= _SIMHASH_MAX_BUCKET_FREQ <= 64
     assert f"df <= {_SIMHASH_MAX_BUCKET_FREQ}" in _simhash_pairs_oracle(64)
@@ -453,7 +447,6 @@ def test_containment_cap_drops_universal_boilerplate(spark):
     assert all(p == (1, 2) or 1 in p or 2 in p for p in got)
 
     # graded wiring pins the cap: oracle text carries the capped CTE
-    from rdbms_subsetter_spark.queries_ext import NGRAM_MAX_DOC_FREQ
-    from rdbms_subsetter_spark.queries_ext12 import _containment_cte
+    from rdbms_subsetter_spark.queries.dedup import NGRAM_MAX_DOC_FREQ, _containment_cte
 
     assert f"count(*) <= {NGRAM_MAX_DOC_FREQ}" in _containment_cte()

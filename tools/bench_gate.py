@@ -268,13 +268,15 @@ def _normalized_ratios(
     return {n: r / div for n, r in raw.items()}, host
 
 
-def _prev_committed_detail(current_queries: dict) -> dict:
+def _prev_committed_detail(current: dict) -> dict:
     """Timings of the most recent COMMITTED bench run that differs from
-    the current BENCH_DETAIL.json — the other half of the
+    the current BENCH_DETAIL.json (``current``) — the other half of the
     consecutive-breach tripwire.  Walks commits of BENCH_DETAIL.json
-    newest-first and returns the first same-sf run whose `queries` map
-    is not identical to the current one (the current detail may or may
-    not be committed yet).  Empty dict when there is none."""
+    newest-first and returns the first run at the current run's sf whose
+    `queries` map is not identical to the current one (the current
+    detail may or may not be committed yet).  Empty dict when there is
+    none."""
+    current_queries = current.get("queries", {})
     try:
         commits = _git(
             "log", "--format=%H", "--", "BENCH_DETAIL.json"
@@ -287,7 +289,7 @@ def _prev_committed_detail(current_queries: dict) -> dict:
         except (subprocess.CalledProcessError, json.JSONDecodeError):
             continue
         qs = blob.get("queries", {})
-        if blob.get("sf") == 0.1 and qs and qs != current_queries:
+        if blob.get("sf") == current.get("sf") and qs and qs != current_queries:
             return qs
     return {}
 
@@ -328,7 +330,7 @@ def check(warn: float, gate: float, ceiling: float, tripwire: float = 1.5) -> in
     # real sub-ceiling regression could hide behind ambient
     # classification forever.
     prev_norm, _ = _normalized_ratios(
-        _prev_committed_detail(detail.get("queries", {})), hist
+        _prev_committed_detail(detail), hist
     )
     trip_prev = {n for n, r in prev_norm.items() if r > tripwire}
     print(

@@ -1,5 +1,6 @@
-"""Independent derivations of the literal-fixture oracle values in
-``queries_ext14`` (graph_pagerank_fixture, dedup_semdedup_fixture).
+"""Independent derivations of the literal-fixture oracle values of
+graph_pagerank_fixture (``rdbms_subsetter_spark.queries.similarity``)
+and dedup_semdedup_fixture (``rdbms_subsetter_spark.queries.dedup``).
 
 Run ``python tools/fixture_expectations.py`` to re-derive and print the
 expected tables; neither derivation touches the Spark operators, so the
@@ -21,7 +22,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 
 def pagerank_expect() -> list[tuple[int, float]]:
-    from rdbms_subsetter_spark.queries_ext14 import _PR_EDGES
+    from rdbms_subsetter_spark.queries.similarity import _PR_EDGES
 
     n = 5
     A = np.zeros((n, n))
@@ -43,7 +44,7 @@ def pagerank_expect() -> list[tuple[int, float]]:
 
 def semdedup_expect() -> list[tuple[int, int, int]]:
     from rdbms_subsetter_spark.operators.similarity import _lloyd_kmeans
-    from rdbms_subsetter_spark.queries_ext14 import _SD_VECS
+    from rdbms_subsetter_spark.queries.dedup import _SD_VECS
 
     ids = np.array([i for i, _ in _SD_VECS])
     mat = np.array([v for _, v in _SD_VECS], dtype=np.float64)
@@ -78,7 +79,7 @@ def ivf_expect() -> list[tuple[int, int, float, int]]:
     float32-truncated unit vectors scored with a strict left-to-right
     float64 fold — the same IEEE operation sequence as the operator's
     ``dot`` column, so agreement is bit-exact, not approximate."""
-    from rdbms_subsetter_spark.queries_ext14 import _SD_VECS
+    from rdbms_subsetter_spark.queries.dedup import _SD_VECS
 
     ids = [i for i, _ in _SD_VECS]
     mat = np.array([v for _, v in _SD_VECS], dtype=np.float64)
@@ -117,7 +118,7 @@ def srp_expect(n_planes: int = 3, k: int = 2) -> list[tuple[int, int, float, int
     agreement is bit-exact."""
     import hashlib
 
-    from rdbms_subsetter_spark.queries_ext14 import _SD_VECS
+    from rdbms_subsetter_spark.queries.dedup import _SD_VECS
 
     dim = 4
     seed = 42
@@ -176,7 +177,7 @@ def pca_expect() -> list[tuple[int, int, float, float, float, float]]:
     largest-|component|-positive sign rule, and the left-fold projection
     of the mean-centered vectors — identical IEEE sequences, so the
     4 dp / 6 dp roundings agree bit-exactly with the operator."""
-    from rdbms_subsetter_spark.queries_ext14 import _SD_VECS
+    from rdbms_subsetter_spark.queries.dedup import _SD_VECS
 
     ids = [i for i, _ in _SD_VECS]
     mat = np.array([v for _, v in _SD_VECS], dtype=np.float32).astype(np.float64)

@@ -55,7 +55,7 @@ QUERIES = [
     "dedup_minhash_cross_corpus",
     "agg_approx_top_k",
     # dedup_ngram_jaccard_uncapped retired in r8 (it was THE measured
-    # superlinear control, 15.5x at x8; see queries_ext16.py note)
+    # superlinear control, 15.5x at x8)
     "dedup_cc_clusters_minlabel",
     "dedup_embedding_cosine",
     "graph_pagerank",
@@ -632,7 +632,7 @@ def zipf_stress(spark, n_copies: int = 8, base_docs: int = 5000) -> None:
 
     from rdbms_subsetter_spark.catalog import Catalog
     from rdbms_subsetter_spark.operators.dedup import ngram_jaccard_pairs, shingles
-    from rdbms_subsetter_spark.queries_ext import NGRAM_MAX_DOC_FREQ
+    from rdbms_subsetter_spark.queries.dedup import NGRAM_MAX_DOC_FREQ
 
     dirs = {}
     for n in (base_docs, base_docs * n_copies):

@@ -2,19 +2,19 @@
 battery entry's oracle SQL text.
 
 tests/test_registration.py compares the live ``oracle_sql()`` map
-against this manifest: an entry whose oracle text changed WITHOUT the
-entry listing itself in ``__spark_entry__._REGRADE_THIS_ROUND`` fails
-CI.  That codifies the round-7 grading-order contract (a semantics
-flip must re-grade inside the round's window — a stale verdict on
-changed semantics is debt, not coverage) as a mechanical check instead
-of a convention.
+against this manifest, so an oracle text change fails CI until the
+manifest is regenerated.  That codifies the grading-order contract (a
+semantics flip must re-grade inside the next window — a stale verdict
+on changed semantics is debt, not coverage) as a mechanical check
+instead of a convention.
 
 Run after ANY intentional oracle change:
 
     python tools/update_oracle_manifest.py
 
 then, if the change altered the entry's SEMANTICS (not just
-formatting), also add the entry name to ``_REGRADE_THIS_ROUND``.
+formatting), also move the entry to the front of
+``rdbms_subsetter_spark.queries.GRADING_ORDER``.
 """
 
 from __future__ import annotations
