@@ -130,21 +130,3 @@ def limit_blas_threads(n: int = 1) -> None:
                 fn(ctypes.c_int(n))
                 break
     _LIMITED_TO = n
-
-
-def get_openblas_threads() -> int | None:
-    """Current OpenBLAS pool size, or None if no OpenBLAS is loaded.
-
-    Test/diagnostic surface for the cap above.
-    """
-    for path in _openblas_candidates():
-        try:
-            dll = ctypes.CDLL(path)
-        except OSError:
-            continue
-        for sym in ("openblas_get_num_threads64_", "openblas_get_num_threads"):
-            fn = getattr(dll, sym, None)
-            if fn is not None:
-                fn.restype = ctypes.c_int
-                return int(fn())
-    return None

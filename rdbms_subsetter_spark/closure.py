@@ -348,6 +348,7 @@ class ClosureEngine:
         keys = dict(keys)
         reg = self.registry
         edges = edges if edges is not None else list(reg.fks)
+        pulled: list[str] = []  # lazily checkpointed (materialize_keys mode)
         for fk in edges:
             if fk.ref_table not in keys or fk.table in exclude:
                 continue
@@ -374,9 +375,15 @@ class ClosureEngine:
             if self.materialize_keys:
                 # the window top-k subtree is the most expensive key
                 # plan in the pipeline; at scale it must run once, not
-                # once per downstream FK edge/count branch.  Lazy: the
-                # re-close's emit() is the first consumer.
+                # once per downstream FK edge/count branch.
                 keys[fk.table] = keys[fk.table].localCheckpoint(eager=False)
+                pulled.append(fk.table)
+        if pulled:
+            # forced here rather than by the first consumer: a pulled
+            # set that gains no contribution in the re-close never
+            # reaches close_parents' wave pass, so a lazy checkpoint
+            # could first materialize inside a broadcast build
+            self._force_in_waves(keys, list(dict.fromkeys(pulled)))
         return keys
 
     # ------------------------------------------------------------------

@@ -138,6 +138,20 @@ def _scan_task_estimate(docs: DataFrame) -> int | None:
     return max(1, -(-total // max(1, split)))
 
 
+def _drop_hot_keys(rows: DataFrame, keys: list[str], max_freq: int) -> DataFrame:
+    """``rows`` without the key groups holding more than ``max_freq``
+    rows — the df-cap skew valve of the simhash and substring candidate
+    stages, applied as a left anti-join against the broadcast hot-key
+    set."""
+    hot = (
+        rows.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("df"))
+        .filter(F.col("df") > max_freq)
+        .select(*keys)
+    )
+    return rows.join(F.broadcast(hot), on=keys, how="left_anti")
+
+
 def _shingle_rows(docs: DataFrame, n: int = 3, hashed: bool = False) -> DataFrame:
     """Pre-``distinct`` shingle rows — :func:`shingles` without the
     per-(doc, shingle) dedup, for consumers whose aggregation dedups
@@ -182,10 +196,10 @@ def shingles(docs: DataFrame, n: int = 3, hashed: bool = False) -> DataFrame:
 def _capped_posting_lists(
     docs: DataFrame, n: int, max_doc_freq: int
 ) -> tuple[DataFrame, DataFrame]:
-    """``(cold pair rows, capped posting lists)`` for the grouped
-    inverted-index paths: distinct ``(doc_id, shingle)`` rows whose
-    shingle df ≤ ``max_doc_freq``, and the per-shingle sorted doc
-    arrays built from them.
+    """``(shared, sizes)`` for the grouped inverted-index paths:
+    ``shared`` counts the cold shingles each doc pair has in common
+    (``doc_id_1 < doc_id_2``), ``sizes`` each doc's cold shingle count,
+    where a cold shingle has df ≤ ``max_doc_freq``.
 
     Built with BOUNDED per-key aggregation state (r12, ADVICE r11):
     the r11 shape ran ``collect_set(doc_id)`` over every shingle and
@@ -206,8 +220,16 @@ def _capped_posting_lists(
     the groupBy's exchange; measured +0.2 s at sf0.1 for the
     spill-safety — the checkpoint/broadcast-anti-join alternative
     measured +2.6 s), identical results (df-filter-before ≡
-    size-filter-after on distinct rows; set-equality asserted in
-    tests/test_round12_property.py)."""
+    size-filter-after on distinct rows; asserted against a python
+    brute force in tests/test_round12_property.py).
+
+    The candidate pairs come from a per-row array expression over each
+    sorted posting list instead of a self-join (r11, guide §2.3
+    "aggregate before you shuffle" / §2.4): pair volume is the same
+    Σ C(df, 2), and the per-row pair array is bounded by C(cap, 2)
+    (16 → ≤120 structs), so the map-side expansion can never blow up —
+    which is exactly why this path requires the cap (an uncapped hot
+    shingle would materialize C(df, 2) structs in one row)."""
     from pyspark.sql import Window
 
     rows = _shingle_rows(docs, n, hashed=True).repartition("shingle")
@@ -219,7 +241,57 @@ def _capped_posting_lists(
     grouped = cold.groupBy("shingle").agg(
         F.array_sort(F.collect_list("doc_id")).alias("ds")
     )
-    return cold, grouped
+    sizes = cold.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
+    pair_expr = (
+        "flatten(transform(ds, (x, i) -> "
+        "transform(slice(ds, i + 2, size(ds) - i - 1), "
+        "y -> struct(x AS doc_id_1, y AS doc_id_2))))"
+    )
+    shared = (
+        grouped.select(F.explode(F.expr(pair_expr)).alias("p"))
+        .select("p.doc_id_1", "p.doc_id_2")
+        .groupBy("doc_id_1", "doc_id_2")
+        .agg(F.count(F.lit(1)).alias("shared"))
+    )
+    return shared, sizes
+
+
+def _shared_shingle_counts(
+    docs: DataFrame, n: int, max_doc_freq: int | None
+) -> tuple[DataFrame, DataFrame]:
+    """``(shared, sizes)``: shared hashed-shingle counts per candidate
+    pair ``doc_id_1 < doc_id_2`` and per-doc shingle counts — the
+    direction-free stage both n-gram pair operators build on.  With a
+    cap, the grouped posting lists of :func:`_capped_posting_lists`;
+    without one, the inverted-index self-join on equal shingle."""
+    if max_doc_freq is not None:
+        return _capped_posting_lists(docs, n, max_doc_freq)
+    # the shingle set feeds THREE consumers (sizes + both self-join
+    # sides): materialize once instead of recomputing normalize+md5+
+    # explode per consumer (measured 2.07→1.73 s at sf0.1).  On a
+    # memory-constrained cluster swap for persist(DISK_ONLY) — the
+    # exploded set is ~tokens×n the corpus size.
+    sh = shingles(docs, n, hashed=True).localCheckpoint(eager=True)
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
+    a = sh.select(F.col("doc_id").alias("doc_id_1"), "shingle")
+    b = sh.select(F.col("doc_id").alias("doc_id_2"), "shingle")
+    shared = (
+        a.join(b, on="shingle")
+        .filter(F.col("doc_id_1") < F.col("doc_id_2"))
+        .groupBy("doc_id_1", "doc_id_2")
+        .agg(F.count(F.lit(1)).alias("shared"))
+    )
+    return shared, sizes
+
+
+def _join_sizes(shared: DataFrame, sizes: DataFrame) -> DataFrame:
+    """``shared`` with each side's shingle count attached as ``n1`` and
+    ``n2``."""
+    return shared.join(
+        sizes.withColumnsRenamed({"doc_id": "doc_id_1", "n_sh": "n1"}), on="doc_id_1"
+    ).join(
+        sizes.withColumnsRenamed({"doc_id": "doc_id_2", "n_sh": "n2"}), on="doc_id_2"
+    )
 
 
 def ngram_jaccard_pairs(
@@ -227,144 +299,25 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.8,
     max_doc_freq: int | None = None,
-    prefix_filter: bool = False,
 ) -> DataFrame:
     """Near-duplicate pairs by n-gram Jaccard ≥ threshold.
 
-    Inverted-index self-join: explode shingles, join on equal shingle
-    with ``doc_id_1 < doc_id_2``, count shared shingles, then
-    ``J = shared / (|A| + |B| - shared)``.  ``max_doc_freq`` drops
-    ultra-common shingles before the join (skew control at scale).
+    Inverted index over hashed shingles: count the shingles each pair
+    ``doc_id_1 < doc_id_2`` shares, then
+    ``J = shared / (|A| + |B| - shared)``, rounded to 6 places BEFORE
+    the threshold filter (the graded oracle's order).
 
-    ``prefix_filter=True`` switches candidate generation to AllPairs
-    prefix filtering (Bayardo et al., WWW'07 "Scaling Up All Pairs
-    Similarity Search"): shingles are globally ordered rarest-first
-    (ascending df, shingle hash as total-order tiebreak) and only each
-    doc's first ``|d| - ⌈θ·|d|⌉ + 1`` shingles enter the candidate
-    join — if two docs share NO prefix shingle, their overlap is
-    confined to suffixes smaller than the ⌈θ·|d|⌉ overlap J ≥ θ
-    requires, so no qualifying pair is missed (result-identical to the
-    full join; property-asserted in tests).  Candidates are then
-    verified with the exact Jaccard over the full shingle relation,
-    bounded by the candidate list.  Round-6 measured this LOSING on
-    flat-df corpora (the prefix barely shrinks when every df is
-    equal); it is kept as an explicit opt-in for Zipf-skewed corpora,
-    re-measured by ``tools/scale_stress.py --zipf``.
+    ``max_doc_freq`` drops ultra-common shingles (df above the cap)
+    before any pair is formed — the skew control at scale — and
+    switches candidate generation to the grouped posting lists of
+    :func:`_capped_posting_lists`.  With ``None`` the candidates come
+    from the exact self-join on equal shingle.  AllPairs prefix
+    filtering is deliberately not offered: it lost to the df cap on
+    both the flat-df and the Zipf corpora measured in SCALE.md.
     """
-    if max_doc_freq is not None and not prefix_filter:
-        # Grouped inverted-index path (r11, guide §2.3 "aggregate
-        # before you shuffle" / §2.4): ONE groupBy(shingle) builds the
-        # capped posting lists directly — `collect_set` dedups
-        # per-(doc, shingle), `size(ds) <= cap` IS the df cap, and the
-        # candidate pairs come from a per-row array expression over the
-        # sorted posting list instead of the self-join.  This replaces
-        # the exploded relation's distinct exchange + both self-join
-        # exchanges with a single shingle-keyed exchange; pair volume
-        # is the same Σ C(df, 2), and the per-row pair array is bounded
-        # by C(cap, 2) (16 → ≤120 structs), so the map-side expansion
-        # can never blow up — which is exactly why this path requires
-        # the cap and the uncapped/prefix-filter paths keep the join
-        # (an uncapped hot shingle would materialize C(df, 2) structs
-        # in one row).  Results identical (set-equality asserted in
-        # tests and vs the oracle).
-        cold, grouped = _capped_posting_lists(docs, n, max_doc_freq)
-        sizes = cold.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-        pair_expr = (
-            "flatten(transform(ds, (x, i) -> "
-            "transform(slice(ds, i + 2, size(ds) - i - 1), "
-            "y -> struct(x AS doc_id_1, y AS doc_id_2))))"
-        )
-        shared = (
-            grouped.select(F.explode(F.expr(pair_expr)).alias("p"))
-            .select("p.doc_id_1", "p.doc_id_2")
-            .groupBy("doc_id_1", "doc_id_2")
-            .agg(F.count(F.lit(1)).alias("shared"))
-        )
-        return (
-            shared.join(
-                sizes.withColumnsRenamed({"doc_id": "doc_id_1", "n_sh": "n1"}),
-                on="doc_id_1",
-            )
-            .join(
-                sizes.withColumnsRenamed({"doc_id": "doc_id_2", "n_sh": "n2"}),
-                on="doc_id_2",
-            )
-            .withColumn(
-                "jaccard",
-                F.round(
-                    F.col("shared") / (F.col("n1") + F.col("n2") - F.col("shared")), 6
-                ),
-            )
-            .filter(F.col("jaccard") >= threshold)
-            .select("doc_id_1", "doc_id_2", "jaccard")
-        )
-    sh = shingles(docs, n, hashed=True)
-    if max_doc_freq is not None:
-        hot = (
-            sh.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > max_doc_freq)
-            .select("shingle")
-        )
-        sh = sh.join(F.broadcast(hot), on="shingle", how="left_anti")
-    # the shingle set feeds THREE consumers (sizes + both self-join
-    # sides): materialize once instead of recomputing normalize+md5+
-    # explode per consumer (measured 2.07→1.73 s at sf0.1).  On a
-    # memory-constrained cluster swap for persist(DISK_ONLY) — the
-    # exploded set is ~tokens×n the corpus size.
-    sh = sh.localCheckpoint(eager=True)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    if prefix_filter:
-        from pyspark.sql import Window
-
-        dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-        pos_w = Window.partitionBy("doc_id").orderBy("df", "shingle")
-        ranked = (
-            sh.join(dfreq, on="shingle")
-            .withColumn("pos", F.row_number().over(pos_w))
-            .join(sizes, on="doc_id")
-        )
-        # the required overlap is ⌈θ·n⌉ in EXACT arithmetic; IEEE
-        # multiplication can land just above an exact integer
-        # (0.55 × 100 = 55.000000000000007 → ceil 56), which would make
-        # the prefix one shingle SHORTER than the lossless bound and
-        # silently drop qualifying pairs.  Subtracting 1e-9 before ceil
-        # absorbs that representation error (thresholds are human-typed
-        # decimals, never within 1e-9 above an integer by intent);
-        # fuzz-asserted at θ=0.55 over ~100-shingle docs in
-        # tests/test_round8_property.py.
-        min_overlap = F.ceil(F.lit(threshold) * F.col("n_sh") - F.lit(1e-9))
-        prefix = ranked.filter(
-            F.col("pos") <= F.col("n_sh") - min_overlap + 1
-        ).select("doc_id", "shingle")
-        pa = prefix.select(F.col("doc_id").alias("doc_id_1"), "shingle")
-        pb = prefix.select(F.col("doc_id").alias("doc_id_2"), "shingle")
-        cand = (
-            pa.join(pb, on="shingle")
-            .filter(F.col("doc_id_1") < F.col("doc_id_2"))
-            .select("doc_id_1", "doc_id_2")
-            .distinct()
-        )
-        s1 = sh.select(F.col("doc_id").alias("doc_id_1"), "shingle")
-        s2 = sh.select(F.col("doc_id").alias("doc_id_2"), "shingle")
-        shared = (
-            cand.join(s1, on="doc_id_1")
-            .join(s2, on=["doc_id_2", "shingle"])
-            .groupBy("doc_id_1", "doc_id_2")
-            .agg(F.count(F.lit(1)).alias("shared"))
-        )
-    else:
-        a = sh.select(F.col("doc_id").alias("doc_id_1"), "shingle")
-        b = sh.select(F.col("doc_id").alias("doc_id_2"), "shingle")
-        shared = (
-            a.join(b, on="shingle")
-            .filter(F.col("doc_id_1") < F.col("doc_id_2"))
-            .groupBy("doc_id_1", "doc_id_2")
-            .agg(F.count(F.lit(1)).alias("shared"))
-        )
-    out = (
-        shared.join(sizes.withColumnsRenamed({"doc_id": "doc_id_1", "n_sh": "n1"}), on="doc_id_1")
-        .join(sizes.withColumnsRenamed({"doc_id": "doc_id_2", "n_sh": "n2"}), on="doc_id_2")
+    shared, sizes = _shared_shingle_counts(docs, n, max_doc_freq)
+    return (
+        _join_sizes(shared, sizes)
         .withColumn(
             "jaccard",
             F.round(F.col("shared") / (F.col("n1") + F.col("n2") - F.col("shared")), 6),
@@ -372,7 +325,6 @@ def ngram_jaccard_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("doc_id_1", "doc_id_2", "jaccard")
     )
-    return out
 
 
 def winnow_fingerprints(docs: DataFrame, n: int = 3, k: int = 4) -> DataFrame:
@@ -463,11 +415,11 @@ def minhash_signatures(
 
 def _minhash_shared_rels(
     docs: DataFrame, num_hashes: int, n: int, checkpoint_sig: bool = False
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """The three relations every minhash LSH pipeline consumes —
-    ``(raw shingle stream, signatures, distinct shingle relation)`` —
-    derived from ONE normalize+tokenize+explode scan (r12, VERDICT r11
-    task 1; guide §2.4 remove duplicate subtree work).
+) -> tuple[DataFrame, DataFrame]:
+    """The two relations every minhash LSH pipeline consumes —
+    ``(signatures, distinct shingle relation)`` — derived from ONE
+    normalize+tokenize+explode scan (r12, VERDICT r11 task 1; guide
+    §2.4 remove duplicate subtree work).
 
     The r11 shape derived the shingle stream TWICE per query: once for
     the checkpointed distinct verify relation and once (non-distinct)
@@ -490,7 +442,7 @@ def _minhash_shared_rels(
     if checkpoint_sig:
         sig = sig.localCheckpoint(eager=True)
     sh = raw.distinct()
-    return raw, sig, sh
+    return sig, sh
 
 
 def _band_rows(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
@@ -553,7 +505,7 @@ def minhash_cross_corpus_pairs(
     assert num_hashes % bands == 0
     r = num_hashes // bands
     is_eval = F.col("doc_id") % eval_mod == 0
-    _, sig, sh = _minhash_shared_rels(docs, num_hashes, n, checkpoint_sig=True)
+    sig, sh = _minhash_shared_rels(docs, num_hashes, n, checkpoint_sig=True)
     band_rows = _band_rows(sig, num_hashes, bands)
     key = ["band"] + [f"b{j}" for j in range(r)]
     train = band_rows.filter(~is_eval).withColumnRenamed("doc_id", "train_doc_id")
@@ -563,28 +515,7 @@ def minhash_cross_corpus_pairs(
         .select("train_doc_id", "eval_doc_id")
         .distinct()
     )
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    s1 = sh.select(F.col("doc_id").alias("train_doc_id"), "shingle")
-    s2 = sh.select(F.col("doc_id").alias("eval_doc_id"), "shingle")
-    shared = (
-        cand.join(s1, on="train_doc_id")
-        .join(s2, on=["eval_doc_id", "shingle"])
-        .groupBy("train_doc_id", "eval_doc_id")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    jac = F.col("shared") / (F.col("n1") + F.col("n2") - F.col("shared"))
-    return (
-        shared.join(
-            sizes.select(F.col("doc_id").alias("train_doc_id"), F.col("n_sh").alias("n1")),
-            on="train_doc_id",
-        )
-        .join(
-            sizes.select(F.col("doc_id").alias("eval_doc_id"), F.col("n_sh").alias("n2")),
-            on="eval_doc_id",
-        )
-        .filter(jac >= threshold)
-        .select("train_doc_id", "eval_doc_id", F.round(jac, 6).alias("jaccard"))
-    )
+    return _exact_jaccard_verify(cand, sh, "train_doc_id", "eval_doc_id", threshold)
 
 
 def minhash_lsh_pairs(
@@ -615,7 +546,7 @@ def minhash_lsh_pairs(
     """
     assert num_hashes % bands == 0
     r = num_hashes // bands
-    _, sig, sh = _minhash_shared_rels(docs, num_hashes, n)
+    sig, sh = _minhash_shared_rels(docs, num_hashes, n)
     band_rows = _band_rows(sig, num_hashes, bands)
     key = ["band"] + [f"b{j}" for j in range(r)]
     a = band_rows.select(F.col("doc_id").alias("doc_id_1"), *key)
@@ -626,70 +557,47 @@ def minhash_lsh_pairs(
         .select("doc_id_1", "doc_id_2")
         .distinct()
     )
-    # exact-Jaccard verify over the SAME checkpointed shingle relation,
-    # bounded by the candidate list (each candidate pair expands by its
-    # |A| shingles, then equi-joins the other side's shingles)
+    return _exact_jaccard_verify(cand, sh, "doc_id_1", "doc_id_2", threshold)
+
+
+def _exact_jaccard_verify(
+    cand: DataFrame, sh: DataFrame, left: str, right: str, threshold: float
+) -> DataFrame:
+    """Exact-Jaccard verify stage shared by the minhash LSH operators:
+    ``(left, right, jaccard)`` for each candidate id pair whose TRUE
+    shingle-set Jaccard over ``sh`` (distinct ``(doc_id, shingle)``) is
+    ≥ ``threshold``.  Bounded by the candidate list: each candidate
+    pair expands by its left doc's shingles, then equi-joins the other
+    side's.  The threshold filters the UNROUNDED ratio and the reported
+    value is rounded after — unlike ``ngram_jaccard_pairs``, which
+    rounds first; each matches its own oracle."""
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    s1 = sh.select(F.col("doc_id").alias("doc_id_1"), "shingle")
-    s2 = sh.select(F.col("doc_id").alias("doc_id_2"), "shingle")
+    s1 = sh.select(F.col("doc_id").alias(left), "shingle")
+    s2 = sh.select(F.col("doc_id").alias(right), "shingle")
     shared = (
-        cand.join(s1, on="doc_id_1")
-        .join(s2, on=["doc_id_2", "shingle"])
-        .groupBy("doc_id_1", "doc_id_2")
+        cand.join(s1, on=left)
+        .join(s2, on=[right, "shingle"])
+        .groupBy(left, right)
         .agg(F.count(F.lit(1)).alias("shared"))
     )
     jac = F.col("shared") / (F.col("n1") + F.col("n2") - F.col("shared"))
     return (
         shared.join(
-            sizes.select(F.col("doc_id").alias("doc_id_1"), F.col("n_sh").alias("n1")),
-            on="doc_id_1",
+            sizes.select(F.col("doc_id").alias(left), F.col("n_sh").alias("n1")),
+            on=left,
         )
         .join(
-            sizes.select(F.col("doc_id").alias("doc_id_2"), F.col("n_sh").alias("n2")),
-            on="doc_id_2",
+            sizes.select(F.col("doc_id").alias(right), F.col("n_sh").alias("n2")),
+            on=right,
         )
         .filter(jac >= threshold)
-        .select("doc_id_1", "doc_id_2", F.round(jac, 6).alias("jaccard"))
+        .select(left, right, F.round(jac, 6).alias("jaccard"))
     )
 
 
 # ---------------------------------------------------------------------------
 # SimHash
 # ---------------------------------------------------------------------------
-
-
-def simhash(docs: DataFrame, bits: int = 64) -> DataFrame:
-    """SimHash per doc as an unsigned decimal(38,0) value.
-
-    Per bit b: sign of Σ_tokens (±1 if bit b of hash(token) set) —
-    the exact per-bit rule of :func:`_simhash_sig`, which builds the
-    whole signature in ONE long.  The decimal value is the unsigned
-    reinterpretation of that long: for bits < 64 the long is
-    non-negative and casts exactly; at bits = 64 a set bit 63 makes
-    the long negative, so 2⁶⁴ is added back (r12 — the previous wide
-    form summed ``lit(2**b)`` literals per bit, and ``2**63`` does not
-    fit a 64-bit literal: ANSI overflow at bits=64, VERDICT r11 item
-    5).  Values are identical to the old form wherever the old form
-    was defined (property-asserted vs an independent per-bit sum in
-    tests/test_round12_property.py, now including bits=64).
-    """
-    sig = _simhash_sig(docs, bits)
-    return sig.select(
-        "doc_id", _unsigned_decimal(F.col("sig")).alias("simhash")
-    )
-
-
-def _unsigned_decimal(sig) -> "F.Column":
-    """Unsigned reinterpretation of a 64-bit long as decimal(38,0):
-    negative longs (bit 63 set) get 2⁶⁴ added back.  (With the 60-bit
-    portable hash no simhash bit above 59 can actually be set, so the
-    negative branch is defensive — but it is exactly the branch whose
-    old ``lit(2**63)`` form could not even be constructed.)"""
-    two64 = F.expr("CAST('18446744073709551616' AS DECIMAL(38,0))")
-    dec = sig.cast("decimal(38,0)") + F.when(sig < 0, two64).otherwise(
-        F.lit(0).cast("decimal(38,0)")
-    )
-    return dec.cast("decimal(38,0)")
 
 
 def simhash_pairs(
@@ -743,7 +651,9 @@ def simhash_pairs(
 def _simhash_sig(docs: DataFrame, bits: int = 64) -> DataFrame:
     """``(doc_id, sig)``: the whole simhash packed into ONE long —
     bit b of ``sig`` is set iff Σ_tokens(±1 for bit b of the token
-    hash) is positive, the exact per-bit rule of :func:`simhash_bits`.
+    hash) is positive (every token occurrence counts).  The one simhash
+    signature form: ``dedup_simhash`` renders it as a bit string and
+    :func:`simhash_pairs` blocks and verifies on it.
 
     Built LONG-form (r11): per token, one ``transform`` emits the
     ``bits`` signed contributions, ``posexplode`` keys them by bit, and
@@ -781,12 +691,7 @@ def _simhash_sig(docs: DataFrame, bits: int = 64) -> DataFrame:
     )
 
 
-def _simhash_chunks(
-    docs: DataFrame,
-    bits: int = 64,
-    _bits_df: DataFrame | None = None,
-    _sig_df: DataFrame | None = None,
-) -> DataFrame:
+def _simhash_chunks(docs: DataFrame, bits: int = 64) -> DataFrame:
     """``(doc_id, sig, c0..c3)``: the packed signature plus its 4 chunk
     values of ``bits/4`` bits each (chunk c covers bits [c·w, (c+1)·w),
     bit j worth 2^j) — the narrow carrier both pair stages consume.
@@ -797,20 +702,7 @@ def _simhash_chunks(
     chunks = 4
     width = bits // chunks
     mask = (1 << width) - 1
-    if _bits_df is not None:
-        base = _bits_df.select(
-            "doc_id",
-            F.expr(
-                " + ".join(
-                    f"CASE WHEN bit{b} = 1 THEN shiftleft(CAST(1 AS BIGINT), {b})"
-                    f" ELSE CAST(0 AS BIGINT) END"
-                    for b in range(bits)
-                )
-            ).alias("sig"),
-        )
-    else:
-        base = _sig_df if _sig_df is not None else _simhash_sig(docs, bits)
-    return base.select(
+    return _simhash_sig(docs, bits).select(
         "doc_id",
         "sig",
         *[
@@ -824,7 +716,6 @@ def simhash_candidates(
     docs: DataFrame,
     bits: int = 64,
     max_bucket_freq: int | None = None,
-    _bits_df: DataFrame | None = None,
     _chunks_df: DataFrame | None = None,
 ) -> DataFrame:
     """Candidate stage of :func:`simhash_pairs`, exposed so the CI
@@ -832,18 +723,14 @@ def simhash_candidates(
     quantity the operator shuffles: distinct cross-doc pairs sharing a
     16-bit signature chunk, volume Σ_{(chunk, value)} C(df, 2).
 
-    ``_bits_df`` lets a caller reuse an already-built bit table instead
-    of re-aggregating the token stream; ``_chunks_df`` the packed chunk
+    ``_chunks_df`` lets a caller reuse an already-built packed chunk
     table (:func:`_simhash_chunks` — what :func:`simhash_pairs` passes,
-    checkpointed).  The long-form (doc_id, chunk, cv) rows come from ONE
-    ``explode`` over a 4-struct array instead of the pre-r11 4-branch
-    union, which replayed the aggregation subtree per branch (guide
-    §2.4: remove duplicate subtree work)."""
-    packed = (
-        _chunks_df
-        if _chunks_df is not None
-        else _simhash_chunks(docs, bits, _bits_df=_bits_df)
-    )
+    checkpointed) instead of re-aggregating the token stream.  The
+    long-form (doc_id, chunk, cv) rows come from ONE ``explode`` over a
+    4-struct array instead of the pre-r11 4-branch union, which
+    replayed the aggregation subtree per branch (guide §2.4: remove
+    duplicate subtree work)."""
+    packed = _chunks_df if _chunks_df is not None else _simhash_chunks(docs, bits)
     chunks = 4
     rows = packed.select(
         "doc_id",
@@ -857,13 +744,7 @@ def simhash_candidates(
         ).alias("s"),
     ).select("doc_id", F.col("s.chunk").alias("chunk"), F.col("s.cv").alias("cv"))
     if max_bucket_freq is not None:
-        hot = (
-            rows.groupBy("chunk", "cv")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > max_bucket_freq)
-            .select("chunk", "cv")
-        )
-        rows = rows.join(F.broadcast(hot), on=["chunk", "cv"], how="left_anti")
+        rows = _drop_hot_keys(rows, ["chunk", "cv"], max_bucket_freq)
     a = rows.select(F.col("doc_id").alias("doc_id_1"), "chunk", "cv")
     b = rows.select(F.col("doc_id").alias("doc_id_2"), "chunk", "cv")
     return (
@@ -874,53 +755,12 @@ def simhash_candidates(
     )
 
 
-def simhash_bits(docs: DataFrame, bits: int = 64) -> DataFrame:
-    """Per-doc simhash as individual bit columns (compat shim over
-    :func:`_simhash_sig`, r11 — callers wanting the whole signature
-    should prefer the packed long)."""
-    sig = _simhash_sig(docs, bits)
-    return sig.select(
-        "doc_id",
-        *[
-            F.expr(f"CAST(shiftright(sig, {b}) & 1 AS INT)").alias(f"bit{b}")
-            for b in range(bits)
-        ],
-    )
-
-
-def _simhash_bits_wide(docs: DataFrame, bits: int = 64) -> DataFrame:
-    """Pre-r11 wide-aggregation form of :func:`simhash_bits` (one
-    aggregation with ``bits`` conditional sums) — retained for A/B
-    measurement; identical output."""
-    docs = _spread_input(docs)
-    tok = (
-        docs.select("doc_id", F.explode(tokens(normalize(F.col("text")))).alias("tok"))
-        .withColumn("h", _portable_hash(F.col("tok"), 0))
-    )
-    sums = tok.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when(F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-            ).alias(f"s{b}")
-            for b in range(bits)
-        ]
-    )
-    return sums.select(
-        "doc_id",
-        *[
-            F.when(F.col(f"s{b}") > 0, F.lit(1)).otherwise(F.lit(0)).alias(f"bit{b}")
-            for b in range(bits)
-        ],
-    )
-
-
 def connected_components(
     edges: DataFrame,
     left: str = "doc_id_1",
     right: str = "doc_id_2",
     max_iter: int = 20,
     algorithm: str = "minlabel",
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Connected components over an undirected edge list: (node,
     cluster_id = min node id in the component, cluster_size).
@@ -938,7 +778,9 @@ def connected_components(
       et al., "Connected Components in MapReduce and Beyond", SoCC'14)
       — O(log² n) rounds regardless of diameter, the production choice
       for deep graphs (chains of pairwise-similar shingled docs, web
-      link graphs) where diameter-bound propagation stalls.
+      link graphs) where diameter-bound propagation stalls.  Its round
+      shuffles are sized from the edge count (~1M edges per partition,
+      8 to 2048 partitions), not inherited from the session.
 
     Per-round ``localCheckpoint`` cuts lineage growth, the same
     discipline as the FK-closure fixpoint (closure.py) — an iterative
@@ -983,8 +825,8 @@ def connected_components(
         # cluster regardless of graph size; ~1M edge rows per partition
         # keeps tiny graphs at the low fixed cost measured in round 7
         # while a 10B-edge graph gets its full width.  Results are
-        # partitioning-independent; override via ``shuffle_partitions``.
-        n_part = shuffle_partitions or max(8, min(2048, -(-e.count() // 1_000_000)))
+        # partitioning-independent.
+        n_part = max(8, min(2048, -(-e.count() // 1_000_000)))
         with conf_window(
             edges.sparkSession, {"spark.sql.shuffle.partitions": str(n_part)}
         ):
@@ -1165,47 +1007,12 @@ def ngram_containment_pairs(
     low Jaccard but containment ≈ 1), which is the common duplication
     mode in news wires and boilerplate-wrapped pages.
 
-    Same inverted-index scale shape as the Jaccard join (one shingle
-    equi-join, candidates only where a shingle collides); both
-    directions of every unordered candidate pair are derived from the
-    SAME join row, so the asymmetry costs no extra shuffle.
+    Same candidate stage as the Jaccard operator
+    (:func:`_shared_shingle_counts`, capped or not); both directions of
+    every unordered candidate pair are derived from the SAME ``shared``
+    row, so the asymmetry costs no extra shuffle.
     """
-    if max_doc_freq is not None:
-        # grouped inverted-index path — same restructure (and same
-        # cap-bounded per-row pair array) as ngram_jaccard_pairs; the
-        # asymmetry only enters after `shared`, which is direction-free
-        cold, grouped = _capped_posting_lists(docs, n, max_doc_freq)
-        sizes = cold.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-        pair_expr = (
-            "flatten(transform(ds, (x, i) -> "
-            "transform(slice(ds, i + 2, size(ds) - i - 1), "
-            "y -> struct(x AS doc_id_1, y AS doc_id_2))))"
-        )
-        shared = (
-            grouped.select(F.explode(F.expr(pair_expr)).alias("p"))
-            .select("p.doc_id_1", "p.doc_id_2")
-            .groupBy("doc_id_1", "doc_id_2")
-            .agg(F.count(F.lit(1)).alias("shared"))
-        )
-    else:
-        sh = shingles(docs, n, hashed=True).localCheckpoint(eager=True)
-        sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-        a = sh.select(F.col("doc_id").alias("doc_id_1"), "shingle")
-        b = sh.select(F.col("doc_id").alias("doc_id_2"), "shingle")
-        shared = (
-            a.join(b, on="shingle")
-            .filter(F.col("doc_id_1") < F.col("doc_id_2"))
-            .groupBy("doc_id_1", "doc_id_2")
-            .agg(F.count(F.lit(1)).alias("shared"))
-        )
-    both = (
-        shared.join(
-            sizes.withColumnsRenamed({"doc_id": "doc_id_1", "n_sh": "n1"}), on="doc_id_1"
-        )
-        .join(
-            sizes.withColumnsRenamed({"doc_id": "doc_id_2", "n_sh": "n2"}), on="doc_id_2"
-        )
-    )
+    both = _join_sizes(*_shared_shingle_counts(docs, n, max_doc_freq))
     directed = both.select(
         F.explode(
             F.array(
@@ -1317,22 +1124,50 @@ def suffix_run_classes(docs: DataFrame, width: int) -> DataFrame:
     return r
 
 
-def _require_cap_width_alignment(min_len: int, max_run_freq: int | None) -> None:
-    """``max_run_freq`` caps the df of width-w run classes where
-    w = 2^⌊log₂ min_len⌋, while the DuckDB oracles cap the df of exactly
-    min_len-grams; the two coincide only when min_len IS a power of two
-    (w == min_len).  A caller passing e.g. min_len=12 with a cap would
-    get w=8 and could silently drop pairs the oracle keeps (a hot 8-run
-    with a cold 12-gram), breaking the operator/oracle lockstep — so a
-    capped run with a non-power-of-two min_len is refused outright
-    rather than graded divergently (ADVICE r10).  Uncapped runs accept
-    any min_len: candidates are a superset and the verify stage trims."""
-    if max_run_freq is not None and min_len & (min_len - 1):
+def _capped_run_classes(
+    docs: DataFrame, min_len: int, max_run_freq: int | None
+) -> DataFrame:
+    """Distinct ``(doc_id, cls)`` width-w run classes, w = 2^⌊log₂
+    min_len⌋, checkpointed and (with ``max_run_freq``) df-capped — the
+    candidate source both substring operators pair up.
+
+    The checkpoint sits BEFORE the df cap: every consumer (the cap's
+    groupBy, both self-join or split sides) reads the materialized
+    relation instead of replaying the tokenize+hash scan per branch
+    (r11; the baseline plan held 68 parquet scans / 26 SortMergeJoins
+    for the graded entry, and a checkpoint after the cap replayed the
+    whole class build in the hot-class subtree).  The dedup exchange is
+    keyed on cls (a subset of the row), so one hash exchange serves the
+    dedup and every downstream cls-keyed consumer — the df-cap groupBy
+    and the pair join reuse the checkpointed partitioning
+    (localCheckpoint preserves outputPartitioning).
+
+    ``max_run_freq`` caps the df of width-w run classes, while the
+    DuckDB oracles cap the df of exactly min_len-grams; the two
+    coincide only when min_len IS a power of two (w == min_len).  A
+    caller passing e.g. min_len=12 with a cap would get w=8 and could
+    silently drop pairs the oracle keeps (a hot 8-run with a cold
+    12-gram), breaking the operator/oracle lockstep — so a capped run
+    with a non-power-of-two min_len is refused outright rather than
+    graded divergently (ADVICE r10).  Uncapped runs accept any min_len:
+    candidates are a superset and the verify stage trims."""
+    w = 1 << (min_len.bit_length() - 1)  # largest power of two ≤ min_len
+    if max_run_freq is not None and w != min_len:
         raise ValueError(
             f"max_run_freq={max_run_freq} requires min_len to be a power of "
-            f"two (got {min_len}): the df cap acts on width-{1 << (min_len.bit_length() - 1)} "
+            f"two (got {min_len}): the df cap acts on width-{w} "
             "run classes and would diverge from a min_len-gram-granularity oracle"
         )
+    cls = (
+        suffix_run_classes(docs, w)
+        .select("doc_id", "cls")
+        .repartition("cls")
+        .dropDuplicates(["doc_id", "cls"])
+        .localCheckpoint(eager=True)
+    )
+    if max_run_freq is not None:
+        cls = _drop_hot_keys(cls, ["cls"], max_run_freq)
+    return cls
 
 
 def substring_candidates(
@@ -1350,34 +1185,7 @@ def substring_candidates(
     footers) are dropped BEFORE the self-join, exactly like the jaccard
     family's ``max_doc_freq``.  Without it a corpus where every doc
     shares one ≥w-token run goes quadratic in that one class."""
-    _require_cap_width_alignment(min_len, max_run_freq)
-    w = 1 << (min_len.bit_length() - 1)  # largest power of two ≤ min_len
-    # the class relation feeds up to three consumers (df cap + both
-    # self-join sides): materialize it once instead of replaying the
-    # tokenize+hash scan per consumer — the same discipline as the
-    # jaccard family's checkpointed shingle relation and the
-    # cross-corpus variant below (r11; the baseline plan held 68
-    # parquet scans / 26 SortMergeJoins for the graded entry)
-    # dedup keyed on cls (a subset of the row, so one hash exchange on
-    # cls serves both the dedup and every downstream cls-keyed consumer
-    # — the df-cap groupBy and the self-join reuse the checkpointed
-    # partitioning instead of re-exchanging; localCheckpoint preserves
-    # outputPartitioning)
-    cls = (
-        suffix_run_classes(docs, w)
-        .select("doc_id", "cls")
-        .repartition("cls")
-        .dropDuplicates(["doc_id", "cls"])
-        .localCheckpoint(eager=True)
-    )
-    if max_run_freq is not None:
-        hot = (
-            cls.groupBy("cls")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > max_run_freq)
-            .select("cls")
-        )
-        cls = cls.join(F.broadcast(hot), on="cls", how="left_anti")
+    cls = _capped_run_classes(docs, min_len, max_run_freq)
     return (
         cls.select(F.col("doc_id").alias("doc_id_1"), "cls")
         .join(cls.select(F.col("doc_id").alias("doc_id_2"), "cls"), on="cls")
@@ -1527,30 +1335,7 @@ def substring_decontaminate_pairs(
     boilerplate must not pair every train doc with every eval doc),
     then the exact-LCS Arrow verify.  Candidate volume is strictly
     smaller than the within-corpus operator's (cross pairs only)."""
-    _require_cap_width_alignment(min_len, max_run_freq)
-    w = 1 << (min_len.bit_length() - 1)  # largest power of two ≤ min_len
-    # checkpoint BEFORE the df cap and the split: every consumer (the
-    # cap's groupBy, both split sides) reads the materialized relation
-    # instead of replaying the class scan per branch, and keying the
-    # dedup exchange on cls lets the cap groupBy and the cross-split
-    # join reuse the checkpointed partitioning (r11; previously the
-    # checkpoint sat after the cap, so the hot-class subtree replayed
-    # the whole class build)
-    cls = (
-        suffix_run_classes(docs, w)
-        .select("doc_id", "cls")
-        .repartition("cls")
-        .dropDuplicates(["doc_id", "cls"])
-        .localCheckpoint(eager=True)
-    )
-    if max_run_freq is not None:
-        hot = (
-            cls.groupBy("cls")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > max_run_freq)
-            .select("cls")
-        )
-        cls = cls.join(F.broadcast(hot), on="cls", how="left_anti")
+    cls = _capped_run_classes(docs, min_len, max_run_freq)
     is_eval = F.col("doc_id") % eval_mod == 0
     train = cls.filter(~is_eval).withColumnRenamed("doc_id", "train_doc_id")
     ev = cls.filter(is_eval).withColumnRenamed("doc_id", "eval_doc_id")

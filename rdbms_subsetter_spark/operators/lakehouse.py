@@ -107,10 +107,3 @@ def merge_upsert_auto(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     from rdbms_subsetter_spark.queries.sources import merge_partition_pruned_table
 
     return merge_partition_pruned_table(spark, sf_dir), "dynamic-overwrite"
-
-
-def read_merged(spark: SparkSession, path: str, engine: str):
-    """Read the merged table back regardless of engine."""
-    if engine == "delta":
-        return spark.read.format("delta").load(path)
-    return spark.read.parquet(path)

@@ -10,7 +10,9 @@ they are the core of making the same semantics hold at cluster scale:
   tests/test_scale_plans.py).  This is how orders⋈lineitem should be
   laid out for a workload that joins them every run.
 * **partitioned layout** — directory partitioning by a low-cardinality
-  column gives free partition pruning for predicates on that column.
+  column (plain ``DataFrameWriter.partitionBy``) gives free partition
+  pruning for predicates on that column (plan-asserted in
+  tests/test_scale_plans.py).
 * **salting** — a skewed group/window key (one parent with millions of
   children) serializes into one task.  Salted two-phase top-k bounds
   every task at (k × salt) candidate rows per hot key.  AQE's skew-join
@@ -46,12 +48,6 @@ def write_bucketed(
     if sort_cols:
         writer = writer.sortBy(*sort_cols)
     writer.saveAsTable(table)
-
-
-def write_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> None:
-    """Directory-partitioned parquet: predicates on ``partition_cols``
-    prune whole directories before any IO."""
-    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
 
 
 # ---------------------------------------------------------------------------

@@ -739,9 +739,10 @@ FROM lab
 # candidate volume is still Σ(prefix-df)², quadratic in df), so
 # retirement is the only option meeting "no battery entry superlinear
 # at its graded knobs".  The uncapped SEMANTICS remain fully available
-# (`ngram_jaccard_pairs(..., max_doc_freq=None)`), fuzz-covered by
-# tests/test_round7_property.py + test_round8_property.py, and
-# scale-measured as the labelled control row in SCALE.md.
+# (`ngram_jaccard_pairs(..., max_doc_freq=None)`), checked against a
+# python brute force in tests/test_round5_property.py and against the
+# capped path in tests/test_round7_hardening.py, and scale-measured as
+# the labelled control row in SCALE.md.
 
 
 @register("dedup_cc_clusters_minlabel", oracle=_SQL_CC_MINLABEL)

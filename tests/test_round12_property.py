@@ -1,11 +1,10 @@
 """Round-12 optimization hardening: the changed operator internals keep
 their contracts.
 
-* decimal ``simhash`` reimplemented on the packed long — must equal an
-  independent per-bit computation at bits=64 (the configuration whose
-  ``lit(2**63)`` literal overflowed pre-r12) and at a small width.
+* the packed-long simhash signature — must equal an independent
+  per-bit computation at bits=64 and at a small width.
 * ``_capped_posting_lists`` (the bounded-state grouped inverted index)
-  — hot shingles excluded BEFORE any posting list materializes, and the
+  — hot shingles excluded from the shared and size counts, and the
   graded jaccard results match a python brute force on a corpus with a
   hotter-than-cap boilerplate shingle.
 * ``_scan_task_estimate`` (the `.rdd`-free spread gate) — its
@@ -32,45 +31,31 @@ SF_SMALL = "/root/testdata/sf0.001"
 
 
 # ---------------------------------------------------------------------------
-# decimal simhash on the packed long
+# packed-long simhash signature
 # ---------------------------------------------------------------------------
 
 
 @pytest.mark.parametrize("bits", [8, 64])
 def test_simhash_decimal_matches_independent_per_bit_form(spark, bits):
-    """The packed-long decimal form equals Σ 2^b over positive per-bit
-    sums computed by the retained INDEPENDENT wide aggregation
-    (``_simhash_bits_wide``), including bits=64 where the old decimal
-    form's ``lit(2**63)`` overflowed (VERDICT r11 item 5)."""
+    """The packed-long signature ``_simhash_sig`` — the one form every
+    simhash entry reads — equals Σ 2^b over the positive per-bit sums
+    of an independent pure-python per-bit computation, at a small width
+    and at bits=64 (the width whose sign bit the packed long carries)."""
     from rdbms_subsetter_spark.catalog import Catalog
+    from tests.test_round5_property import _py_simhash_per_bit
 
     docs = Catalog(spark, SF_SMALL)["documents"].limit(100)
+    texts = {r["doc_id"]: r["text"] for r in docs.collect()}
     got = {
-        r["doc_id"]: int(r["simhash"])
-        for r in dedup.simhash(docs, bits=bits).collect()
+        r["doc_id"]: r["sig"] % 2**64
+        for r in dedup._simhash_sig(docs, bits=bits).collect()
     }
-    wide = dedup._simhash_bits_wide(docs, bits=bits).collect()
     want = {
-        r["doc_id"]: sum(2**b for b in range(bits) if r[f"bit{b}"] == 1)
-        for r in wide
+        i: sum(2**b for b, bit in enumerate(_py_simhash_per_bit(t, bits)) if bit)
+        for i, t in texts.items()
     }
+    assert len(want) == 100
     assert got == want
-    # the 60-bit portable hash can never set bits >= 60, so the data
-    # path cannot exercise the sign bit; the negative-long branch is
-    # covered directly below
-
-
-def test_unsigned_decimal_covers_the_sign_bit(spark):
-    """The two's-complement correction — the exact spot where the old
-    decimal form overflowed (``lit(2**63)``) — on synthetic longs
-    including the most-negative and -1 (all-bits-set) values."""
-    vals = [0, 1, 2**59, 2**62, -(2**63), -1, -(2**62)]
-    df = spark.createDataFrame([(v,) for v in vals], "sig long")
-    got = [
-        int(r["u"])
-        for r in df.select(dedup._unsigned_decimal(F.col("sig")).alias("u")).collect()
-    ]
-    assert got == [v % 2**64 for v in vals]
 
 
 # ---------------------------------------------------------------------------
@@ -86,25 +71,41 @@ def _mk_docs(spark, texts):
 
 def test_capped_posting_lists_drop_hot_shingles_before_aggregation(spark):
     """A boilerplate shingle present in more than ``cap`` docs must not
-    appear in either returned relation (it is anti-joined away before
-    the list aggregation, so no buffer ever holds its doc set)."""
+    count toward either returned relation (it is filtered out before the
+    posting-list aggregation, so no buffer ever holds its doc set):
+    ``sizes`` and ``shared`` equal a python brute force that drops every
+    hotter-than-cap shingle first, while cold shingles shared by up to
+    ``cap`` docs still pair them."""
     boiler = "common header line here"
-    texts = [f"{boiler} unique tail {i} alpha beta" for i in range(6)]
+    tails = ["alpha beta gamma delta"] * 3 + ["eps zeta eta theta"] * 3
+    texts = [f"{boiler} unique tail {i} {t}" for i, t in enumerate(tails)]
     docs = _mk_docs(spark, texts)
-    cold, grouped = dedup._capped_posting_lists(docs, n=4, max_doc_freq=3)
-    hot_hash_rows = (
-        dedup._shingle_rows(docs, 4, hashed=True)
-        .groupBy("shingle")
-        .agg(F.count_distinct("doc_id").alias("df"))
-        .filter(F.col("df") > 3)
-        .collect()
-    )
-    hot = {r["shingle"] for r in hot_hash_rows}
+    shared, sizes = dedup._capped_posting_lists(docs, n=4, max_doc_freq=3)
+
+    def sh_set(t):
+        toks = t.split()
+        return {" ".join(toks[i : i + 4]) for i in range(len(toks) - 3)}
+
+    sets = {i: sh_set(t) for i, t in enumerate(texts)}
+    df_count: dict[str, int] = {}
+    for s in sets.values():
+        for g in s:
+            df_count[g] = df_count.get(g, 0) + 1
+    hot = {g for g, c in df_count.items() if c > 3}
     assert hot, "fixture must contain a hotter-than-cap shingle"
-    assert not {r["shingle"] for r in cold.select("shingle").distinct().collect()} & hot
-    assert not {r["shingle"] for r in grouped.select("shingle").collect()} & hot
-    for r in grouped.collect():
-        assert len(r["ds"]) <= 3
+    cold = {i: s - hot for i, s in sets.items()}
+    assert {r["doc_id"]: r["n_sh"] for r in sizes.collect()} == {
+        i: len(s) for i, s in cold.items()
+    }
+    want = {
+        (i, j): len(cold[i] & cold[j])
+        for i, j in combinations(sorted(cold), 2)
+        if cold[i] & cold[j]
+    }
+    assert len(want) == 6, "cold shingles shared by cap docs must still pair"
+    assert {
+        (r["doc_id_1"], r["doc_id_2"]): r["shared"] for r in shared.collect()
+    } == want
 
 
 def test_capped_jaccard_matches_bruteforce_with_hot_shingle(spark):
@@ -249,7 +250,9 @@ def test_closure_materialized_mode_identical_and_scan_bounded(spark):
     returns byte-identical subset/integrity results AND its integrity
     plan scans each table O(1) times — the VERDICT r11 task-3 contract
     (default replay shape executed ~139 scans at runtime; the
-    materialized shape must stay under ~25)."""
+    materialized shape must stay under ~25) — and every lazily
+    checkpointed key set, the child-pulled ones included, is forced by
+    the wave pass."""
     import re
 
     from rdbms_subsetter_spark.catalog import Catalog
@@ -259,7 +262,19 @@ def test_closure_materialized_mode_identical_and_scan_bounded(spark):
     eng0 = ClosureEngine(cat)
     eng1 = ClosureEngine(cat, materialize_keys=True)
     assert eng0.materialize_keys is False  # auto stays off at test SFs
+    forced: list[str] = []
+    force_in_waves = eng1._force_in_waves
+
+    def spy(keys, fresh):
+        forced.extend(fresh)
+        return force_in_waves(keys, fresh)
+
+    eng1._force_in_waves = spy
     r0, r1 = _flagship_rows(eng0, cat), _flagship_rows(eng1, cat)
+    # ADVICE r12: the pulled lineitem key set gains no contribution in
+    # the re-close, so only the wave pass can materialize its lazy
+    # checkpoint before a consumer (possibly a broadcast build) does
+    assert "lineitem" in forced, forced
     assert sorted(r0) == sorted(r1)
     for t in r0:
         kc = sorted(r0[t].columns)

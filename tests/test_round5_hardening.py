@@ -72,7 +72,6 @@ def test_lakehouse_merge_probe_and_fallback(spark):
     from rdbms_subsetter_spark.operators.lakehouse import (
         delta_merge_available,
         merge_upsert_auto,
-        read_merged,
     )
     from rdbms_subsetter_spark.queries.sources import q_merge_partition_pruned
     from pyspark.sql import functions as F
@@ -83,7 +82,7 @@ def test_lakehouse_merge_probe_and_fallback(spark):
     assert engine == "dynamic-overwrite"
 
     audit = (
-        read_merged(spark, path, engine)
+        spark.read.parquet(path)
         .groupBy("nation")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),

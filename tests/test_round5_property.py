@@ -319,8 +319,8 @@ def test_minhash_lsh_pairs_match_python_replica_exactly(spark, docs):
 # -- SimHash pairs vs brute-force python replica ------------------------------
 
 
-def _py_simhash_bits(text: str, bits: int = 64):
-    """Replica of dedup.simhash_bits: every token OCCURRENCE (not
+def _py_simhash_per_bit(text: str, bits: int = 64):
+    """Replica of dedup._simhash_sig per bit: every token OCCURRENCE (not
     distinct) hashed with the salt-0 portable md5 hash; per bit, the
     sign of the ±1 sum; ties (sum == 0) give bit 0."""
     t = text.lower()
@@ -360,7 +360,7 @@ def test_simhash_pairs_equal_bruteforce_hamming(spark, docs):
         (r["doc_id_1"], r["doc_id_2"]): r["hamming"]
         for r in simhash_pairs(df, max_hamming=3).collect()
     }
-    sigs = [_py_simhash_bits(d) for d in docs]
+    sigs = [_py_simhash_per_bit(d) for d in docs]
     want = {}
     for i in range(len(docs)):
         for j in range(i + 1, len(docs)):

@@ -158,32 +158,6 @@ def test_star_raises_when_fixpoint_not_reached(spark):
         connected_components(edges, algorithm="star", max_iter=1).collect()
 
 
-def test_prefix_filter_result_identical(spark, boilerplate_docs_dir):
-    """AllPairs prefix filtering is a pure candidate-generation change:
-    result-identical to the full inverted-index join at every threshold
-    and cap combination, on a corpus with hot (df=30) shingles where a
-    broken prefix bound would actually lose pairs."""
-    from rdbms_subsetter_spark.catalog import Catalog
-    from rdbms_subsetter_spark.operators.dedup import ngram_jaccard_pairs
-
-    docs = Catalog(spark, boilerplate_docs_dir)["documents"]
-    for thr in (0.3, 0.5, 0.8):
-        for cap in (None, 16):
-            full = _canon(
-                tuple(r)
-                for r in ngram_jaccard_pairs(
-                    docs, n=3, threshold=thr, max_doc_freq=cap
-                ).collect()
-            )
-            pf = _canon(
-                tuple(r)
-                for r in ngram_jaccard_pairs(
-                    docs, n=3, threshold=thr, max_doc_freq=cap, prefix_filter=True
-                ).collect()
-            )
-            assert full == pf, (thr, cap)
-
-
 def test_auto_planes_formula_matches_duckdb():
     """similarity.auto_planes_per_band and the oracle's params-CTE CASE
     expression are the same function, including at the power-of-two

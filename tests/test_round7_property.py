@@ -188,51 +188,3 @@ def test_approx_top_k_strict_boundary_vs_counter(spark):
     # the crafted boundary must be real: the tie group straddles rank 20
     assert kth == 10 and all(("en", f"tie{i}") not in got for i in range(5))
     assert len(want) == 17
-
-
-# -- prefix-filter candidate generation is lossless (fuzzed) ------------------
-
-from hypothesis import HealthCheck, given, settings, strategies as st
-
-_FUZZ = settings(
-    max_examples=12,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-
-
-@_FUZZ
-@given(
-    docs=st.lists(
-        st.lists(st.sampled_from(["aa", "bb", "cc", "dd", "ee"]), min_size=0, max_size=8)
-        .map(" ".join),
-        min_size=2,
-        max_size=8,
-    ),
-    thr=st.sampled_from([0.3, 0.5, 0.8, 1.0]),
-    cap=st.sampled_from([None, 2, 16]),
-)
-def test_prefix_filter_identity_fuzzed(spark, docs, thr, cap):
-    """AllPairs prefix filtering never changes the answer — fuzzed over
-    tiny vocabularies (maximum shingle collision pressure), duplicate
-    docs, empty docs, thresholds incl. 1.0, and df caps small enough to
-    interact with the prefix bound."""
-    from rdbms_subsetter_spark.operators.dedup import ngram_jaccard_pairs
-
-    docs = docs + [docs[0]]  # planted duplicate
-    df = spark.createDataFrame(
-        [(i, d) for i, d in enumerate(docs)], "doc_id long, text string"
-    )
-    full = {
-        (r["doc_id_1"], r["doc_id_2"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(
-            df, n=3, threshold=thr, max_doc_freq=cap
-        ).collect()
-    }
-    pf = {
-        (r["doc_id_1"], r["doc_id_2"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(
-            df, n=3, threshold=thr, max_doc_freq=cap, prefix_filter=True
-        ).collect()
-    }
-    assert full == pf

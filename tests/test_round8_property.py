@@ -1,103 +1,22 @@
 """Round-8 property/adversarial tests.
 
-1. The ADVICE r07 medium: AllPairs prefix length must use EXACT
-   arithmetic for ⌈θ·n⌉.  At θ=0.55, n_sh=100 the IEEE product is
-   55.000000000000007, so a plain float ceil gives 56 and the prefix is
-   one shingle shorter than the lossless bound — a deterministically
-   crafted qualifying pair whose single prefix-witness shingle sits at
-   exactly that boundary position is silently dropped.
-2. The ADVICE r07 contract fix: ``minlabel`` now raises on an
+1. The ADVICE r07 contract fix: ``minlabel`` now raises on an
    unconverged fixpoint exactly like ``star`` does, instead of silently
    returning split components.
 """
 
-import math
-
 import pytest
+from hypothesis import HealthCheck, given, settings, strategies as st
 
 from pyspark.sql import functions as F
 
-from rdbms_subsetter_spark.operators.dedup import connected_components, ngram_jaccard_pairs
-
-
-def _boundary_docs(spark):
-    """Two docs crafted so the lossless AllPairs bound is TIGHT:
-
-    * doc 0: 45 unique tokens (df=1) + 55 shared tokens (df=2);
-      with rarest-first global ordering the uniques fill positions
-      1..45, so the smallest shared shingle sits at position 46 —
-      exactly ``n_sh - ⌈0.55·100⌉ + 1`` = the last prefix slot under
-      the exact bound, and one PAST the prefix under the float-ceil
-      bug (⌈float 0.55·100⌉ = 56 → prefix 45).
-    * doc 1: exactly the 55 shared tokens, so J = 55/100 = 0.55 ≥ θ
-      (the pair qualifies) and doc 1's prefix always contains the
-      witness.
-
-    n=1 shingles (single tokens) keep the shingle sets exactly equal to
-    the token sets.
-    """
-    shared = [f"s{i:02d}" for i in range(55)]
-    uniq = [f"u{i:02d}" for i in range(45)]
-    rows = [(0, " ".join(uniq + shared)), (1, " ".join(shared))]
-    return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_prefix_filter_exact_ceil_boundary_055(spark):
-    # the trap this guards: float ceil overshoots the exact bound here
-    assert math.ceil(0.55 * 100) == 56  # IEEE: 55.000000000000007
-    docs = _boundary_docs(spark)
-    full = {
-        (r["doc_id_1"], r["doc_id_2"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(docs, n=1, threshold=0.55).collect()
-    }
-    pf = {
-        (r["doc_id_1"], r["doc_id_2"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(
-            docs, n=1, threshold=0.55, prefix_filter=True
-        ).collect()
-    }
-    assert full == {(0, 1): 0.55}
-    assert pf == full  # float-ceil prefix (45) drops the pair entirely
-
-
-from hypothesis import HealthCheck, given, settings, strategies as st
+from rdbms_subsetter_spark.operators.dedup import connected_components
 
 _FUZZ = settings(
     max_examples=10,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-
-
-@_FUZZ
-@given(
-    n_shared=st.integers(min_value=40, max_value=70),
-    n_uniq_a=st.integers(min_value=20, max_value=50),
-    n_uniq_b=st.integers(min_value=0, max_value=50),
-    thr=st.sampled_from([0.55, 0.65, 0.85, 0.55]),
-)
-def test_prefix_filter_identity_large_docs_fuzzed(
-    spark, n_shared, n_uniq_a, n_uniq_b, thr
-):
-    """ADVICE r07 fuzz ask: θ=0.55-style thresholds over ~100-shingle
-    docs (the round-7 fuzz used ≤8-token docs, far from the float-ceil
-    boundary region).  Prefix filtering must stay result-identical."""
-    shared = [f"s{i:03d}" for i in range(n_shared)]
-    ua = [f"a{i:03d}" for i in range(n_uniq_a)]
-    ub = [f"b{i:03d}" for i in range(n_uniq_b)]
-    rows = [(0, " ".join(ua + shared)), (1, " ".join(shared + ub))]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    full = {
-        (r["doc_id_1"], r["doc_id_2"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(docs, n=1, threshold=thr).collect()
-    }
-    pf = {
-        (r["doc_id_1"], r["doc_id_2"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(
-            docs, n=1, threshold=thr, prefix_filter=True
-        ).collect()
-    }
-    assert pf == full
 
 
 def test_minlabel_raises_on_nonconvergence(spark):

@@ -8,12 +8,38 @@ its pool to ncpu (32 here), so 32 concurrent Python workers ran up to
 the pool to 1 thread per worker; these tests pin that contract.
 """
 
+import inspect
 import os
 import subprocess
 import sys
 import textwrap
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def get_openblas_threads() -> int | None:
+    """Current OpenBLAS pool size of THIS process, or None if no
+    OpenBLAS is loaded — the read-back for the cap under test."""
+    import ctypes
+
+    from rdbms_subsetter_spark._blas import _openblas_candidates
+
+    for path in _openblas_candidates():
+        try:
+            dll = ctypes.CDLL(path)
+        except OSError:
+            continue
+        for sym in ("openblas_get_num_threads64_", "openblas_get_num_threads"):
+            fn = getattr(dll, sym, None)
+            if fn is not None:
+                fn.restype = ctypes.c_int
+                return int(fn())
+    return None
+
+
+#: its source, for the processes that cannot import this test module
+#: (the fresh interpreter below and Spark's Python workers)
+_GET_THREADS_SRC = inspect.getsource(get_openblas_threads)
 
 
 def test_env_defaults_set_on_package_import():
@@ -36,12 +62,11 @@ def test_env_defaults_set_on_package_import():
 def test_limit_blas_threads_caps_live_pool():
     """Even when numpy initialises its pool FIRST (env unset, the
     driver-owned-session scenario), the ctypes call must cap it."""
-    code = textwrap.dedent(
+    code = _GET_THREADS_SRC + textwrap.dedent(
         """
         import numpy as np
         a = np.random.rand(64, 64); _ = a @ a  # force pool init at default
-        from rdbms_subsetter_spark._blas import (
-            get_openblas_threads, limit_blas_threads)
+        from rdbms_subsetter_spark._blas import limit_blas_threads
         before = get_openblas_threads()
         assert before is not None
         limit_blas_threads()
@@ -62,19 +87,19 @@ def test_blas_capped_inside_spark_workers(spark):
     from pyspark.sql import functions as F
 
     df = spark.range(0, 64, 1, 8)
+    src = _GET_THREADS_SRC
 
     def probe(batches):
         import pandas as pd
 
-        from rdbms_subsetter_spark._blas import (
-            get_openblas_threads,
-            limit_blas_threads,
-        )
+        from rdbms_subsetter_spark._blas import limit_blas_threads
 
+        ns: dict = {}
+        exec(src, ns)
         limit_blas_threads()
         for pdf in batches:
             yield pd.DataFrame(
-                {"pid": [os.getpid()], "threads": [get_openblas_threads() or -1]}
+                {"pid": [os.getpid()], "threads": [ns["get_openblas_threads"]() or -1]}
             )
 
     out = (

@@ -79,7 +79,7 @@ def test_bucketed_join_requires_no_shuffle(spark, cat, tmp_path):
 
 def test_partitioned_layout_prunes(spark, cat, tmp_path):
     path = str(tmp_path / "orders_p")
-    partitioning.write_partitioned(cat["orders"], path, ["o_orderstatus"])
+    cat["orders"].write.mode("overwrite").partitionBy("o_orderstatus").parquet(path)
     df = spark.read.parquet(path).filter(F.col("o_orderstatus") == "F")
     plan = physical_plan(df, "formatted")
     # partition filter, not a data filter: pruned before IO
