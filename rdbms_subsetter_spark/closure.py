@@ -32,14 +32,18 @@ pass (lazy ``localCheckpoint`` + topological-wave forcing), so
 downstream consumers — every FK edge of the integrity check, every
 summary count branch — reuse one computed relation instead of
 replaying the closure subtree per branch.
+
+:meth:`ClosureEngine.create_subset` is the one seed → close → pull →
+close driver: the CLI and the flagship registry entries
+(``queries/subset.py``) all run it.  :func:`count_report` is the one
+per-table count report (one lazy union, one Spark action to collect).
 """
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from rdbms_subsetter_spark.catalog import Catalog
 from rdbms_subsetter_spark.constraints import ConstraintRegistry, ForeignKey
@@ -68,11 +72,9 @@ from rdbms_subsetter_spark.sampling import SamplePlan, sample_exact_n
 #:
 #: The crossover sits where one table scan costs about as much as a
 #: driver action round-trip; 16 GiB total input is a conservative
-#: floor for that on any real cluster.  Env-overridable for operators
-#: (and for forcing the scale shape in tests/plan dumps).
-CLOSURE_MATERIALIZE_BYTES = int(
-    os.environ.get("SPARK_GRAFT_CLOSURE_CKPT_BYTES", str(16 << 30))
-)
+#: floor for that on any real cluster.  Tests and plan dumps force the
+#: scale shape with ``ClosureEngine(..., materialize_keys=True)``.
+CLOSURE_MATERIALIZE_BYTES = 16 << 30
 
 
 def _key_cols(registry: ConstraintRegistry, catalog: Catalog, table: str) -> list[str]:
@@ -82,15 +84,31 @@ def _key_cols(registry: ConstraintRegistry, catalog: Catalog, table: str) -> lis
     return list(pk) if pk else list(catalog.table(table).columns)
 
 
+def count_report(dfs: dict[str, DataFrame], key_col: str, name: str) -> DataFrame:
+    """Per-key row counts as one lazy plan: a union, in ``dfs`` order,
+    of ``(key, count(1))`` rows named ``(key_col, name)`` — collected
+    with one Spark action instead of a ``count()`` per DataFrame.  An
+    empty ``dfs`` gives an empty frame of the same schema."""
+    parts = [
+        df.agg(F.count(F.lit(1)).alias(name)).select(F.lit(key).alias(key_col), name)
+        for key, df in dfs.items()
+    ]
+    if not parts:
+        return SparkSession.active().createDataFrame(
+            [], f"{key_col} string, {name} bigint"
+        )
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out
+
+
 @dataclass
 class SubsetResult:
     """Selected key sets + lazy row DataFrames for every table."""
 
     keys: dict[str, DataFrame]
     rows: dict[str, DataFrame] = field(default_factory=dict)
-
-    def counts(self) -> dict[str, int]:
-        return {t: df.count() for t, df in self.rows.items()}
 
 
 class ClosureEngine:
@@ -112,9 +130,8 @@ class ClosureEngine:
                 materialize_keys = (
                     catalog.total_input_bytes() > CLOSURE_MATERIALIZE_BYTES
                 )
-            except (OSError, AttributeError):
-                # stat failure, or a catalog stub without file backing
-                # (tests): replay shape — the conservative default
+            except OSError:
+                # stat failure: replay shape — the conservative default
                 materialize_keys = False
         self.materialize_keys = materialize_keys
 
@@ -163,7 +180,6 @@ class ClosureEngine:
         self,
         keys: dict[str, DataFrame],
         exclude: set[str] | None = None,
-        max_iters: int = 50,
     ) -> dict[str, DataFrame]:
         """Propagate required keys child→parent until every FK of every
         selected row resolves (reference op #9, set-at-a-time).
@@ -177,7 +193,8 @@ class ClosureEngine:
         self-refs) fall back to the fixpoint loop, where each iteration
         anti-joins against already-selected keys (the set equivalent of
         the reference's ``_exists`` recursion base case) and
-        ``localCheckpoint``s to stop lineage growth.
+        ``localCheckpoint``s to stop lineage growth; key sets only grow
+        inside finite tables, so the loop ends when a pass adds none.
         """
         exclude = exclude or set()
         keys = dict(keys)
@@ -232,7 +249,7 @@ class ClosureEngine:
                 if table not in exclude:
                     merge(table)
             if cyclic:
-                for _ in range(max_iters):
+                while True:
                     grew = False
                     for table in comp:
                         if table not in keys or table in exclude:
@@ -391,9 +408,10 @@ class ClosureEngine:
         """Anti-join check per FK edge: count of child rows whose
         non-null FK values do NOT resolve to a selected parent row.
         All-zero == referential integrity (the reference's core test
-        invariant, SURVEY.md §5a).  One lazy union plan — a single
-        Spark job for all edges, not a count() per edge."""
-        parts = []
+        invariant, SURVEY.md §5a).  One lazy :func:`count_report` — a
+        single Spark job for all edges, not a count() per edge; empty
+        when no FK edge joins two tables of ``rows``."""
+        missing: dict[str, DataFrame] = {}
         for fk in sorted(
             self.registry.fks, key=lambda f: (f.table, f.columns, f.ref_table)
         ):
@@ -403,20 +421,12 @@ class ClosureEngine:
             child_fkvals = rows[fk.table].select(
                 *[F.col(c).alias(rc) for c, rc in zip(fk.columns, fk.ref_columns)]
             ).na.drop()
-            missing = child_fkvals.join(
+            missing[edge] = child_fkvals.join(
                 rows[fk.ref_table].select(*fk.ref_columns),
                 on=list(fk.ref_columns),
                 how="left_anti",
             )
-            parts.append(
-                missing.agg(F.count(F.lit(1)).alias("violations")).select(
-                    F.lit(edge).alias("fk_edge"), "violations"
-                )
-            )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return count_report(missing, "fk_edge", "violations")
 
     def integrity_violations(self, rows: dict[str, DataFrame]) -> dict[str, int]:
         """Dict form of :meth:`integrity_violations_df` (one job)."""
@@ -431,20 +441,22 @@ class ClosureEngine:
         plan: SamplePlan,
         seeds: dict[str, DataFrame] | None = None,
         child_pull_edges: list[ForeignKey] | None = None,
-        child_pull_rounds: int = 1,
     ) -> SubsetResult:
         """Full pipeline (reference ``Db.create_subset_in``), set-at-a-time:
 
         1. seed every non-excluded table toward its size target
            (+ forced/explicit seed keys),
         2. close parents (fixpoint),
-        3. capped child pull,
-        4. re-close parents of the newly pulled rows,
-        repeat 3-4 ``child_pull_rounds`` times.
+        3. capped child pull (along ``child_pull_edges``, default every
+           FK edge),
+        4. re-close parents of the newly pulled rows.
 
-        The reference's priority scheduler (``_completeness_score`` /
-        ``_next_row``) is a row-at-a-time artifact and disappears; the
-        deterministic pass ordering above is its replacement.
+        A table is read only when its policy samples it (``full``, or a
+        target above 0); ``fraction=0.0`` plus ``seeds`` is a pure
+        seeded subset.  The reference's priority scheduler
+        (``_completeness_score`` / ``_next_row``) is a row-at-a-time
+        artifact and disappears; the deterministic pass ordering above
+        is its replacement.
         """
         exclude = set(plan.exclude_tables)
         keys: dict[str, DataFrame] = {}
@@ -452,12 +464,14 @@ class ClosureEngine:
             if table in exclude:
                 continue
             pol = plan.policy_for(table)
-            df = self.catalog.table(table)
             n = pol.target(self.catalog.count_estimate(table))
+            if pol.mode != "full" and n <= 0:
+                continue
+            df = self.catalog.table(table)
             kc = _key_cols(self.registry, self.catalog, table)
             if pol.mode == "full":
                 keys[table] = df.select(*kc)
-            elif n > 0:
+            else:
                 keys[table] = sample_exact_n(df, n, plan.seed, tuple(kc)).select(*kc)
         if seeds:
             for table, seed_keys in seeds.items():
@@ -466,12 +480,10 @@ class ClosureEngine:
                 keys[table] = keys[table].unionByName(sk).distinct() if table in keys else sk
 
         keys = self.close_parents(keys, exclude=exclude)
-        for _ in range(child_pull_rounds):
-            keys = self.pull_children(
-                keys, plan.children, edges=child_pull_edges, exclude=exclude,
-                seed=None,
-            )
-            keys = self.close_parents(keys, exclude=exclude)
+        keys = self.pull_children(
+            keys, plan.children, edges=child_pull_edges, exclude=exclude
+        )
+        keys = self.close_parents(keys, exclude=exclude)
 
         rows = {t: self.rows_for_keys(t, k) for t, k in keys.items()}
         return SubsetResult(keys=keys, rows=rows)

@@ -552,7 +552,7 @@ def merge_partition_pruned_table(spark: SparkSession, sf_dir: str) -> str:
     """Build the partitioned base table and MERGE updates into it via
     DYNAMIC PARTITION OVERWRITE; return the table path.
 
-    This is the no-lakehouse answer to ``MERGE INTO`` at 100 TB
+    This is the plain-parquet answer to ``MERGE INTO`` at 100 TB
     (`subsetter.py` writes row-at-a-time into a live RDBMS; a Delta/
     Iceberg jar is absent from this sandbox — SCALE.md): keep the base
     partitioned on a key-derived column, compute the merged rows for
@@ -732,7 +732,7 @@ def q_schema_evolution_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schema-evolution read: two parquet batches written with DIFFERENT
     schemas (v2 adds a column) are read back as one table with
     ``mergeSchema`` — rows from the old files surface NULL for the new
-    column.  The everyday lakehouse situation: a pipeline added a field
+    column.  The everyday data-lake situation: a pipeline added a field
     mid-stream and history must stay readable.
 
     Scale note: mergeSchema=true costs a footer read per file at

@@ -56,6 +56,51 @@ def test_cli_end_to_end(spark, tmp_path, capsys):
     assert all(v == 0 for v in viol.values())
 
 
+def test_cli_without_fk_edges_reports_zero_violations(spark, tmp_path, capsys):
+    """A subset whose written tables share no FK edge (only ``region``)
+    has nothing to check: the integrity report is empty, the CLI prints
+    the 0-violations line and exits 0."""
+    tables = Catalog(spark, SF_SMALL).tables()
+    rc = main(
+        [SF_SMALL, str(tmp_path / "subset"), "0.5", "--yes",
+         "--exclude-tables", *[t for t in tables if t != "region"]]
+    )
+    out = capsys.readouterr().out
+    assert rc == 0
+    assert "wrote region " in out
+    assert "integrity: all FK edges resolve (0 violations)" in out
+
+
+def test_cli_counts_written_rows_without_dataframe_count(spark, tmp_path, capsys, monkeypatch):
+    """The written-row report is one collected union of per-table
+    counts, never a ``DataFrame.count()`` job per output table; the
+    printed counts match the files on disk."""
+    df_class = type(spark.range(1))
+    calls: list[object] = []
+    original = df_class.count
+
+    def spy(self):
+        calls.append(self)
+        return original(self)
+
+    monkeypatch.setattr(df_class, "count", spy)
+    dest = str(tmp_path / "subset")
+    rc = main(
+        [SF_SMALL, dest, "0.1", "--yes", "--seed", "7",
+         "--exclude-tables", "documents", "embeddings", "events"]
+    )
+    out = capsys.readouterr().out
+    assert rc == 0
+    assert calls == []
+    monkeypatch.undo()
+    printed = {
+        line.split()[1]: int(line.split()[2])
+        for line in out.splitlines() if line.startswith("wrote ")
+    }
+    cat = Catalog(spark, dest)
+    assert printed and printed == {t: cat.count(t) for t in printed}
+
+
 def test_cli_config_merge(spark, tmp_path):
     cfg = tmp_path / "constraints.json"
     cfg.write_text(

@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from rdbms_subsetter_spark.catalog import Catalog
-from rdbms_subsetter_spark.closure import ClosureEngine
+from rdbms_subsetter_spark.closure import ClosureEngine, count_report
 from rdbms_subsetter_spark.constraints import ConstraintRegistry, ForeignKey
 from rdbms_subsetter_spark.sampling import SamplePlan, sample_exact_n
 from rdbms_subsetter_spark.writer import plan_preview, sequence_resync_report, write_subset
@@ -194,7 +194,10 @@ def test_create_subset_policies_and_force(spark, zcat):
     plan = SamplePlan(fraction=0.5, full_tables=["state"], exclude_tables=["log_line"], children=2, seed=7)
     forced = zcat["zeppelin_sighting"].filter(F.col("sighting_id") == 1005)
     res = eng.create_subset(plan, seeds={"zeppelin_sighting": forced.select("sighting_id")})
-    counts = res.counts()
+    counts = {
+        r["table_name"]: r["n_rows"]
+        for r in count_report(res.rows, "table_name", "n_rows").collect()
+    }
     assert "log_line" not in counts  # excluded (op #13)
     assert counts["state"] == 4  # full table policy
     assert_integrity(eng, res.rows)

@@ -19,7 +19,9 @@ from rdbms_subsetter_spark.constraints import ConstraintRegistry, ForeignKey
 
 class DictCatalog:
     """Minimal in-memory catalog (no parquet round-trip) — enough for
-    the close_parents/rows_for_keys/integrity paths."""
+    the close_parents/rows_for_keys/integrity paths.  It has no files
+    to size, so engines over it name the replay shape
+    (``materialize_keys=False``) instead of probing input bytes."""
 
     def __init__(self, dfs: dict, registry: ConstraintRegistry):
         self._dfs = dfs
@@ -50,7 +52,7 @@ def test_composite_fk_closure(spark):
         fks=[ForeignKey("shipment", ("ship_okey", "ship_lineno"), "order_line", ("okey", "lineno"))],
     )
     cat = DictCatalog({"order_line": order_line, "shipment": shipment}, registry)
-    eng = ClosureEngine(cat)
+    eng = ClosureEngine(cat, materialize_keys=False)
     seed = shipment.filter(F.col("ship_id").isin([10, 12, 13])).select("ship_id")
     keys = eng.close_parents({"shipment": seed})
     got = {
@@ -110,7 +112,7 @@ def test_closure_integrity_on_random_graphs(spark, data):
     )
 
     cat = DictCatalog(dfs, registry)
-    eng = ClosureEngine(cat)
+    eng = ClosureEngine(cat, materialize_keys=False)
     seed = dfs[seed_table].filter(F.col("id").isin(seed_ids)).select("id")
     keys = eng.close_parents({seed_table: seed})  # (a) terminates
 
@@ -187,7 +189,7 @@ def test_incremental_delta_on_random_graphs(spark, data):
         new_ids = [all_ids[0]]
 
     cat = DictCatalog(dfs, registry)
-    eng = ClosureEngine(cat)
+    eng = ClosureEngine(cat, materialize_keys=False)
 
     def seed(ids):
         return dfs[seed_table].filter(F.col("id").isin(ids)).select("id")

@@ -153,14 +153,11 @@ def test_avro_roundtrip_via_fqcn(spark):
     assert files and all(f.endswith(".avro") for f in files)
 
 
-def test_lakehouse_and_protobuf_probes_still_absent(spark):
-    """Round-11 re-probe of the two environment-blocked gates (VERDICT
-    r10 task 7) — zero-cost, keeps the one-jar upgrade honest.  These
-    assertions document THIS sandbox; a populated environment would
-    flip them and the dispatchers take the real path."""
-    from rdbms_subsetter_spark.operators.lakehouse import delta_merge_available
-
-    assert delta_merge_available(spark) is False
+def test_protobuf_probe_still_absent():
+    """Re-probe of the environment-blocked protobuf gate (VERDICT r10
+    task 7) — zero-cost.  The assertion documents an environment
+    without ``google.protobuf``; a populated one would flip it and the
+    dispatcher takes the real path."""
     try:
         import google.protobuf  # noqa: F401
 

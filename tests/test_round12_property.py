@@ -229,22 +229,6 @@ def test_grid_partitions_bounds_cells_per_task():
 # ---------------------------------------------------------------------------
 
 
-def _flagship_rows(eng, cat):
-    from rdbms_subsetter_spark.sampling import sample_modulo
-
-    reg = cat.registry
-    keys = {
-        "orders": sample_modulo(cat["orders"], "o_orderkey", 20).select("o_orderkey")
-    }
-    keys = eng.close_parents(keys)
-    li_edge = [
-        fk for fk in reg.fks if fk.table == "lineitem" and fk.ref_table == "orders"
-    ]
-    keys = eng.pull_children(keys, k=3, edges=li_edge)
-    keys = eng.close_parents(keys)
-    return {t: eng.rows_for_keys(t, k) for t, k in keys.items()}
-
-
 def test_closure_materialized_mode_identical_and_scan_bounded(spark):
     """materialize_keys=True (the >CLOSURE_MATERIALIZE_BYTES shape)
     returns byte-identical subset/integrity results AND its integrity
@@ -257,6 +241,7 @@ def test_closure_materialized_mode_identical_and_scan_bounded(spark):
 
     from rdbms_subsetter_spark.catalog import Catalog
     from rdbms_subsetter_spark.closure import ClosureEngine
+    from rdbms_subsetter_spark.queries.subset import flagship_subset
 
     cat = Catalog(spark, SF_SMALL)
     eng0 = ClosureEngine(cat)
@@ -270,7 +255,7 @@ def test_closure_materialized_mode_identical_and_scan_bounded(spark):
         return force_in_waves(keys, fresh)
 
     eng1._force_in_waves = spy
-    r0, r1 = _flagship_rows(eng0, cat), _flagship_rows(eng1, cat)
+    r0, r1 = flagship_subset(eng0).rows, flagship_subset(eng1).rows
     # ADVICE r12: the pulled lineitem key set gains no contribution in
     # the re-close, so only the wave pass can materialize its lazy
     # checkpoint before a consumer (possibly a broadcast build) does

@@ -61,42 +61,6 @@ def _canon(rows):
     )
 
 
-def test_lakehouse_merge_probe_and_fallback(spark):
-    """The Delta capability probe is honest in this sandbox (no jar ->
-    False) and merge_upsert_auto therefore takes the dynamic-overwrite
-    fallback, whose audit aggregate is identical to the graded
-    merge_partition_pruned entry — so adding the one jar upgrades the
-    engine without changing any result."""
-    from tests.conftest import SF_SMALL
-
-    from rdbms_subsetter_spark.operators.lakehouse import (
-        delta_merge_available,
-        merge_upsert_auto,
-    )
-    from rdbms_subsetter_spark.queries.sources import q_merge_partition_pruned
-    from pyspark.sql import functions as F
-
-    assert delta_merge_available(spark) is False
-
-    path, engine = merge_upsert_auto(spark, SF_SMALL)
-    assert engine == "dynamic-overwrite"
-
-    audit = (
-        spark.read.parquet(path)
-        .groupBy("nation")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(F.col("updated").cast("long")).alias("n_updated"),
-            F.sum(F.round(F.col("balance") * 100).cast("long")).alias(
-                "balance_cents"
-            ),
-        )
-    )
-    got = sorted(tuple(r) for r in audit.collect())
-    want = sorted(tuple(r) for r in q_merge_partition_pruned(spark, SF_SMALL).collect())
-    assert got == want
-
-
 @pytest.fixture(scope="module")
 def adversarial_cogroup_dir(spark):
     """events.parquet + orders.parquet shaped like the testdata but with

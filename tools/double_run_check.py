@@ -2,7 +2,9 @@
 difference between passes = cross-query state leakage (conf leaks,
 view-name collisions, scratch-dir reuse)."""
 import sys
-sys.path.insert(0, '/root/repo')
+from pathlib import Path
+
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 from rdbms_subsetter_spark.session import get_spark
 import __spark_entry__ as m
 
