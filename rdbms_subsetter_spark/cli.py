@@ -15,10 +15,13 @@ forms, op #14), --full-tables / --exclude-tables policies (op #13),
 plan preview + confirm prompt unless --yes (op #18), and a sequence-
 resync report after the write (op #17).  The engine behind it is the
 set-at-a-time closure (semi-join fixpoint), not the reference's
-row-at-a-time recursion: one ``ClosureEngine.create_subset`` run.  The
-written row counts are one ``closure.count_report`` collected in one
-Spark action; with no FK edge between the written tables the integrity
-line reports 0 violations.
+row-at-a-time recursion: one ``ClosureEngine.create_subset`` run with
+``materialize_keys=True``, since the CLI runs one write action per
+table and each would otherwise replay the whole closure.  The written
+row counts and the sequence-resync values are observed on the writes
+themselves (``writer.write_subset``), so they cost no Spark job; the
+integrity check re-reads the written tables, and with no FK edge
+between them it reports 0 violations.
 """
 
 from __future__ import annotations
@@ -93,7 +96,7 @@ def main(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
 
     from rdbms_subsetter_spark.catalog import Catalog
-    from rdbms_subsetter_spark.closure import ClosureEngine, count_report
+    from rdbms_subsetter_spark.closure import ClosureEngine
     from rdbms_subsetter_spark.constraints import ConstraintRegistry
     from rdbms_subsetter_spark.sampling import SamplePlan
     from rdbms_subsetter_spark.session import get_spark
@@ -165,29 +168,25 @@ def main(argv: list[str] | None = None) -> int:
         k = _force_keys(cat, table, col, val)
         seeds[table] = seeds[table].unionByName(k).distinct() if table in seeds else k
 
-    eng = ClosureEngine(cat)
+    eng = ClosureEngine(cat, materialize_keys=True)
     result = eng.create_subset(plan, seeds=seeds or None)
     if dest_is_jdbc:
         from rdbms_subsetter_spark.sources.io import read_jdbc
         from rdbms_subsetter_spark.writer import write_subset_jdbc
 
-        order = write_subset_jdbc(result.rows, cat.registry, dest, jdbc_driver)
+        written = write_subset_jdbc(result.rows, cat.registry, dest, jdbc_driver)
         out_tables = {
-            t: read_jdbc(spark, dest, t, driver=jdbc_driver) for t in order
+            t: read_jdbc(spark, dest, t, driver=jdbc_driver) for t in written.order
         }
     else:
-        order = write_subset(result.rows, cat.registry, dest)
-        out_cat = Catalog(spark, dest, registry=cat.registry, tables=order)
-        out_tables = {t: out_cat[t] for t in order}
+        written = write_subset(result.rows, cat.registry, dest)
+        out_cat = Catalog(spark, dest, registry=cat.registry, tables=written.order)
+        out_tables = {t: out_cat[t] for t in written.order}
     viol = eng.integrity_violations(out_tables)
     bad = {e: v for e, v in viol.items() if v}
-    written = {
-        r["table_name"]: r["n_rows"]
-        for r in count_report(out_tables, "table_name", "n_rows").collect()
-    }
-    for table in order:
-        print(f"wrote {table:<12} {written[table]:>10} rows")
-    resync = sequence_resync_report(out_tables, cat.registry)
+    for table in written.order:
+        print(f"wrote {table:<12} {written.rows[table]:>10} rows")
+    resync = sequence_resync_report(written)
     for table, mx in sorted(resync.items()):
         print(f"sequence resync: {table} -> setval({mx})")
     if bad:

@@ -26,12 +26,13 @@ fixpoint iteration is one Spark job; key sets are ``localCheckpoint``-ed
 per iteration to stop lineage growth (the real scale risk of iterative
 Spark); the final materialization is one ``left_semi`` join per table,
 which AQE turns into a broadcast join whenever the key set is small.
-Above :data:`CLOSURE_MATERIALIZE_BYTES` of input the engine
-additionally materializes each table's merged key set ONCE per closure
-pass (lazy ``localCheckpoint`` + topological-wave forcing), so
-downstream consumers — every FK edge of the integrity check, every
-summary count branch — reuse one computed relation instead of
-replaying the closure subtree per branch.
+Above :data:`CLOSURE_MATERIALIZE_BYTES` of input (and always in the
+CLI, which runs one write action per table) the engine additionally
+materializes each table's merged key set ONCE, where it is made (an
+eager ``localCheckpoint``), so downstream consumers — every written
+table, every FK edge of the integrity check, every summary count
+branch — reuse one computed relation instead of replaying the closure
+subtree per branch.
 
 :meth:`ClosureEngine.create_subset` is the one seed → close → pull →
 close driver: the CLI and the flagship registry entries
@@ -50,10 +51,11 @@ from rdbms_subsetter_spark.constraints import ConstraintRegistry, ForeignKey
 from rdbms_subsetter_spark.sampling import SamplePlan, sample_exact_n
 
 #: Input-size threshold (bytes) above which the engine materializes
-#: each table's merged key set once (lazy ``localCheckpoint`` + a
-#: topological-wave forcing pass) instead of letting every downstream
-#: branch replay the closure subtree.  The two shapes return identical
-#: results; which is faster depends on scale:
+#: each table's merged key set once (an eager ``localCheckpoint`` where
+#: the set is made) instead of letting every downstream branch replay
+#: the closure subtree.  The two shapes return identical results; for
+#: a query that runs ONE action (every registered entry), which is
+#: faster depends on scale:
 #:
 #: * BELOW the threshold (the sf0.1 bench and every test SF) the
 #:   replayed-subtree plan wins: recompute is cheap, the branches run
@@ -61,6 +63,9 @@ from rdbms_subsetter_spark.sampling import SamplePlan, sample_exact_n
 #:   materialization is a serializing driver action (~0.2 s fixed cost
 #:   × ~16 key sets ≈ the whole query's runtime — measured r11: eager
 #:   3.77→7.07 s, lazy →4.88 s; re-measured r12: lazy 4.6→8.6 s warm).
+#:   A lazy ``localCheckpoint`` is no cheaper than an eager one: under
+#:   AQE it runs every shuffle and broadcast stage of the set on the
+#:   calling thread when it is made, leaving only the final stage.
 #: * ABOVE it the replay is the scale-killer the r11 verdict flagged:
 #:   the flagship integrity plan executes ~139 parquet scans at
 #:   runtime (232 statically; AQE exchange reuse dedups only the
@@ -72,8 +77,10 @@ from rdbms_subsetter_spark.sampling import SamplePlan, sample_exact_n
 #:
 #: The crossover sits where one table scan costs about as much as a
 #: driver action round-trip; 16 GiB total input is a conservative
-#: floor for that on any real cluster.  Tests and plan dumps force the
-#: scale shape with ``ClosureEngine(..., materialize_keys=True)``.
+#: floor for that on any real cluster.  A caller that runs one action
+#: per table (the CLI's writes) materializes at every scale; tests and
+#: plan dumps force the scale shape the same way, with
+#: ``ClosureEngine(..., materialize_keys=True)``.
 CLOSURE_MATERIALIZE_BYTES = 16 << 30
 
 
@@ -118,11 +125,13 @@ class ClosureEngine:
         registry: ConstraintRegistry | None = None,
         materialize_keys: bool | None = None,
     ):
-        """``materialize_keys``: materialize each table's merged key
-        set once per closure pass instead of replaying its subtree per
-        consumer branch.  Default ``None`` auto-selects by total input
-        size (see :data:`CLOSURE_MATERIALIZE_BYTES`) — False at every
-        test/bench SF, True at cluster scale."""
+        """``materialize_keys``: checkpoint each table's key set
+        eagerly where it is made (each parent-closure merge that gained
+        a contribution, each child-pull edge) instead of replaying its
+        subtree per consumer branch.  Default ``None`` auto-selects by
+        total input size (see :data:`CLOSURE_MATERIALIZE_BYTES`) —
+        False at every test/bench SF, True at cluster scale; a caller
+        that runs one action per table passes True."""
         self.catalog = catalog
         self.registry = registry or catalog.registry
         if materialize_keys is None:
@@ -201,9 +210,6 @@ class ClosureEngine:
         reg = self.registry
         # contributions to parent tables not yet processed
         pending: dict[str, list[DataFrame]] = {}
-        # tables whose key set changed in THIS pass and was checkpointed
-        # (materialize_keys mode only) — forced in topo waves at the end
-        fresh: list[str] = []
 
         def merge(table: str) -> None:
             contribs = pending.pop(table, [])
@@ -216,14 +222,12 @@ class ClosureEngine:
             if len(dfs) > 1:
                 merged = merged.distinct()
             if self.materialize_keys and contribs:
-                # lazy: the wave-forcing pass below (or the first
-                # consumer) materializes it; every later branch reuses
-                # the persisted partitions instead of replaying this
+                # computed once, here: every later branch reuses the
+                # checkpointed partitions instead of replaying this
                 # table's whole closure subtree.  Only plans that
                 # gained a contribution are new — an unchanged set
                 # keeps its existing (possibly checkpointed) plan.
-                merged = merged.localCheckpoint(eager=False)
-                fresh.append(table)
+                merged = merged.localCheckpoint(eager=True)
             keys[table] = merged
 
         def emit(table: str, comp_set: set[str]) -> None:
@@ -281,35 +285,7 @@ class ClosureEngine:
             for table in comp:
                 if table in keys and table not in exclude:
                     emit(table, comp_set)
-        if fresh:
-            self._force_in_waves(keys, fresh)
         return keys
-
-    def _force_in_waves(self, keys: dict[str, DataFrame], fresh: list[str]) -> None:
-        """Materialize lazily-checkpointed key sets in topological
-        waves: consecutive tables with no FK between them share a wave
-        whose ``count()`` actions run from a small thread pool, so
-        their jobs overlap and back-fill each other's stragglers
-        (guide §2.6) instead of paying one serialized driver action
-        per table — the cost that sank the r11 eager-checkpoint
-        attempt.  ``fresh`` is in children-first merge order, which is
-        exactly dependency order for the contributions."""
-        from concurrent.futures import ThreadPoolExecutor
-
-        fks = self.registry.fks
-        with ThreadPoolExecutor(max_workers=4) as pool:
-            i = 0
-            while i < len(fresh):
-                wave = [fresh[i]]
-                i += 1
-                while i < len(fresh) and not any(
-                    (fk.table in wave and fk.ref_table == fresh[i])
-                    or (fk.ref_table in wave and fk.table == fresh[i])
-                    for fk in fks
-                ):
-                    wave.append(fresh[i])
-                    i += 1
-                list(pool.map(lambda t: keys[t].count(), wave))
 
     # ------------------------------------------------------------------
     def incremental_delta(
@@ -365,7 +341,6 @@ class ClosureEngine:
         keys = dict(keys)
         reg = self.registry
         edges = edges if edges is not None else list(reg.fks)
-        pulled: list[str] = []  # lazily checkpointed (materialize_keys mode)
         for fk in edges:
             if fk.ref_table not in keys or fk.table in exclude:
                 continue
@@ -393,14 +368,7 @@ class ClosureEngine:
                 # the window top-k subtree is the most expensive key
                 # plan in the pipeline; at scale it must run once, not
                 # once per downstream FK edge/count branch.
-                keys[fk.table] = keys[fk.table].localCheckpoint(eager=False)
-                pulled.append(fk.table)
-        if pulled:
-            # forced here rather than by the first consumer: a pulled
-            # set that gains no contribution in the re-close never
-            # reaches close_parents' wave pass, so a lazy checkpoint
-            # could first materialize inside a broadcast build
-            self._force_in_waves(keys, list(dict.fromkeys(pulled)))
+                keys[fk.table] = keys[fk.table].localCheckpoint(eager=True)
         return keys
 
     # ------------------------------------------------------------------

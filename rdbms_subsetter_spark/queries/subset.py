@@ -60,9 +60,10 @@ def flagship_subset(eng: ClosureEngine) -> SubsetResult:
 
     Whether the key sets are materialized is the engine's scale call
     (``closure.CLOSURE_MATERIALIZE_BYTES``): at bench/test SFs they
-    are not — the shallow semi-join trees re-execute in parallel inside
-    one job, measured 2× faster than any cache/checkpoint variant.
-    Above the threshold each key set materializes once, so the
+    are not — each entry runs one action, and the shallow semi-join
+    trees re-execute in parallel inside it, measured 2× faster than
+    any cache/checkpoint variant.  Above the threshold each key set is
+    checkpointed once, eagerly, where it is made, so the
     integrity/summary branches stop replaying the closure subtree per
     FK edge.
     """

@@ -6,8 +6,12 @@ Reference ops covered:
       parents-first topological order, so a constrained destination
       accepts every table as it lands.
   #17 sequence resync   — ``subsetter.py::update_sequences``
-      (postgres ``setval(seq, max(col))``) → ``F.max(pk)`` report;
-      the DDL side only applies to JDBC targets.
+      (postgres ``setval(seq, max(col))``) → the ``max(pk)`` each
+      write observed; the DDL side only applies to JDBC targets.
+
+Each table's row count and single-column-PK ``max`` are observed on
+its write action (``DataFrame.observe``), so reporting them costs no
+Spark job of its own.
   #18 plan preview      — ``Db.confirm``: per-table
       ``source_rows → target_rows`` report.
 """
@@ -15,8 +19,9 @@ Reference ops covered:
 from __future__ import annotations
 
 from dataclasses import dataclass
+from typing import Any, Callable
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from rdbms_subsetter_spark.catalog import Catalog
 from rdbms_subsetter_spark.constraints import ConstraintRegistry
@@ -42,24 +47,60 @@ def plan_preview(catalog: Catalog, plan: SamplePlan) -> list[PlanLine]:
     return out
 
 
+@dataclass
+class WrittenSubset:
+    """What the write actions observed, table by table."""
+
+    order: list[str]  # parents-first write order
+    rows: dict[str, int]  # rows written per table
+    pk_max: dict[str, Any]  # single-column-PK tables: max key, None if empty
+
+
+def _write_observed(
+    rows: dict[str, DataFrame],
+    registry: ConstraintRegistry,
+    write_one: Callable[[str, DataFrame], None],
+) -> WrittenSubset:
+    """Write every table in parents-first topo order with ``write_one``,
+    observing its row count (and single-column-PK ``max``) on the write
+    action itself."""
+    order = [t for t in registry.topo_order() if t in rows]
+    order += [t for t in rows if t not in order]
+    observed: dict[str, dict[str, Any]] = {}
+    for table in order:
+        metrics = [F.count(F.lit(1)).alias("n_rows")]
+        pk = registry.pk(table)
+        if len(pk) == 1:
+            metrics.append(F.max(pk[0]).alias("pk_max"))
+        obs = Observation()
+        write_one(table, rows[table].observe(obs, *metrics))
+        observed[table] = obs.get
+    return WrittenSubset(
+        order=order,
+        rows={t: m["n_rows"] for t, m in observed.items()},
+        pk_max={t: m["pk_max"] for t, m in observed.items() if "pk_max" in m},
+    )
+
+
 def write_subset(
     rows: dict[str, DataFrame],
     registry: ConstraintRegistry,
     out_dir: str,
     mode: str = "overwrite",
-) -> list[str]:
-    """Write every table in parents-first topo order; returns the order.
+) -> WrittenSubset:
+    """Write every table in parents-first topo order; returns the order
+    and what each write observed.
 
     Parquet has no FK checks, but the order contract is what lets the
     same code target a constrained JDBC destination (swap the write
     call), mirroring the reference's parents-before-children insert
     discipline.
     """
-    order = [t for t in registry.topo_order() if t in rows]
-    order += [t for t in rows if t not in order]
-    for table in order:
-        rows[table].write.mode(mode).parquet(f"{out_dir}/{table}.parquet")
-    return order
+    return _write_observed(
+        rows,
+        registry,
+        lambda table, df: df.write.mode(mode).parquet(f"{out_dir}/{table}.parquet"),
+    )
 
 
 def write_subset_jdbc(
@@ -68,9 +109,9 @@ def write_subset_jdbc(
     url: str,
     driver: str,
     mode: str = "overwrite",
-) -> list[str]:
+) -> WrittenSubset:
     """Write every table into a JDBC destination in parents-first topo
-    order; returns the order.
+    order; returns the order and what each write observed.
 
     This is the reference's actual destination shape
     (`subsetter.py::Db.create_row_in` inserts into a live RDBMS), done
@@ -86,21 +127,15 @@ def write_subset_jdbc(
     """
     from rdbms_subsetter_spark.sources.io import write_jdbc
 
-    order = [t for t in registry.topo_order() if t in rows]
-    order += [t for t in rows if t not in order]
-    for table in order:
-        write_jdbc(rows[table], url, table, driver=driver, mode=mode)
-    return order
+    return _write_observed(
+        rows,
+        registry,
+        lambda table, df: write_jdbc(df, url, table, driver=driver, mode=mode),
+    )
 
 
-def sequence_resync_report(rows: dict[str, DataFrame], registry: ConstraintRegistry) -> dict[str, int]:
-    """``max(pk)`` per single-column-PK table — the value a postgres
-    ``setval`` would need after load (reference ``update_sequences``)."""
-    out: dict[str, int] = {}
-    for table, df in rows.items():
-        pk = registry.pk(table)
-        if len(pk) == 1:
-            row = df.agg(F.max(pk[0]).alias("m")).collect()[0]
-            if row["m"] is not None:
-                out[table] = row["m"]
-    return out
+def sequence_resync_report(written: WrittenSubset) -> dict[str, Any]:
+    """``max(pk)`` per non-empty single-column-PK table, as its write
+    observed it — the value a postgres ``setval`` would need after load
+    (reference ``update_sequences``)."""
+    return {t: m for t, m in written.pk_max.items() if m is not None}

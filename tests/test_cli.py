@@ -13,7 +13,20 @@ from pyspark.sql import functions as F
 from rdbms_subsetter_spark.cli import main, parse_force
 from rdbms_subsetter_spark.catalog import Catalog
 from rdbms_subsetter_spark.closure import ClosureEngine
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_MED, SF_SMALL
+
+
+def _printed_counts(out: str) -> dict[str, int]:
+    """The CLI's ``wrote <table> <n> rows`` lines as ``{table: n}``."""
+    return {
+        line.split()[1]: int(line.split()[2])
+        for line in out.splitlines() if line.startswith("wrote ")
+    }
+
+
+def _only_tables(spark, src: str, keep: set[str]) -> list[str]:
+    """``--exclude-tables`` arguments that keep only ``keep``."""
+    return [t for t in Catalog(spark, src).tables() if t not in keep]
 
 
 def test_parse_force_forms():
@@ -60,10 +73,9 @@ def test_cli_without_fk_edges_reports_zero_violations(spark, tmp_path, capsys):
     """A subset whose written tables share no FK edge (only ``region``)
     has nothing to check: the integrity report is empty, the CLI prints
     the 0-violations line and exits 0."""
-    tables = Catalog(spark, SF_SMALL).tables()
     rc = main(
         [SF_SMALL, str(tmp_path / "subset"), "0.5", "--yes",
-         "--exclude-tables", *[t for t in tables if t != "region"]]
+         "--exclude-tables", *_only_tables(spark, SF_SMALL, {"region"})]
     )
     out = capsys.readouterr().out
     assert rc == 0
@@ -72,8 +84,8 @@ def test_cli_without_fk_edges_reports_zero_violations(spark, tmp_path, capsys):
 
 
 def test_cli_counts_written_rows_without_dataframe_count(spark, tmp_path, capsys, monkeypatch):
-    """The written-row report is one collected union of per-table
-    counts, never a ``DataFrame.count()`` job per output table; the
+    """The written-row counts are observed on the write actions
+    themselves, never a ``DataFrame.count()`` job per output table; the
     printed counts match the files on disk."""
     df_class = type(spark.range(1))
     calls: list[object] = []
@@ -93,12 +105,56 @@ def test_cli_counts_written_rows_without_dataframe_count(spark, tmp_path, capsys
     assert rc == 0
     assert calls == []
     monkeypatch.undo()
-    printed = {
-        line.split()[1]: int(line.split()[2])
-        for line in out.splitlines() if line.startswith("wrote ")
-    }
+    printed = _printed_counts(out)
     cat = Catalog(spark, dest)
     assert printed and printed == {t: cat.count(t) for t in printed}
+
+
+def test_cli_empty_subset_reports_zero_rows(spark, tmp_path, capsys):
+    """A subset with no rows (fraction 0, a forced key that does not
+    exist) prints ``wrote … 0 rows`` per table and no resync line, and
+    exits 0: the observed metrics of an empty write are available, so
+    reading them does not block."""
+    import threading
+
+    argv = [SF_SMALL, str(tmp_path / "subset"), "0.0", "--yes",
+            "--force", "orders:-1",
+            "--exclude-tables", *_only_tables(spark, SF_SMALL, {"customer", "orders"})]
+    result: dict[str, int] = {}
+    worker = threading.Thread(
+        target=lambda: result.setdefault("rc", main(argv)), daemon=True
+    )
+    worker.start()
+    worker.join(timeout=300)
+    assert not worker.is_alive(), "cli.main blocked on an empty write"
+    out = capsys.readouterr().out
+    assert result["rc"] == 0
+    assert _printed_counts(out) == {"customer": 0, "orders": 0}
+    assert "sequence resync" not in out
+    assert "integrity: all FK edges resolve (0 violations)" in out
+
+
+def test_cli_spark_job_budget(spark, tmp_path, capsys):
+    """The subset CLI in the benchmark's ``subset_cli`` shape (sf0.01,
+    customer + orders, ``0.05 --seed 1``) runs exactly this many Spark
+    jobs: each key set is computed once, the writes do not replay the
+    closure, and counts and resync values come from the writes.  A
+    change that brings back replayed writes or post-write actions
+    moves the figure (the same at 4 and 8 local cores)."""
+    sc = spark.sparkContext
+    group = "test_cli_spark_job_budget"
+    argv = [SF_MED, str(tmp_path / "subset"), "0.05", "--seed", "1", "--yes",
+            "--exclude-tables", *_only_tables(spark, SF_MED, {"customer", "orders"})]
+    sc.setJobGroup(group, group)
+    try:
+        rc = main(argv)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    capsys.readouterr()
+    assert rc == 0
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 25
 
 
 def test_cli_config_merge(spark, tmp_path):
@@ -194,6 +250,12 @@ def test_cli_jdbc_dest_derby(spark, tmp_path, capsys):
         spark, url, "region", driver=srcio.DERBY_EMBEDDED_DRIVER
     )
     assert back.count() > 0
+    # every printed count, observed on the JDBC write, is what landed
+    printed = _printed_counts(out)
+    assert printed
+    for table, n in printed.items():
+        landed = srcio.read_jdbc(spark, url, table, driver=srcio.DERBY_EMBEDDED_DRIVER)
+        assert landed.count() == n, table
 
 
 def test_cli_schema_scoping(spark, tmp_path):

@@ -7,6 +7,7 @@ test_subsetter.py asserts (SURVEY.md §5), re-expressed set-at-a-time.
 from __future__ import annotations
 
 import datetime as dt
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -16,6 +17,7 @@ from rdbms_subsetter_spark.closure import ClosureEngine, count_report
 from rdbms_subsetter_spark.constraints import ConstraintRegistry, ForeignKey
 from rdbms_subsetter_spark.sampling import SamplePlan, sample_exact_n
 from rdbms_subsetter_spark.writer import plan_preview, sequence_resync_report, write_subset
+from tests.conftest import SF_MED, SF_SMALL
 
 
 def zeppelin_registry() -> ConstraintRegistry:
@@ -250,23 +252,27 @@ def test_write_subset_topo_order_and_roundtrip(spark, zcat, tmp_path):
     eng = ClosureEngine(zcat)
     plan = SamplePlan(fraction=1.0, seed=1)
     res = eng.create_subset(plan)
-    order = write_subset(res.rows, zcat.registry, str(tmp_path / "out"))
+    written = write_subset(res.rows, zcat.registry, str(tmp_path / "out"))
+    order = written.order
     pos = {t: i for i, t in enumerate(order)}
     for fk in zcat.registry.fks:
         if fk.table != fk.ref_table and fk.table in pos and fk.ref_table in pos:
             assert pos[fk.ref_table] < pos[fk.table]
     back = Catalog(spark, str(tmp_path / "out"), registry=zcat.registry)
     for t in order:
-        assert back[t].count() == res.rows[t].count()
+        assert back[t].count() == res.rows[t].count() == written.rows[t]
 
 
-def test_plan_preview_and_seq_resync(spark, zcat):
+def test_plan_preview_and_seq_resync(spark, zcat, tmp_path):
     plan = SamplePlan(fraction=0.5)
     lines = {pl.table: pl for pl in plan_preview(zcat, plan)}
     assert lines["state"].source_rows == 4
     assert lines["state"].target_rows == 2
-    rep = sequence_resync_report({t: zcat[t] for t in ["city", "zeppelin"]}, zcat.registry)
-    assert rep == {"city": 5, "zeppelin": 102}
+    # the resync values are the PK maxima the writes observed
+    written = write_subset(
+        {t: zcat[t] for t in ["city", "zeppelin"]}, zcat.registry, str(tmp_path)
+    )
+    assert sequence_resync_report(written) == {"city": 5, "zeppelin": 102}
 
 
 def test_schema_check_mismatch(spark, zcat, zeppelin_dir, tmp_path):
@@ -341,3 +347,36 @@ def test_compound_fk_closure(spark, tmp_path):
     assert got == [(1, "a"), (2, "b")]
     rows = {t: eng.rows_for_keys(t, k) for t, k in keys.items()}
     assert_integrity(eng, rows)
+
+
+# ---------------------------------------------------------------------------
+# replay vs materialized key sets on the sampled path
+# ---------------------------------------------------------------------------
+
+
+@pytest.mark.parametrize(
+    "sf_dir, keep",
+    [
+        (SF_MED, {"customer", "orders"}),  # the CLI benchmark shape
+        # every table: ~70 s on 4 cores, nearly all of it the replayed
+        # side re-running each table's closure subtree per collect
+        pytest.param(SF_SMALL, None, marks=pytest.mark.slow),
+    ],
+    ids=["sf0.01-customer-orders", "sf0.001-all"],
+)
+def test_sampled_subset_same_keys_replayed_or_materialized(spark, sf_dir, keep):
+    """``create_subset`` on a sampled plan gives the same key sets
+    whether each key set is replayed per consumer or checkpointed once
+    (the CLI's shape): the mode changes how often keys are computed,
+    never which keys."""
+    cat = Catalog(spark, sf_dir)
+    exclude = [t for t in cat.tables() if keep is not None and t not in keep]
+    plan = SamplePlan(fraction=0.05, seed=42, exclude_tables=exclude)
+    replayed = ClosureEngine(cat, materialize_keys=False).create_subset(plan).keys
+    checkpointed = ClosureEngine(cat, materialize_keys=True).create_subset(plan).keys
+    assert sorted(replayed) == sorted(checkpointed)
+    for t, k in replayed.items():
+        kc = sorted(k.columns)
+        a = Counter(tuple(r) for r in k.select(*kc).collect())
+        b = Counter(tuple(r) for r in checkpointed[t].select(*kc).collect())
+        assert a and a == b, t

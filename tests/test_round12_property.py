@@ -234,9 +234,9 @@ def test_closure_materialized_mode_identical_and_scan_bounded(spark):
     returns byte-identical subset/integrity results AND its integrity
     plan scans each table O(1) times — the VERDICT r11 task-3 contract
     (default replay shape executed ~139 scans at runtime; the
-    materialized shape must stay under ~25) — and every lazily
-    checkpointed key set, the child-pulled ones included, is forced by
-    the wave pass."""
+    materialized shape must stay under ~25) — and every key set that
+    gained a contribution, the child-pulled ones included, is already
+    a checkpoint when ``create_subset`` returns it."""
     import re
 
     from rdbms_subsetter_spark.catalog import Catalog
@@ -247,19 +247,15 @@ def test_closure_materialized_mode_identical_and_scan_bounded(spark):
     eng0 = ClosureEngine(cat)
     eng1 = ClosureEngine(cat, materialize_keys=True)
     assert eng0.materialize_keys is False  # auto stays off at test SFs
-    forced: list[str] = []
-    force_in_waves = eng1._force_in_waves
-
-    def spy(keys, fresh):
-        forced.extend(fresh)
-        return force_in_waves(keys, fresh)
-
-    eng1._force_in_waves = spy
-    r0, r1 = flagship_subset(eng0).rows, flagship_subset(eng1).rows
-    # ADVICE r12: the pulled lineitem key set gains no contribution in
-    # the re-close, so only the wave pass can materialize its lazy
-    # checkpoint before a consumer (possibly a broadcast build) does
-    assert "lineitem" in forced, forced
+    res1 = flagship_subset(eng1)
+    r0, r1 = flagship_subset(eng0).rows, res1.rows
+    # the seed-only orders set gains no contribution; every other set
+    # is computed once, where it is made, and reused by every consumer
+    roots = {
+        t: k._jdf.queryExecution().analyzed().nodeName()
+        for t, k in res1.keys.items() if t != "orders"
+    }
+    assert roots and set(roots.values()) == {"LogicalRDD"}, roots
     assert sorted(r0) == sorted(r1)
     for t in r0:
         kc = sorted(r0[t].columns)
