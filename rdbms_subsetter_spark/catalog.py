@@ -132,19 +132,6 @@ class Catalog:
             for f in target.glob("*.parquet")
         )
 
-    def input_bytes(self, name: str) -> int:
-        """On-disk bytes of a table (file or directory of files) — no
-        Spark job; scale probes (e.g. the closure engine's
-        materialization switch) size themselves from this."""
-        target = Path(self.path(name))
-        if target.is_file():
-            return target.stat().st_size
-        return sum(f.stat().st_size for f in target.glob("*.parquet"))
-
-    def total_input_bytes(self) -> int:
-        """Sum of :meth:`input_bytes` over every discovered table."""
-        return sum(self.input_bytes(t) for t in self.tables())
-
     def schema_check(self, other: "Catalog") -> None:
         """Source/destination structural equality (reference op #19:
         ``Db.assign_target`` errors on mismatched reflection)."""

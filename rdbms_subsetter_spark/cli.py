@@ -15,13 +15,13 @@ forms, op #14), --full-tables / --exclude-tables policies (op #13),
 plan preview + confirm prompt unless --yes (op #18), and a sequence-
 resync report after the write (op #17).  The engine behind it is the
 set-at-a-time closure (semi-join fixpoint), not the reference's
-row-at-a-time recursion: one ``ClosureEngine.create_subset`` run with
-``materialize_keys=True``, since the CLI runs one write action per
-table and each would otherwise replay the whole closure.  The written
-row counts and the sequence-resync values are observed on the writes
-themselves (``writer.write_subset``), so they cost no Spark job; the
-integrity check re-reads the written tables, and with no FK edge
-between them it reports 0 violations.
+row-at-a-time recursion: one ``ClosureEngine.create_subset`` run,
+whose key sets are each computed once where they are made, so the
+one write action per table reads them instead of replaying the whole
+closure.  The written row counts and the sequence-resync values are
+observed on the writes themselves (``writer.write_subset``), so they
+cost no Spark job; the integrity check re-reads the written tables,
+and with no FK edge between them it reports 0 violations.
 """
 
 from __future__ import annotations
@@ -168,7 +168,7 @@ def main(argv: list[str] | None = None) -> int:
         k = _force_keys(cat, table, col, val)
         seeds[table] = seeds[table].unionByName(k).distinct() if table in seeds else k
 
-    eng = ClosureEngine(cat, materialize_keys=True)
+    eng = ClosureEngine(cat)
     result = eng.create_subset(plan, seeds=seeds or None)
     if dest_is_jdbc:
         from rdbms_subsetter_spark.sources.io import read_jdbc

@@ -21,18 +21,16 @@ Reference semantics preserved:
   keys — parent edges into them are not followed out of them either.
 
 Scale notes (100 TB): only *key sets* flow between iterations (PK
-columns, distinct — orders of magnitude smaller than rows); each
-fixpoint iteration is one Spark job; key sets are ``localCheckpoint``-ed
-per iteration to stop lineage growth (the real scale risk of iterative
-Spark); the final materialization is one ``left_semi`` join per table,
-which AQE turns into a broadcast join whenever the key set is small.
-Above :data:`CLOSURE_MATERIALIZE_BYTES` of input (and always in the
-CLI, which runs one write action per table) the engine additionally
-materializes each table's merged key set ONCE, where it is made (an
-eager ``localCheckpoint``), so downstream consumers — every written
-table, every FK edge of the integrity check, every summary count
-branch — reuse one computed relation instead of replaying the closure
-subtree per branch.
+columns, distinct — orders of magnitude smaller than rows).  Every key
+set that gains a contribution is computed ONCE, where it is made, as
+an eager ``localCheckpoint``: each parent-closure merge, each
+child-pull edge, and each cyclic fixpoint iteration (which also stops
+lineage growth, the real scale risk of iterative Spark).  Downstream
+consumers — every written table, every FK edge of the integrity check,
+every summary count branch — reuse that computed relation instead of
+replaying the closure subtree per branch.  The final materialization
+is one ``left_semi`` join per table, which AQE turns into a broadcast
+join whenever the key set is small.
 
 :meth:`ClosureEngine.create_subset` is the one seed → close → pull →
 close driver: the CLI and the flagship registry entries
@@ -49,39 +47,6 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from rdbms_subsetter_spark.catalog import Catalog
 from rdbms_subsetter_spark.constraints import ConstraintRegistry, ForeignKey
 from rdbms_subsetter_spark.sampling import SamplePlan, sample_exact_n
-
-#: Input-size threshold (bytes) above which the engine materializes
-#: each table's merged key set once (an eager ``localCheckpoint`` where
-#: the set is made) instead of letting every downstream branch replay
-#: the closure subtree.  The two shapes return identical results; for
-#: a query that runs ONE action (every registered entry), which is
-#: faster depends on scale:
-#:
-#: * BELOW the threshold (the sf0.1 bench and every test SF) the
-#:   replayed-subtree plan wins: recompute is cheap, the branches run
-#:   concurrently inside one job across all cores, and each
-#:   materialization is a serializing driver action (~0.2 s fixed cost
-#:   × ~16 key sets ≈ the whole query's runtime — measured r11: eager
-#:   3.77→7.07 s, lazy →4.88 s; re-measured r12: lazy 4.6→8.6 s warm).
-#:   A lazy ``localCheckpoint`` is no cheaper than an eager one: under
-#:   AQE it runs every shuffle and broadcast stage of the set on the
-#:   calling thread when it is made, leaving only the final stage.
-#: * ABOVE it the replay is the scale-killer the r11 verdict flagged:
-#:   the flagship integrity plan executes ~139 parquet scans at
-#:   runtime (232 statically; AQE exchange reuse dedups only the
-#:   branches whose column pruning left them canonically identical),
-#:   i.e. each table's closure subtree — sampling windows, semi-join
-#:   chains — re-runs per FK edge.  Materializing each key set once
-#:   makes that O(#tables + #edges) scans total, at the cost of the
-#:   fixed per-action overhead that is noise at real scale.
-#:
-#: The crossover sits where one table scan costs about as much as a
-#: driver action round-trip; 16 GiB total input is a conservative
-#: floor for that on any real cluster.  A caller that runs one action
-#: per table (the CLI's writes) materializes at every scale; tests and
-#: plan dumps force the scale shape the same way, with
-#: ``ClosureEngine(..., materialize_keys=True)``.
-CLOSURE_MATERIALIZE_BYTES = 16 << 30
 
 
 def _key_cols(registry: ConstraintRegistry, catalog: Catalog, table: str) -> list[str]:
@@ -119,30 +84,14 @@ class SubsetResult:
 
 
 class ClosureEngine:
-    def __init__(
-        self,
-        catalog: Catalog,
-        registry: ConstraintRegistry | None = None,
-        materialize_keys: bool | None = None,
-    ):
-        """``materialize_keys``: checkpoint each table's key set
-        eagerly where it is made (each parent-closure merge that gained
-        a contribution, each child-pull edge) instead of replaying its
-        subtree per consumer branch.  Default ``None`` auto-selects by
-        total input size (see :data:`CLOSURE_MATERIALIZE_BYTES`) —
-        False at every test/bench SF, True at cluster scale; a caller
-        that runs one action per table passes True."""
+    """Set-at-a-time FK closure over ``catalog`` under ``registry``
+    (default: the catalog's).  Each key set that gains a contribution
+    is one eager ``localCheckpoint`` where it is made, so every
+    consumer reuses it instead of replaying its closure subtree."""
+
+    def __init__(self, catalog: Catalog, registry: ConstraintRegistry | None = None):
         self.catalog = catalog
         self.registry = registry or catalog.registry
-        if materialize_keys is None:
-            try:
-                materialize_keys = (
-                    catalog.total_input_bytes() > CLOSURE_MATERIALIZE_BYTES
-                )
-            except OSError:
-                # stat failure: replay shape — the conservative default
-                materialize_keys = False
-        self.materialize_keys = materialize_keys
 
     # ------------------------------------------------------------------
     def rows_for_keys(self, table: str, keys: DataFrame) -> DataFrame:
@@ -193,12 +142,12 @@ class ClosureEngine:
         """Propagate required keys child→parent until every FK of every
         selected row resolves (reference op #9, set-at-a-time).
 
-        Acyclic tables get a purely declarative treatment: each table's
-        final key set is built ONCE as ``distinct(existing ∪ all child
-        contributions)`` in children-first SCC order, so the resulting
-        plan is a shallow tree of semi-joins that Catalyst/AQE optimizes
-        as one unit (broadcasts the small key sides, no driver-side
-        iteration, no materialization).  Only genuine FK cycles (incl.
+        Acyclic tables need no driver-side iteration: each table's final
+        key set is built ONCE as ``distinct(existing ∪ all child
+        contributions)`` in children-first SCC order and, when it
+        gained a contribution, checkpointed there, so every parent
+        edge and later consumer reads one computed relation (AQE
+        broadcasts the small key sides).  Only genuine FK cycles (incl.
         self-refs) fall back to the fixpoint loop, where each iteration
         anti-joins against already-selected keys (the set equivalent of
         the reference's ``_exists`` recursion base case) and
@@ -221,7 +170,7 @@ class ClosureEngine:
                 merged = merged.unionByName(d)
             if len(dfs) > 1:
                 merged = merged.distinct()
-            if self.materialize_keys and contribs:
+            if contribs:
                 # computed once, here: every later branch reuses the
                 # checkpointed partitions instead of replaying this
                 # table's whole closure subtree.  Only plans that
@@ -361,14 +310,11 @@ class ClosureEngine:
                 .select(*child_pk)
             )
             if fk.table in keys:
-                keys[fk.table] = keys[fk.table].unionByName(picked).distinct()
-            else:
-                keys[fk.table] = picked
-            if self.materialize_keys:
-                # the window top-k subtree is the most expensive key
-                # plan in the pipeline; at scale it must run once, not
-                # once per downstream FK edge/count branch.
-                keys[fk.table] = keys[fk.table].localCheckpoint(eager=True)
+                picked = keys[fk.table].unionByName(picked).distinct()
+            # the window top-k subtree is the most expensive key plan in
+            # the pipeline: it runs once, not once per downstream FK
+            # edge or count branch.
+            keys[fk.table] = picked.localCheckpoint(eager=True)
         return keys
 
     # ------------------------------------------------------------------

@@ -812,8 +812,9 @@ def connected_components(
             )
             .filter(F.col("u") != F.col("v"))
             .distinct()
-            # lazy: the n_part count() below is the materializing action
-            # (one job instead of checkpoint-job + count-job, r11)
+            # lazy, but under AQE making it already runs the distinct's
+            # shuffle stage; only the final stage waits for the n_part
+            # count() below, which fills the checkpoint
             .localCheckpoint(eager=False)
         )
         # iterative rounds over a label/edge set sized ∝ nodes: per-round
@@ -843,7 +844,9 @@ def connected_components(
         .union(edges.select(F.col(right).alias("src"), F.col(left).alias("dst")))
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        # lazy checkpoint: round 1 materializes it; reused every round
+        # lazy, but under AQE making it already runs the distinct's
+        # shuffle stage; round 1 fills the checkpoint, every round
+        # reuses it
         .localCheckpoint(eager=False)
     )
     labels = (
@@ -865,8 +868,9 @@ def connected_components(
                 F.least(F.col("label"), F.coalesce("nbr_min", "label")).alias("label"),
                 (F.col("nbr_min") < F.col("label")).alias("changed"),
             )
-            # lazy: the n_changed count below materializes it (one job
-            # per round instead of two, r11)
+            # lazy, but under AQE making it already runs the round's
+            # join and aggregation stages; only the final stage waits
+            # for the n_changed count below, which fills the checkpoint
             .localCheckpoint(eager=False)
         )
         n_changed = stepped.filter(F.col("changed")).count()
@@ -964,8 +968,9 @@ def _cc_star_labels(e: DataFrame, max_iter: int) -> DataFrame:
             .select("s.u", "s.v")
             .filter(F.col("u") != F.col("v"))
             .distinct()
-            # lazy: the n_part count() below is the materializing action
-            # (one job instead of checkpoint-job + count-job, r11)
+            # lazy, but under AQE making it already runs the round's
+            # shuffle stages; only the final stage waits for the
+            # checksum below, which fills the checkpoint
             .localCheckpoint(eager=False)
         )
         cur = checksum(small)

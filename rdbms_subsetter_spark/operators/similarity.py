@@ -488,6 +488,9 @@ def cosine_near_dup_pairs(
             F.col("bb.band").alias("band"),
             F.col("bb.bucket").alias("bucket"),
         )
+        # lazy: under AQE any shuffle or broadcast stage of the corpus
+        # plan runs when the checkpoint is made; the first action over
+        # the pair join below fills it, and both join sides read it
         .localCheckpoint(eager=False)
     )
     a = long.select(

@@ -58,14 +58,10 @@ def flagship_subset(eng: ClosureEngine) -> SubsetResult:
     of keys.  Deterministic (modulo seed predicate + PK-ordered child
     cap), hence the same subset is expressible as :data:`SUBSET_CTES`.
 
-    Whether the key sets are materialized is the engine's scale call
-    (``closure.CLOSURE_MATERIALIZE_BYTES``): at bench/test SFs they
-    are not — each entry runs one action, and the shallow semi-join
-    trees re-execute in parallel inside it, measured 2× faster than
-    any cache/checkpoint variant.  Above the threshold each key set is
-    checkpointed once, eagerly, where it is made, so the
-    integrity/summary branches stop replaying the closure subtree per
-    FK edge.
+    Like every engine run, each key set that gains a contribution is
+    checkpointed once, eagerly, where it is made, so the integrity and
+    summary branches read it instead of replaying the closure subtree
+    per FK edge.
     """
     li_edge = [
         fk for fk in eng.registry.fks

@@ -9,8 +9,18 @@ timezone) are the ones we would set cluster-wide at 100 TB, with
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
+
+
+def _worker_pythonpath() -> str:
+    """The directory holding this package, then any inherited
+    ``PYTHONPATH``: Python workers need the package on their path to
+    unpickle UDFs that reference it, whatever the driver's cwd."""
+    root = str(Path(__file__).resolve().parents[1])
+    inherited = os.environ.get("PYTHONPATH", "").split(os.pathsep)
+    return os.pathsep.join([root] + [p for p in inherited if p and p != root])
 
 
 def get_spark(app_name: str = "rdbms_subsetter_spark") -> SparkSession:
@@ -36,6 +46,7 @@ def get_spark(app_name: str = "rdbms_subsetter_spark") -> SparkSession:
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")
         .config("spark.executorEnv.MKL_NUM_THREADS", "1")
+        .config("spark.executorEnv.PYTHONPATH", _worker_pythonpath())
         # managed-table root (bucketed layouts) — scratch space, not cwd
         .config(
             "spark.sql.warehouse.dir",

@@ -7,7 +7,6 @@ test_subsetter.py asserts (SURVEY.md §5), re-expressed set-at-a-time.
 from __future__ import annotations
 
 import datetime as dt
-from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -350,33 +349,57 @@ def test_compound_fk_closure(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# replay vs materialized key sets on the sampled path
+# sampled-path key sets against pinned values
 # ---------------------------------------------------------------------------
+
+#: Per-table ``(key count, sum of xxhash64 over the sorted key columns)``
+#: of ``create_subset(SamplePlan(fraction=0.05, seed=42))``, pinned from
+#: the engine's former replay shape, which re-ran each table's closure
+#: subtree per consumer instead of checkpointing it.
+_SAMPLED_KEY_PINS = {
+    SF_MED: {
+        "customer": (625, -128872343754388380867),
+        "orders": (2390, 536738925902252604308),
+    },
+    SF_SMALL: {
+        "customer": (149, 11002404460938056748),
+        "documents": (25, 17547225408598851933),
+        "embeddings": (25, 17547225408598851933),
+        "events": (94, 70184905581711121179),
+        "lineitem": (2092, 118014144337876702547),
+        "nation": (25, 22486007333088700813),
+        "orders": (686, -85398646106622357496),
+        "part": (199, 58328329422377945115),
+        "region": (5, 3249578026290709353),
+        "supplier": (10, -10285274824041473600),
+    },
+}
+
+
+def _key_digest(keys) -> tuple[int, int]:
+    """Order-independent fingerprint of a key set: its row count and
+    the sum of each row's xxhash64 over the sorted key columns."""
+    hashes = [r[0] for r in keys.select(F.xxhash64(*sorted(keys.columns))).collect()]
+    return len(hashes), sum(hashes)
 
 
 @pytest.mark.parametrize(
     "sf_dir, keep",
     [
         (SF_MED, {"customer", "orders"}),  # the CLI benchmark shape
-        # every table: ~70 s on 4 cores, nearly all of it the replayed
-        # side re-running each table's closure subtree per collect
         pytest.param(SF_SMALL, None, marks=pytest.mark.slow),
     ],
     ids=["sf0.01-customer-orders", "sf0.001-all"],
 )
-def test_sampled_subset_same_keys_replayed_or_materialized(spark, sf_dir, keep):
-    """``create_subset`` on a sampled plan gives the same key sets
-    whether each key set is replayed per consumer or checkpointed once
-    (the CLI's shape): the mode changes how often keys are computed,
-    never which keys."""
+def test_sampled_subset_keys_match_replay_pins(spark, sf_dir, keep):
+    """``create_subset`` on a sampled plan, with every key set
+    checkpointed once where it is made, selects exactly the keys the
+    replay shape selected: checkpointing changes how often keys are
+    computed, never which keys."""
     cat = Catalog(spark, sf_dir)
     exclude = [t for t in cat.tables() if keep is not None and t not in keep]
     plan = SamplePlan(fraction=0.05, seed=42, exclude_tables=exclude)
-    replayed = ClosureEngine(cat, materialize_keys=False).create_subset(plan).keys
-    checkpointed = ClosureEngine(cat, materialize_keys=True).create_subset(plan).keys
-    assert sorted(replayed) == sorted(checkpointed)
-    for t, k in replayed.items():
-        kc = sorted(k.columns)
-        a = Counter(tuple(r) for r in k.select(*kc).collect())
-        b = Counter(tuple(r) for r in checkpointed[t].select(*kc).collect())
-        assert a and a == b, t
+    keys = ClosureEngine(cat).create_subset(plan).keys
+    got = {t: _key_digest(k) for t, k in sorted(keys.items())}
+    assert got == _SAMPLED_KEY_PINS[sf_dir]
+    assert all(n > 0 for n, _ in got.values())

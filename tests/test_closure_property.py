@@ -19,9 +19,7 @@ from rdbms_subsetter_spark.constraints import ConstraintRegistry, ForeignKey
 
 class DictCatalog:
     """Minimal in-memory catalog (no parquet round-trip) — enough for
-    the close_parents/rows_for_keys/integrity paths.  It has no files
-    to size, so engines over it name the replay shape
-    (``materialize_keys=False``) instead of probing input bytes."""
+    the close_parents/rows_for_keys/integrity paths."""
 
     def __init__(self, dfs: dict, registry: ConstraintRegistry):
         self._dfs = dfs
@@ -52,7 +50,7 @@ def test_composite_fk_closure(spark):
         fks=[ForeignKey("shipment", ("ship_okey", "ship_lineno"), "order_line", ("okey", "lineno"))],
     )
     cat = DictCatalog({"order_line": order_line, "shipment": shipment}, registry)
-    eng = ClosureEngine(cat, materialize_keys=False)
+    eng = ClosureEngine(cat)
     seed = shipment.filter(F.col("ship_id").isin([10, 12, 13])).select("ship_id")
     keys = eng.close_parents({"shipment": seed})
     got = {
@@ -112,7 +110,7 @@ def test_closure_integrity_on_random_graphs(spark, data):
     )
 
     cat = DictCatalog(dfs, registry)
-    eng = ClosureEngine(cat, materialize_keys=False)
+    eng = ClosureEngine(cat)
     seed = dfs[seed_table].filter(F.col("id").isin(seed_ids)).select("id")
     keys = eng.close_parents({seed_table: seed})  # (a) terminates
 
@@ -189,7 +187,7 @@ def test_incremental_delta_on_random_graphs(spark, data):
         new_ids = [all_ids[0]]
 
     cat = DictCatalog(dfs, registry)
-    eng = ClosureEngine(cat, materialize_keys=False)
+    eng = ClosureEngine(cat)
 
     def seed(ids):
         return dfs[seed_table].filter(F.col("id").isin(ids)).select("id")

@@ -200,3 +200,32 @@ def test_streaming_asof_enrich_is_stateless(spark):
     out = se.streaming_asof_enrich(spark, SF_SMALL, progress_out=progress)
     assert out.count() > 0
     assert progress.get("n_state_operators") == 0, progress
+
+
+def test_udf_entry_runs_from_another_cwd(tmp_path):
+    """Python workers import the package whatever the driver's cwd:
+    ``get_spark`` puts the package root on the workers' PYTHONPATH.  A
+    UDF entry run from outside the repo, with PYTHONPATH unset and the
+    package reachable only through the driver's ``sys.path``, used to
+    fail in the workers with ModuleNotFoundError."""
+    from tests.conftest import SF_SMALL
+
+    code = textwrap.dedent(
+        f"""
+        import sys
+        sys.path.insert(0, {REPO!r})
+        from rdbms_subsetter_spark.queries import QUERIES
+        from rdbms_subsetter_spark.session import get_spark
+
+        spark = get_spark("worker-path")
+        assert QUERIES["knn_graph_blocked"](spark, {SF_SMALL!r}).count() > 0
+        spark.stop()
+        """
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="2g")
+    proc = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]

@@ -40,9 +40,9 @@ COMMENTARY = {
     "subset_summary": (
         "Flagship FK-closure subset. Wanted: a shallow tree of left_semi joins "
         "(AQE broadcasts the small key sides), count branches run in parallel "
-        "inside one union plan; key sets not materialized BELOW "
-        "closure.CLOSURE_MATERIALIZE_BYTES (replay is faster at bench SFs), "
-        "materialized once per pass above it (r12 scale-adaptive switch)."
+        "inside one union plan; every key set that gained a contribution is "
+        "a LogicalRDD checkpoint made once where it is computed, so no branch "
+        "replays the closure subtree."
     ),
     "sql_exists_subquery": (
         "Correlated EXISTS from the SQL surface. Wanted: RewritePredicateSubquery "
