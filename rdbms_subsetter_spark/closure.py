@@ -195,13 +195,10 @@ class ClosureEngine:
         # sccs() is parents-first; requirements flow child→parent
         for comp in reversed(reg.sccs()):
             comp_set = set(comp)
-            cyclic = len(comp) > 1 or any(
-                fk.table == fk.ref_table == comp[0] for fk in reg.fks
-            )
             for table in comp:
                 if table not in exclude:
                     merge(table)
-            if cyclic:
+            if reg.has_cycle(comp[0]):
                 while True:
                     grew = False
                     for table in comp:

@@ -4,7 +4,7 @@ Spark has no native FK metadata, so this module is the Spark-side
 replacement for the reference's reflection step
 (``subsetter.py::Db.__init__`` — ``Inspector.get_pk_constraint`` /
 ``get_foreign_keys`` plus the ``--config`` JSON merge of pseudo-FK
-"constraints").  The registry is a plain JSON-serializable store with
+"constraints").  The registry is a plain store loaded from JSON in
 the same dict shape as SQLAlchemy's Inspector output, extended with
 PKs, plus graph utilities the set-at-a-time engine needs:
 
@@ -38,14 +38,6 @@ class ForeignKey:
     columns: tuple[str, ...]
     ref_table: str
     ref_columns: tuple[str, ...]
-
-    def as_dict(self) -> dict:
-        return {
-            "table": self.table,
-            "constrained_columns": list(self.columns),
-            "referred_table": self.ref_table,
-            "referred_columns": list(self.ref_columns),
-        }
 
     @classmethod
     def from_dict(cls, d: dict) -> "ForeignKey":
@@ -81,17 +73,6 @@ class ConstraintRegistry:
         return cls(
             pks={t: tuple(cols) for t, cols in data.get("primary_keys", {}).items()},
             fks=[ForeignKey.from_dict(d) for d in data.get("constraints", [])],
-        )
-
-    def to_json(self, path: str | Path) -> None:
-        Path(path).write_text(
-            json.dumps(
-                {
-                    "primary_keys": {t: list(c) for t, c in self.pks.items()},
-                    "constraints": [fk.as_dict() for fk in self.fks],
-                },
-                indent=2,
-            )
         )
 
     def merge_config(self, extra: "ConstraintRegistry") -> "ConstraintRegistry":

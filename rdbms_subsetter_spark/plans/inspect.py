@@ -60,14 +60,11 @@ def wholestage_codegen_spans(df: DataFrame) -> int:
     QueryExecution, and the conf is restored."""
     from pyspark.sql import functions as F
 
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    from rdbms_subsetter_spark.session import conf_window
+
+    with conf_window(df.sparkSession, {"spark.sql.adaptive.enabled": "false"}):
         replanned = df.filter(F.lit(True))
         m = re.search(
             r"Found (\d+) WholeStageCodegen subtrees", physical_plan(replanned, "codegen")
         )
         return int(m.group(1)) if m else 0
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)

@@ -2,21 +2,39 @@
 Structured Streaming twins: tumbling and sliding windows, sessions,
 as-of joins, funnels, retention and cohorts, attribution, anomaly and
 changepoint scans, interpolation, gap filling and downsampling,
-CDC/SCD2 and incremental aggregate maintenance, and the stateful
-streaming operators of ``streaming.events``.
+CDC/SCD2 and incremental aggregate maintenance.
+
+Every ``streaming_*`` entry is a bounded replay (the stream sources and
+stateful building blocks of ``streaming.events``) whose final sink
+equals a batch query, so each one is hash-checked against a DuckDB
+oracle like any batch entry.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
+import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from rdbms_subsetter_spark.catalog import Catalog
-from rdbms_subsetter_spark.operators import joins
+from rdbms_subsetter_spark.operators import joins, text as text_ops
 from rdbms_subsetter_spark.queries import register
 from rdbms_subsetter_spark.queries.text import _RAW_TOKS
-from rdbms_subsetter_spark.streaming import events as streaming_events
+from rdbms_subsetter_spark.session import conf_window, stable_suffix
+from rdbms_subsetter_spark.streaming.events import (
+    documents_stream,
+    events_stream,
+    hourly_agg,
+    run_stream_to_memory,
+    session_windows,
+    sliding_agg,
+    stateful_user_totals,
+    stateful_user_totals_v2,
+    transform_with_state_available,
+)
 
 
 @register("events_hourly", oracle="""
@@ -85,10 +103,28 @@ SELECT date_trunc('hour', ts) AS hour_start, event_type,
 FROM events GROUP BY 1, 2
 """)
 def q_streaming_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Structured Streaming twin of q_events_hourly.  Complete-mode
-    bounded replay emits every window, so the result equals the batch
-    aggregate and is hash-checked against the same DuckDB oracle."""
-    return streaming_events.streaming_hourly_counts(spark, sf_dir)
+    """Structured Streaming twin of q_events_hourly: replay events,
+    watermark, tumbling hourly agg, memory sink.
+
+    Complete mode on purpose: with ``outputMode("append")`` the final
+    (still-open) windows are withheld pending watermark advance, so a
+    bounded replay would be missing the tail hours; complete mode emits
+    every window, which makes the result EQUAL to the batch hourly
+    aggregate — and therefore hash-checked against the same DuckDB
+    oracle.  Append-mode watermark eviction semantics are covered
+    separately in tests/test_streaming.py.
+    """
+    out = run_stream_to_memory(
+        spark,
+        hourly_agg(events_stream(spark, sf_dir)),
+        name="stream_hourly_counts",
+        output_mode="complete",
+        # hours x event_types of window state: 2 partitions (measured
+        # 1.8 -> 1.3 s; the python-stateful entries keep 8 for worker
+        # parallelism)
+        state_partitions=2,
+    )
+    return out.orderBy("hour_start", "event_type")
 
 
 @register("asof_join_latest_order", oracle="""
@@ -184,9 +220,17 @@ FROM (SELECT time_bucket(INTERVAL '30 minutes', ts) - INTERVAL '30 minutes' * k 
 GROUP BY ws, event_type
 """)
 def q_streaming_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Structured Streaming twin of q_events_sliding; complete-mode
-    bounded replay equals the batch sliding aggregate -> same oracle."""
-    return streaming_events.streaming_sliding_counts(spark, sf_dir)
+    """Structured Streaming twin of q_events_sliding — complete mode
+    (same reasoning as q_streaming_hourly), so the bounded replay equals
+    the batch sliding aggregate and shares its DuckDB oracle."""
+    out = run_stream_to_memory(
+        spark,
+        sliding_agg(events_stream(spark, sf_dir)),
+        name="stream_sliding_counts",
+        output_mode="complete",
+        state_partitions=2,  # sliding-window state (measured 1.5 -> 1.3 s)
+    )
+    return out.orderBy("window_start", "event_type")
 
 
 # ---------------------------------------------------------------------------
@@ -214,10 +258,21 @@ SELECT min(ts) AS session_start,
 FROM sessions GROUP BY user_id, sid
 """)
 def q_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Native session windows over the replayed stream; complete-mode
-    bounded replay equals batch gap-sessionization (session_end = last
-    event + gap), so it is hash-checked against the DuckDB oracle."""
-    return streaming_events.streaming_session_counts(spark, sf_dir)
+    """End-to-end native session windows over the replayed event stream.
+
+    Complete mode on purpose (same reasoning as q_streaming_hourly):
+    append mode withholds sessions whose gap the watermark has not yet
+    passed, so a bounded replay would lose the tail; complete mode emits
+    every session, making the result equal to the batch gaps-and-islands
+    sessionization (session_end = last event + gap) — DuckDB-checkable.
+    Append-mode emission semantics stay covered in test_streaming.py."""
+    out = run_stream_to_memory(
+        spark,
+        session_windows(events_stream(spark, sf_dir)),
+        name="stream_session_counts",
+        output_mode="complete",
+    )
+    return out.orderBy("session_start", "user_id")
 
 
 @register("streaming_stateful_totals", oracle="""
@@ -225,10 +280,30 @@ SELECT user_id, count(*) AS n_events, round(sum(value), 2) AS sum_value
 FROM events GROUP BY user_id
 """)
 def q_streaming_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """applyInPandasWithState running totals; after the bounded replay
-    the final state per user equals the batch aggregate, so this
-    streaming query IS DuckDB-checkable."""
-    return streaming_events.streaming_stateful_totals(spark, sf_dir)
+    """End-to-end custom stateful operator run (applyInPandasWithState):
+    final running totals per user after the bounded replay (update mode
+    → keep each user's last emission), which equal the batch aggregate,
+    so this streaming query IS DuckDB-checkable."""
+    # State partitions sized to the session's cores (r12, VERDICT r11
+    # task 7): the batch cost here is python per-GROUP work inside
+    # applyInPandasWithState, which parallelizes across partitions,
+    # while each partition adds fixed store open/commit overhead.
+    # Measured min-of-3 at sf0.1: 32 cores — 8 parts 1.73 s, 16 parts
+    # 1.49 s, 32 parts 1.60 s; 8 cores — 4 parts 2.50 s, 8 parts
+    # 1.81 s, 16 parts 2.12 s.  cores/2 (floor 8, cap 64) picks the
+    # winner at both; results are partitioning-independent.
+    par = spark.sparkContext.defaultParallelism
+    out = run_stream_to_memory(
+        spark,
+        stateful_user_totals(events_stream(spark, sf_dir)),
+        name="stream_stateful_totals",
+        output_mode="update",
+        state_partitions=max(8, min(64, par // 2)),
+    )
+    return out.groupBy("user_id").agg(
+        F.max("n_events").alias("n_events"),
+        F.max("sum_value").alias("sum_value"),
+    )
 
 
 @register("events_rollup_daily", oracle="""
@@ -335,9 +410,25 @@ def q_events_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
 SELECT DISTINCT user_id, event_type FROM events
 """)
 def q_streaming_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming dropDuplicates over the replayed event stream; bounded
-    replay makes the emitted set equal batch DISTINCT → oracle-checked."""
-    return streaming_events.streaming_dedup_keys(spark, sf_dir)
+    """Streaming deduplication: distinct (user_id, event_type) pairs via
+    ``dropDuplicates`` on the replayed stream (append mode — each key is
+    emitted exactly once, on first sight).
+
+    After a bounded replay the emitted set equals batch
+    ``SELECT DISTINCT``, so this streaming query is DuckDB-checkable.
+    At scale the state store grows with key cardinality; for unbounded
+    key spaces the production form is ``dropDuplicatesWithinWatermark``
+    (q_streaming_dedup_ttl).
+    """
+    keys = events_stream(spark, sf_dir).select("user_id", "event_type")
+    out = run_stream_to_memory(
+        spark,
+        keys.dropDuplicates(["user_id", "event_type"]),
+        name="stream_dedup_keys",
+        output_mode="append",
+        state_partitions=2,  # key-pair state only (measured 1.0 -> 0.6 s)
+    )
+    return out
 
 
 @register("streaming_static_join", oracle="""
@@ -348,9 +439,28 @@ FROM events JOIN customer ON user_id = c_custkey
 GROUP BY c_mktsegment
 """)
 def q_streaming_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-static enrichment join + complete-mode aggregation;
-    bounded replay ≡ the batch join+agg → oracle-checked."""
-    return streaming_events.streaming_static_join(spark, sf_dir)
+    """Stream-static join: the event stream enriched with the static
+    customer dimension (no watermark needed — the static side is simply
+    looked up per micro-batch, broadcast by AQE), then aggregated per
+    market segment in complete mode.
+
+    The canonical streaming-enrichment shape at scale: the dimension is
+    re-resolved every batch, so slowly-changing dims are picked up
+    without restarts.  Bounded replay ≡ the batch join+agg → oracle.
+    """
+    ev = events_stream(spark, sf_dir)
+    cust = Catalog(spark, sf_dir)["customer"].select("c_custkey", "c_mktsegment")
+    agg = (
+        ev.join(cust, ev["user_id"] == cust["c_custkey"])
+        .groupBy("c_mktsegment")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.round(F.sum("value"), 2).alias("sum_value"),
+        )
+    )
+    return run_stream_to_memory(
+        spark, agg, name="stream_static_join", output_mode="complete"
+    )
 
 
 @register("streaming_foreachbatch", oracle="""
@@ -363,10 +473,40 @@ FROM events WHERE value > 50.0
 GROUP BY event_type
 """)
 def q_streaming_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """foreachBatch parquet sink (batchId-keyed idempotent writes),
-    read back and aggregated; bounded replay ≡ the batch filter →
-    oracle-checked."""
-    return streaming_events.streaming_foreachbatch_sink(spark, sf_dir)
+    """foreachBatch sink: each micro-batch is written to a parquet
+    directory through the batch writer API — the pattern for sinks
+    Structured Streaming has no native writer for (JDBC, MERGE
+    targets...).  batchId is the idempotence key: reprocessed batches
+    overwrite their own subdirectory instead of double-appending
+    (exactly-once on top of at-least-once delivery).
+
+    The sink is read back and aggregated; bounded replay → the sink
+    holds exactly the filtered stream → DuckDB-checkable.
+    """
+    out_dir = os.path.join(
+        tempfile.gettempdir(), f"rss_febatch_{stable_suffix(sf_dir)}"
+    )
+    shutil.rmtree(out_dir, ignore_errors=True)
+
+    ev = events_stream(spark, sf_dir).filter(F.col("value") > 50.0).select(
+        "event_id", "user_id", "event_type", F.round("value", 2).alias("value")
+    )
+
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
+
+    q = ev.writeStream.foreachBatch(write_batch).outputMode("append").start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    sunk = spark.read.option("basePath", out_dir).parquet(f"{out_dir}/batch_id=*")
+    return sunk.groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.round(F.sum("value"), 2).alias("sum_value"),
+        F.min("event_id").alias("min_event"),
+        F.max("event_id").alias("max_event"),
+    )
 
 
 @register("events_funnel", oracle="""
@@ -474,10 +614,49 @@ FROM events c JOIN events p
 WHERE c.event_type = 'click' AND p.event_type = 'purchase'
 """)
 def q_streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Watermarked stream-stream inner join (clicks × purchases within
-    1 hour, per user); bounded replay emits exactly the batch interval
-    join → oracle-checked."""
-    return streaming_events.streaming_stream_join(spark, sf_dir)
+    """Stream-stream inner join with event-time bounds: each click joined
+    to the same user's purchases within the following hour.  Both sides
+    carry watermarks and the join condition bounds event time in BOTH
+    directions — that pair is what lets Spark expire join state; without
+    it state grows forever.
+
+    Append-mode inner joins emit every match (the watermark governs
+    state cleanup, not emission), so a bounded replay emits exactly the
+    batch interval join → DuckDB-checkable.  At scale both sides shuffle
+    on user_id once and matching is per-partition; state per key is
+    bounded by the 1h window × arrival rate.
+    """
+    clicks = (
+        events_stream(spark, sf_dir)
+        .filter(F.col("event_type") == "click")
+        .select(
+            "user_id",
+            F.col("event_id").alias("click_id"),
+            F.col("ts").alias("click_ts"),
+        )
+        .withWatermark("click_ts", "1 hour")
+    )
+    purchases = (
+        events_stream(spark, sf_dir)
+        .filter(F.col("event_type") == "purchase")
+        .select(
+            F.col("user_id").alias("p_user_id"),
+            F.col("event_id").alias("purchase_id"),
+            F.col("ts").alias("purchase_ts"),
+        )
+        .withWatermark("purchase_ts", "1 hour")
+    )
+    joined = clicks.join(
+        purchases,
+        F.expr(
+            "user_id = p_user_id AND "
+            "purchase_ts >= click_ts AND "
+            "purchase_ts <= click_ts + INTERVAL 1 HOUR"
+        ),
+    ).select("user_id", "click_id", "purchase_id", "click_ts", "purchase_ts")
+    return run_stream_to_memory(
+        spark, joined, name="stream_stream_join", output_mode="append"
+    )
 
 
 _SQL_EVENTS_INTERPOLATE = """
@@ -757,12 +936,36 @@ def q_streaming_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFr
     """Arbitrary stateful streaming via the Spark 4 transformWithState
     API (StatefulProcessor + typed ValueState) — the successor to
     applyInPandasWithState with composable state variables, timers and
-    TTL.  Same per-user running totals as streaming_stateful_totals, so
-    the bounded replay is DuckDB-checkable against the batch aggregate.
-    Where the env lacks protobuf (the v2 state-server wire format) the
-    run falls back to the applyInPandasWithState twin — same contract,
-    same oracle (see streaming/events.py)."""
-    return streaming_events.streaming_transform_with_state(spark, sf_dir)
+    TTL.  Final running totals per user after the bounded replay (update
+    mode → keep each user's last emission), the same as
+    q_streaming_stateful_totals, so it equals the batch per-user
+    aggregate → oracle-checked.
+
+    The v2 API additionally requires the RocksDB state store (set for
+    this run only, restored after it) and protobuf; where protobuf is
+    missing the query falls back to the applyInPandasWithState operator
+    — identical semantics, same oracle, so the correctness gate grades
+    the same contract either way."""
+    if transform_with_state_available():
+        confs = {
+            "spark.sql.streaming.stateStore.providerClass":
+                "org.apache.spark.sql.execution.streaming.state."
+                "RocksDBStateStoreProvider",
+        }
+        totals = stateful_user_totals_v2
+    else:
+        confs, totals = {}, stateful_user_totals
+    with conf_window(spark, confs):
+        out = run_stream_to_memory(
+            spark,
+            totals(events_stream(spark, sf_dir)),
+            name="stream_transform_with_state",
+            output_mode="update",
+        )
+    return out.groupBy("user_id").agg(
+        F.max("n_events").alias("n_events"),
+        F.max("sum_value").alias("sum_value"),
+    )
 
 
 _SQL_SKEW_REPORT = """
@@ -1286,11 +1489,34 @@ FROM flagged
 
 @register("streaming_curation_funnel", oracle=_SQL_STREAMING_FUNNEL)
 def q_streaming_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Live crawler-ingest quality monitor: the curation funnel's rule
-    stages as one running streaming aggregate (complete-mode replay ≡
-    the batch counts, shared oracle).  See
-    streaming.events.streaming_curation_funnel."""
-    return streaming_events.streaming_curation_funnel(spark, sf_dir)
+    """Streaming ingest-quality monitor: the curation funnel's rule
+    stages (lang → quality → length) as ONE running aggregate over the
+    document stream — what a crawler-ingest dashboard shows live.
+
+    Complete mode: the running totals after a bounded replay equal the
+    batch funnel counts, so the query is DuckDB-oracle-checkable.  The
+    dedup stage is deliberately absent here: count(DISTINCT) is
+    unsupported in streaming aggregation, and its streaming analogue
+    (dropDuplicates state) is covered by q_streaming_dedup_keys.
+    """
+    docs = documents_stream(spark, sf_dir)
+    t = F.col("text")
+    s1 = F.col("lang") == "en"
+    s2 = s1 & (text_ops.quality_score(t) >= 0.5)
+    s3 = s2 & text_ops.token_count(t).between(20, 1000)
+    agg = docs.agg(
+        F.count(F.lit(1)).alias("n_total"),
+        F.sum(s1.cast("long")).alias("n_lang"),
+        F.sum(s2.cast("long")).alias("n_quality"),
+        F.sum(s3.cast("long")).alias("n_length"),
+    )
+    return run_stream_to_memory(
+        spark,
+        agg,
+        name="stream_curation_funnel",
+        output_mode="complete",
+        state_partitions=2,  # one global-aggregate row of state
+    )
 
 
 _SQL_ASOF_NEAREST = """
@@ -1387,15 +1613,58 @@ SELECT DISTINCT user_id, event_type FROM events
 
 @register("streaming_state_introspection", oracle=_SQL_STATE_INTROSPECTION)
 def q_streaming_state_introspection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """See streaming.events.streaming_state_introspection: the Spark 4
-    state data source reads a finished dedup query's state store as a
-    table; dropDuplicates state == the distinct key set == batch
-    DISTINCT (the oracle)."""
-    from rdbms_subsetter_spark.streaming.events import (
-        streaming_state_introspection,
-    )
+    """Read a stateful streaming query's STATE STORE as a table — the
+    Spark 4 state data source (``spark.read.format("statestore")``),
+    the production tool for auditing/debugging stateful pipelines
+    without touching the live query (state cardinality, key skew by
+    partition, stuck-key forensics).
 
-    return streaming_state_introspection(spark, sf_dir)
+    The run: the exactly-once key dedup replays bounded input to a noop
+    sink with a DURABLE checkpoint (``availableNow`` trigger), then the
+    dropDuplicates state files are loaded directly — no replay, no
+    running query.  dropDuplicates state IS the distinct key set, so
+    the read-back equals batch ``SELECT DISTINCT`` → hash-graded
+    against that oracle.
+
+    Scale shape: state files are already partitioned by shuffle
+    partition and the reader is a partition-parallel scan of the store
+    (HDFS/RocksDB-backed), so the audit cost is ∝ state size, never
+    ∝ stream history.  State partitions sized to state volume (4), as
+    fleet-wide for bounded local replays; the checkpoint dir is
+    process-stable (md5 of sf_dir) and wiped per run for a clean
+    deterministic replay."""
+    ckpt = os.path.join(
+        tempfile.gettempdir(), f"rss_state_intro_{stable_suffix(sf_dir)}"
+    )
+    shutil.rmtree(ckpt, ignore_errors=True)
+    keys = (
+        events_stream(spark, sf_dir)
+        .select("user_id", "event_type")
+        .dropDuplicates(["user_id", "event_type"])
+    )
+    with conf_window(spark, {"spark.sql.shuffle.partitions": "4"}):
+        q = (
+            keys.writeStream.format("noop")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            # fail loudly on timeout: a False return means the trigger
+            # did not finish, and reading the statestore from a
+            # partially-processed checkpoint would grade an incomplete
+            # key set silently (same policy as q_streaming_dedup_ttl)
+            if not q.awaitTermination(300):
+                raise TimeoutError(
+                    "state-introspection query did not finish in 300s"
+                )
+        finally:
+            q.stop()
+    state = spark.read.format("statestore").load(ckpt)
+    return state.select(
+        F.col("key.user_id").alias("user_id"),
+        F.col("key.event_type").alias("event_type"),
+    )
 
 
 _SQL_DEDUP_TTL = """
@@ -1407,13 +1676,59 @@ GROUP BY event_type
 
 @register("streaming_dedup_ttl", oracle=_SQL_DEDUP_TTL)
 def q_streaming_dedup_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """See streaming.events.streaming_dedup_ttl: bounded-state streaming
-    dedup (dropDuplicatesWithinWatermark, the unbounded-key-space
-    production form); delay > replay span makes the emitted key set
-    equal batch DISTINCT, graded as per-type unique-user counts."""
-    from rdbms_subsetter_spark.streaming.events import streaming_dedup_ttl
+    """Streaming dedup with BOUNDED state: ``dropDuplicatesWithinWatermark``
+    keeps a key in the store only until the watermark passes its event
+    time plus the delay — the production dedup for UNBOUNDED key spaces
+    (plain dropDuplicates state grows forever).  The plan carries the
+    dedup-within-watermark operator with a state TTL.
 
-    return streaming_dedup_ttl(spark, sf_dir)
+    Graded deterministically: the delay (365 days) exceeds the replay's
+    whole time span, so no key expires mid-replay and the emitted key
+    set equals batch DISTINCT; the projection to key columns before the
+    dedup makes WHICH row wins irrelevant.  The per-type unique-user
+    counts are then a plain batch aggregate over the sink —
+    DuckDB-checkable.  In production the delay is the real dedup
+    horizon (hours), and state is bounded by keys-per-horizon instead
+    of all-keys-ever.
+
+    The delay > span precondition is ASSERTED at runtime (one 1-row
+    aggregate on the static table): on a dataset spanning longer than
+    the delay, expired keys would re-emit and silently overcount vs the
+    batch-DISTINCT oracle — better to fail loudly than grade wrong."""
+    delay_s = 365 * 24 * 3600
+    span_row = (
+        Catalog(spark, sf_dir)["events"]
+        .agg(
+            (
+                F.unix_timestamp(F.max("ts")) - F.unix_timestamp(F.min("ts"))
+            ).alias("span_s")
+        )
+        .collect()[0]
+    )
+    span_s = span_row["span_s"] or 0
+    if span_s >= delay_s:
+        raise ValueError(
+            f"streaming_dedup_ttl: events span {span_s}s >= dedup delay "
+            f"{delay_s}s; emitted keys would no longer equal batch DISTINCT "
+            "(expired keys re-emit). Raise the delay for this dataset."
+        )
+    keys = (
+        events_stream(spark, sf_dir)
+        .select("ts", "user_id", "event_type")
+        .withWatermark("ts", "365 days")
+        .dropDuplicatesWithinWatermark(["user_id", "event_type"])
+        .select("user_id", "event_type")
+    )
+    out = run_stream_to_memory(
+        spark,
+        keys,
+        name="stream_dedup_ttl",
+        output_mode="append",
+        state_partitions=2,
+    )
+    return out.groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n_unique_users")
+    )
 
 
 _SQL_STREAM_JOIN_OUTER = """
@@ -1440,15 +1755,87 @@ FROM c LEFT JOIN p
 
 @register("streaming_stream_join_outer", oracle=_SQL_STREAM_JOIN_OUTER)
 def q_streaming_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """See streaming.events.streaming_stream_join_outer: watermark-
-    evicted null extensions restricted to the provably-complete region
-    (click_ts < floor_s(least(max_click, max_purchase)) − 2 h − 1 s;
-    second-truncated on BOTH sides so the engine's millisecond
-    watermark truncation cannot open a sub-ms disagreement sliver),
-    hash-checked against a batch LEFT JOIN over the same region."""
-    from rdbms_subsetter_spark.streaming.events import streaming_stream_join_outer
+    """Stream-stream LEFT OUTER join: clicks joined to same-user
+    purchases within the following hour; clicks with NO purchase emit a
+    null-extended row once the watermark passes their join window (state
+    eviction is the emission trigger — the semantics inner joins never
+    exercise).
 
-    return streaming_stream_join_outer(spark, sf_dir)
+    Determinism under bounded replay: the GLOBAL watermark is the min
+    over both inputs' per-stream watermarks — least(max click_ts, max
+    purchase_ts) − 1 h — so null rows are guaranteed emitted exactly
+    for clicks whose join window closed before it.  The result is
+    restricted to that fully-determined region, click_ts < watermark −
+    1 h − 1 s, where the watermark is taken from the finished query's
+    OWN progress report (no separate pre-stream scan; the extra second
+    covers Spark's millisecond watermark truncation and
+    eviction-compare strictness, and the oracle truncates its max to
+    the second as well, so no sub-ms disagreement sliver opens): inside
+    it, every match AND every null-extension has provably been emitted,
+    making the output equal to a batch LEFT JOIN over the same region —
+    hash-checkable.  At scale the cut is exactly the "completed region"
+    a production job would publish downstream; the tail stays in state.
+    """
+    # one source instance for both sides (stream-stream SELF-join):
+    # the micro-batch scans the arriving files once, not once per side
+    src = events_stream(spark, sf_dir)
+    clicks = (
+        src.filter(F.col("event_type") == "click")
+        .select(
+            "user_id",
+            F.col("event_id").alias("click_id"),
+            F.col("ts").alias("click_ts"),
+        )
+        .withWatermark("click_ts", "1 hour")
+    )
+    purchases = (
+        src.filter(F.col("event_type") == "purchase")
+        .select(
+            F.col("user_id").alias("p_user_id"),
+            F.col("event_id").alias("purchase_id"),
+            F.col("ts").alias("purchase_ts"),
+        )
+        .withWatermark("purchase_ts", "1 hour")
+    )
+    joined = clicks.join(
+        purchases,
+        F.expr(
+            "user_id = p_user_id AND "
+            "purchase_ts >= click_ts AND "
+            "purchase_ts <= click_ts + INTERVAL 1 HOUR"
+        ),
+        "left_outer",
+    ).select("user_id", "click_id", "purchase_id", "click_ts", "purchase_ts")
+    # state volume at gate scale is ~1e5 rows per side: 2 partitions
+    # keep per-store open/commit overhead (4 stores per partition for an
+    # interval join) off the critical path; results are width-independent
+    progress: dict = {}
+    out = run_stream_to_memory(
+        spark,
+        joined,
+        name="stream_stream_join_outer",
+        output_mode="append",
+        state_partitions=2,
+        progress_out=progress,
+    )
+    # final global watermark = least(max click_ts, max purchase_ts) − 1 h,
+    # reported by the query itself — no separate pre-stream scan; the
+    # fully-determined region is one more hour (the join window) behind
+    # it, minus 1 s for ms truncation / eviction-compare strictness
+    wm = progress.get("watermark")
+    if wm is None:
+        # a bounded replay over real events must report a watermark;
+        # its absence is a harness fault, not an empty region — fail
+        # loudly rather than publish a silently-wrong empty result
+        raise RuntimeError(
+            "streaming_stream_join_outer: finished query reported no "
+            "event-time watermark (noDataMicroBatches disabled, or no "
+            "input rows?)"
+        )
+    return out.filter(
+        F.col("click_ts")
+        < F.lit(wm) - F.expr("INTERVAL 1 HOUR") - F.expr("INTERVAL 1 SECOND")
+    ).orderBy("click_id", "purchase_id")
 
 
 _SQL_SESSION_DYNAMIC = """
@@ -1530,13 +1917,65 @@ WHERE day_start + INTERVAL 1 DAY <
 
 @register("streaming_chained_agg", oracle=_SQL_CHAINED_AGG)
 def q_streaming_chained_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """See streaming.events.streaming_chained_agg: two chained stateful
-    window aggregations (hourly → daily) in ONE streaming query,
-    restricted to the watermark-determinate region ≡ the batch
-    hourly→daily rollup."""
-    from rdbms_subsetter_spark.streaming.events import streaming_chained_agg
+    """CHAINED stateful aggregations in one streaming query (Spark 4:
+    multiple stateful operators per query): watermarked hourly tumbling
+    counts re-aggregated into daily totals downstream, both stateful,
+    both watermark-driven — the streaming form of the hypertable
+    hourly→daily rollup (`events_rollup_daily`) without a second job or
+    an intermediate sink.
 
-    return streaming_chained_agg(spark, sf_dir)
+    Append mode is REQUIRED between chained aggs (the upstream agg must
+    finalize a window before the downstream one consumes it), so the
+    bounded replay emits exactly the daily windows whose end the final
+    watermark passed; the result is restricted to that region
+    (day_end < watermark − 1 s, the watermark read from the finished
+    query's own progress report — no separate pre-stream scan) where it
+    provably equals the batch hourly→daily rollup."""
+    ev = events_stream(spark, sf_dir).withWatermark("ts", "1 hour")
+    hourly = ev.groupBy(
+        F.window("ts", "1 hour").alias("w1"), "event_type"
+    ).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum("value").alias("v"),
+    )
+    daily = (
+        hourly.groupBy(F.window(F.col("w1"), "1 day").alias("w2"), "event_type")
+        .agg(
+            F.sum("n").alias("n_events"),
+            F.count(F.lit(1)).alias("n_active_hours"),
+            F.round(F.sum("v"), 2).alias("sum_value"),
+        )
+        .select(
+            F.col("w2.start").alias("day_start"),
+            F.col("w2.end").alias("day_end"),
+            "event_type",
+            "n_events",
+            "n_active_hours",
+            "sum_value",
+        )
+    )
+    # two chained stateful aggs = two store sets per partition; hourly
+    # and daily window state is tiny at gate scale, so 2 partitions
+    # minimize the per-store fixed cost (results width-independent)
+    progress: dict = {}
+    out = run_stream_to_memory(
+        spark,
+        daily,
+        name="stream_chained_agg",
+        output_mode="append",
+        state_partitions=2,
+        progress_out=progress,
+    )
+    wm = progress.get("watermark")
+    if wm is None:
+        raise RuntimeError(
+            "streaming_chained_agg: finished query reported no "
+            "event-time watermark (noDataMicroBatches disabled, or no "
+            "input rows?)"
+        )
+    return out.filter(
+        F.col("day_end") < F.lit(wm) - F.expr("INTERVAL 1 SECOND")
+    ).drop("day_end")
 
 
 _SQL_STREAMING_SESSION_APPEND = """
@@ -1569,14 +2008,49 @@ HAVING max(ts) + INTERVAL 30 MINUTE <
 
 @register("streaming_session_append", oracle=_SQL_STREAMING_SESSION_APPEND)
 def q_streaming_session_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """See streaming.events.streaming_session_append: append-mode
-    session windows emit each session exactly once when the watermark
-    passes its end; the result is cut to the provably-complete region
-    (session_end < floor-to-second(final watermark)) so the finalized
-    set equals the batch gaps-and-islands oracle under the same cut."""
-    from rdbms_subsetter_spark.streaming.events import streaming_session_append
+    """APPEND-mode session windows restricted to the watermark-determinate
+    region — the twin the complete-mode ``q_streaming_sessions`` entry
+    deliberately avoids.
 
-    return streaming_session_append(spark, sf_dir)
+    In append mode a session is emitted exactly once, when the
+    watermark passes its end (last event + gap): that is the
+    production shape — finalized sessions flow downstream incrementally
+    and state is evicted, instead of re-emitting the whole result every
+    batch.  A bounded replay therefore emits only sessions whose end
+    the final watermark passed; the still-open tail is withheld.  To
+    make that deterministic the result is cut to the provably-complete
+    region: sessions with ``session_end < floor_s(final watermark)``
+    (the cut derives from the finished query's own ``lastProgress``
+    watermark — see ``streaming.events._final_watermark`` for why whole
+    seconds are the cross-engine-safe grid).  The batch gaps-and-islands
+    oracle applies the same cut as ``max(ts) + gap <
+    date_trunc('second', max(ts)) - delay``, so the emitted-and-finalized
+    set is hash-checkable.
+
+    State shape at scale: session state lives only until eviction
+    (watermark-bounded, per-user), and each micro-batch shuffles only
+    its own events into the per-user session store — the unbounded
+    complete-mode result table never exists."""
+    progress: dict = {}
+    out = run_stream_to_memory(
+        spark,
+        session_windows(events_stream(spark, sf_dir)),
+        name="stream_session_append",
+        output_mode="append",
+        # sessions-per-user state: small domain, same sizing reasoning
+        # as q_streaming_hourly
+        state_partitions=4,
+        progress_out=progress,
+    )
+    cut = progress.get("watermark")
+    if cut is None:
+        return out.limit(0).select(
+            "session_start", "session_end", "user_id", "n_events"
+        )
+    return (
+        out.filter(F.col("session_end") < F.lit(cut))
+        .select("session_start", "session_end", "user_id", "n_events")
+    )
 
 
 _SQL_INCR_AGG_RETRACT = """
@@ -1661,15 +2135,95 @@ GROUP BY e.user_id, e.event_type, u.umax
 
 @register("streaming_ttl_activity", oracle=_SQL_STREAMING_TTL_ACTIVITY)
 def q_streaming_ttl_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """See streaming.events.streaming_ttl_activity: per-user trailing
-    7-day event-type activity with event-time-TTL-evicted list state —
-    deterministic under any replay batching because eviction can never
-    drop an entry the final trailing window needs (the user's max only
-    grows) and each user's last emission is anchored to his own final
-    max.  Oracle: events within 7 days of the per-user max(ts)."""
-    from rdbms_subsetter_spark.streaming.events import streaming_ttl_activity
+    """Per-user trailing 7-day activity with EVENT-TIME TTL state: a
+    grouped ``applyInPandasWithState`` operator whose state is the list
+    of (event-time µs, event_type) pairs no older than 7 days behind
+    the user's own running max event time — old entries are EVICTED as
+    the user's clock advances, so state is bounded by
+    events-per-user-per-window, never by history (the custom-state
+    analog of ``dropDuplicatesWithinWatermark``'s TTL).
 
-    return streaming_ttl_activity(spark, sf_dir, ttl_days=7)
+    Determinism across ANY replay batching (the property that makes
+    this gradable where processing-time TTL is not):
+
+    * eviction is SAFE — an entry evicted at batch b satisfies
+      ts < max_b − TTL ≤ max_final − TTL, so it can never belong to
+      the final trailing window (the user's max only grows);
+    * the user's running max comes from the user's OWN rows, so after
+      the user's last input batch it equals the final max, and the last
+      emission is exactly the trailing window vs that final max;
+    * counts within a fixed window only grow, so taking each (user,
+      type)'s max count among rows carrying the user's final max
+      timestamp resolves same-max multi-batch emissions.
+
+    The batch oracle is therefore plain SQL: events within 7 days of
+    the per-user max(ts), grouped by (user, type).
+
+    Scale shape: state per user is O(events in window); emission per
+    batch is O(types per user); one shuffle on user_id per micro-batch
+    (the stateful exchange); the final selection is a window + agg over
+    the (users × types)-sized sink table.
+    """
+    import pandas as pd
+
+    ttl_us = 7 * 24 * 3600 * 1_000_000
+
+    def update(key, pdfs, state):
+        ts0, ty0 = state.get if state.exists else ([], [])
+        ts = list(ts0)
+        ty = list(ty0)
+        for pdf in pdfs:
+            ts.extend(int(v) for v in pdf["ts_us"])
+            ty.extend(pdf["event_type"])
+        umax = max(ts)
+        kept = [(a, b) for a, b in zip(ts, ty) if a >= umax - ttl_us]
+        ts = [a for a, _ in kept]
+        ty = [b for _, b in kept]
+        state.update((ts, ty))
+        counts: dict = {}
+        for b in ty:
+            counts[b] = counts.get(b, 0) + 1
+        items = sorted(counts.items())
+        yield pd.DataFrame(
+            {
+                "user_id": [key[0]] * len(items),
+                "event_type": [k for k, _ in items],
+                "n_recent": [v for _, v in items],
+                "user_last_us": [umax] * len(items),
+            }
+        )
+
+    rows = (
+        events_stream(spark, sf_dir)
+        .select(
+            "user_id",
+            "event_type",
+            F.unix_micros(F.col("ts")).alias("ts_us"),
+        )
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            update,
+            outputStructType=(
+                "user_id long, event_type string, n_recent long, user_last_us long"
+            ),
+            stateStructType="ts array<long>, ty array<string>",
+            outputMode="update",
+            timeoutConf="NoTimeout",
+        )
+    )
+    out = run_stream_to_memory(
+        spark, rows, name="stream_ttl_activity", output_mode="update"
+    )
+    w = Window.partitionBy("user_id")
+    return (
+        out.withColumn("final_us", F.max("user_last_us").over(w))
+        .filter(F.col("user_last_us") == F.col("final_us"))
+        .groupBy("user_id", "event_type")
+        .agg(
+            F.max("n_recent").alias("n_recent"),
+            F.max("user_last_us").alias("user_last_us"),
+        )
+    )
 
 
 _SQL_STREAMING_ASOF = """
@@ -1693,9 +2247,68 @@ FROM p LEFT JOIN best b ON b.event_id = p.event_id
 
 
 @register("streaming_asof_enrich", oracle=_SQL_STREAMING_ASOF)
-def q_streaming_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """See streaming.events.streaming_asof_enrich: stateless stream-
-    static temporal enrichment (broadcast sorted order-history arrays +
-    codegen as-of extraction), the streaming twin of
-    ``asof_join_latest_order``."""
-    return streaming_events.streaming_asof_enrich(spark, sf_dir)
+def q_streaming_asof_enrich(
+    spark: SparkSession, sf_dir: str, progress_out: dict | None = None
+) -> DataFrame:
+    """Stream-static AS-OF enrichment: every purchase event picks up the
+    user's most recent order at-or-before the event time (inclusive
+    backward as-of, ties broken by highest o_orderkey) — the streaming
+    twin of the batch ``asof_join_latest_order`` entry, via a different
+    physical strategy that needs NO stream state at all.
+
+    The batch as-of uses a union+window sort; a window over a stream
+    would be a stateful operator with per-key ordering state.  Instead
+    the STATIC side is pre-shaped per micro-batch into one row per user
+    holding the sorted order history as an array of structs, the
+    stream-static join is a plain stateless 1:1 equi-join (AQE
+    broadcasts the dimension), and the as-of extraction is pure codegen
+    array algebra: ``array_max(filter(hist, h -> h.o_ts <= ts))`` —
+    struct comparison is lexicographic, so (o_ts, o_orderkey) ordering
+    gives exactly the inclusive-backward pick with the orderkey
+    tiebreak.  No watermark, no state store, append mode: a bounded
+    replay emits exactly the batch join, which is what the oracle
+    checks.
+
+    100 TB shape: the dimension array is bounded by per-user order
+    count (TPC-H ~10; any bounded-history dimension qualifies), the
+    stream side never shuffles (broadcast join), and slowly-changing
+    history is picked up per micro-batch without restarts — the same
+    property q_streaming_static_join documents, extended to temporal
+    lookup.  For unbounded histories the array would be bucketed by
+    time range first; that variant needs the same join + one more
+    filter, not a different operator.
+
+    ``progress_out`` is passed to ``run_stream_to_memory`` (tests read
+    the finished query's state-operator count from it)."""
+    ev = (
+        events_stream(spark, sf_dir)
+        .filter(F.col("event_type") == "purchase")
+        .select("event_id", "user_id", "ts")
+    )
+    orders = Catalog(spark, sf_dir)["orders"].select(
+        "o_custkey",
+        "o_orderkey",
+        F.to_timestamp("o_orderdate").alias("o_ts"),
+        # money as exact cents — the established ULP-proof oracle form
+        F.round(F.col("o_totalprice") * 100).cast("long").alias("o_cents"),
+    )
+    hist = orders.groupBy("o_custkey").agg(
+        F.sort_array(
+            F.collect_list(F.struct("o_ts", "o_orderkey", "o_cents"))
+        ).alias("__hist")
+    )
+    j = ev.join(hist, ev["user_id"] == hist["o_custkey"], "left")
+    best = F.array_max(F.filter(F.col("__hist"), lambda h: h["o_ts"] <= F.col("ts")))
+    out = j.select(
+        "event_id",
+        "user_id",
+        best["o_orderkey"].alias("asof_orderkey"),
+        best["o_cents"].alias("asof_cents"),
+    )
+    return run_stream_to_memory(
+        spark,
+        out,
+        name="stream_asof_enrich",
+        output_mode="append",
+        progress_out=progress_out,
+    )

@@ -1,4 +1,5 @@
-"""Structured Streaming surface over the ``events`` table.
+"""Structured Streaming building blocks over the ``events`` and
+``documents`` tables.
 
 The reference is batch-only (SURVEY.md §1: "Streams … Absent"); this
 is a BASELINE.json extension.  The parquet directory doubles as a
@@ -6,41 +7,44 @@ replayable stream source for tests (`readStream.parquet` with
 ``maxFilesPerTrigger``); in production the same plan binds to Kafka.
 
 Patterns covered: watermarked tumbling-window aggregation, sliding
-windows, session windows, and the batch-equivalent plans used by the
-correctness gate (a streaming plan can't be DuckDB-checked, so each
-stream query has a batch twin the driver hashes instead).
+windows, session windows, custom state (``applyInPandasWithState`` and
+Spark 4 ``transformWithState``), and the bounded-replay harness that
+drives a stream to completion.  The graded ``streaming_*`` entries are
+composed from these in ``queries/events.py``; a streaming plan can't be
+DuckDB-checked, so each one's bounded replay equals a batch twin the
+driver hashes instead.
 """
 
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from rdbms_subsetter_spark.catalog import _fix_nanos_timestamps
+from rdbms_subsetter_spark.session import conf_window, pin_session_conf, stable_suffix
 
-def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The events parquet table as a bounded replay stream.
+
+def _replay_stream(
+    spark: SparkSession, sf_dir: str, table: str, scratch: str
+) -> DataFrame:
+    """``table``'s parquet as a bounded replay stream, one file per
+    trigger.
 
     Spark's FileStreamSource only accepts directories; the testdata is
-    a single file, so it is staged (symlinked) into a scratch dir —
-    zero-copy, testdata untouched.
-    """
-    import hashlib
-    import os
-    import tempfile
-
-    from rdbms_subsetter_spark.catalog import _fix_nanos_timestamps
-    from rdbms_subsetter_spark.session import pin_session_conf
-
+    a single file, so it is staged (symlinked) into the scratch dir
+    ``{scratch}_{stable_suffix(path)}`` — zero-copy, testdata untouched."""
     pin_session_conf(spark)
-    path = f"{sf_dir}/events.parquet"
+    path = f"{sf_dir}/{table}.parquet"
     if os.path.isdir(path):
         stream_dir = path
     else:
-        tag = hashlib.md5(path.encode()).hexdigest()[:12]
-        stream_dir = os.path.join(tempfile.gettempdir(), f"rss_stream_{tag}")
+        stream_dir = os.path.join(
+            tempfile.gettempdir(), f"{scratch}_{stable_suffix(path)}"
+        )
         os.makedirs(stream_dir, exist_ok=True)
-        link = os.path.join(stream_dir, "events.parquet")
+        link = os.path.join(stream_dir, f"{table}.parquet")
         # lexists, not exists: a stale link whose target vanished reads
         # as "absent" to exists() but still blocks symlink creation
         if os.path.lexists(link) and not os.path.exists(link):
@@ -48,19 +52,30 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         if not os.path.lexists(link):
             os.symlink(path, link)
     schema = spark.read.parquet(path).schema
-    stream = (
+    return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(stream_dir)
     )
-    return _fix_nanos_timestamps(stream, path)
 
 
-def hourly_agg(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Watermarked tumbling-window aggregation (late rows beyond the
-    watermark are dropped)."""
+def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events parquet table as a bounded replay stream."""
+    stream = _replay_stream(spark, sf_dir, "events", "rss_stream")
+    return _fix_nanos_timestamps(stream, f"{sf_dir}/events.parquet")
+
+
+def documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The documents parquet table as a bounded replay stream — the
+    LLM-ingest scenario: a corpus arriving file-by-file from a crawler."""
+    return _replay_stream(spark, sf_dir, "documents", "rss_docstream")
+
+
+def hourly_agg(events: DataFrame) -> DataFrame:
+    """Watermarked (1 hour) tumbling-window aggregation (late rows
+    beyond the watermark are dropped)."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -75,17 +90,37 @@ def hourly_agg(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
     )
 
 
-def session_windows(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
-    """Per-user session windows (native session_window)."""
+def session_windows(events: DataFrame) -> DataFrame:
+    """Per-user session windows with a 30-minute gap (native
+    session_window)."""
     return (
         events.withWatermark("ts", "1 hour")
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             F.col("w.start").alias("session_start"),
             F.col("w.end").alias("session_end"),
             "user_id",
             "n_events",
+        )
+    )
+
+
+def sliding_agg(events: DataFrame) -> DataFrame:
+    """Watermarked (1 hour) sliding-window aggregation (1h window,
+    30min slide — each event lands in exactly two windows, Expand ×2)."""
+    return (
+        events.withWatermark("ts", "1 hour")
+        .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.round(F.sum("value"), 2).alias("sum_value"),
+        )
+        .select(
+            F.col("w.start").alias("window_start"),
+            "event_type",
+            "n_events",
+            "sum_value",
         )
     )
 
@@ -108,7 +143,7 @@ def run_stream_to_memory(
     open/commit overhead dominates small-state local runs (measured 3x
     on the outer interval join: 32 partitions 9 s -> 8 partitions 4 s
     at sf0.1).  Results are partitioning-independent; the session conf
-    is restored after the query starts planning.
+    is restored once the query has stopped.
 
     ``progress_out``: if given, receives ``{"watermark": <datetime|None>}``
     — the query's FINAL global watermark from its own progress report.
@@ -116,9 +151,7 @@ def run_stream_to_memory(
     separate pre-stream scan: it is the exact value the engine used for
     the last emission/eviction pass (no re-derivation drift, one less
     driver job)."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
+    with conf_window(spark, {"spark.sql.shuffle.partitions": str(state_partitions)}):
         q = (
             agg.writeStream.outputMode(output_mode)
             .format("memory")
@@ -134,8 +167,6 @@ def run_stream_to_memory(
                 )
         finally:
             q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.sql(f"SELECT * FROM {name}")
 
 
@@ -186,335 +217,6 @@ def stateful_user_totals(events: DataFrame) -> DataFrame:
     )
 
 
-def streaming_session_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end native session windows over the replayed event stream.
-
-    Complete mode on purpose (same reasoning as streaming_hourly_counts):
-    append mode withholds sessions whose gap the watermark has not yet
-    passed, so a bounded replay would lose the tail; complete mode emits
-    every session, making the result equal to the batch gaps-and-islands
-    sessionization (session_end = last event + gap) — DuckDB-checkable.
-    Append-mode emission semantics stay covered in test_streaming.py."""
-    out = run_stream_to_memory(
-        spark,
-        session_windows(events_stream(spark, sf_dir)),
-        name="stream_session_counts",
-        output_mode="complete",
-    )
-    return out.orderBy("session_start", "user_id")
-
-
-def streaming_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end custom stateful operator run: final running totals per
-    user after the bounded replay (update mode → keep each user's last
-    emission)."""
-    # State partitions sized to the session's cores (r12, VERDICT r11
-    # task 7): the batch cost here is python per-GROUP work inside
-    # applyInPandasWithState, which parallelizes across partitions,
-    # while each partition adds fixed store open/commit overhead.
-    # Measured min-of-3 at sf0.1: 32 cores — 8 parts 1.73 s, 16 parts
-    # 1.49 s, 32 parts 1.60 s; 8 cores — 4 parts 2.50 s, 8 parts
-    # 1.81 s, 16 parts 2.12 s.  cores/2 (floor 8, cap 64) picks the
-    # winner at both; results are partitioning-independent.
-    par = spark.sparkContext.defaultParallelism
-    out = run_stream_to_memory(
-        spark,
-        stateful_user_totals(events_stream(spark, sf_dir)),
-        name="stream_stateful_totals",
-        output_mode="update",
-        state_partitions=max(8, min(64, par // 2)),
-    )
-    return out.groupBy("user_id").agg(
-        F.max("n_events").alias("n_events"),
-        F.max("sum_value").alias("sum_value"),
-    )
-
-
-def streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end streaming query: replay events, watermark, tumbling
-    hourly agg, memory sink.
-
-    Complete mode on purpose: with ``outputMode("append")`` the final
-    (still-open) windows are withheld pending watermark advance, so a
-    bounded replay would be missing the tail hours; complete mode emits
-    every window, which makes the result EQUAL to the batch hourly
-    aggregate — and therefore DuckDB-oracle-checkable, not just
-    rows-only.  Append-mode watermark eviction semantics are covered
-    separately in tests/test_streaming.py.
-    """
-    out = run_stream_to_memory(
-        spark,
-        hourly_agg(events_stream(spark, sf_dir)),
-        name="stream_hourly_counts",
-        output_mode="complete",
-        # hours x event_types of window state: 2 partitions (measured
-        # 1.8 -> 1.3 s; the python-stateful entries keep 8 for worker
-        # parallelism)
-        state_partitions=2,
-    )
-    return out.orderBy("hour_start", "event_type")
-
-
-def streaming_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming deduplication: distinct (user_id, event_type) pairs via
-    ``dropDuplicates`` on the replayed stream (append mode — each key is
-    emitted exactly once, on first sight).
-
-    After a bounded replay the emitted set equals batch
-    ``SELECT DISTINCT``, so this streaming query is DuckDB-checkable.
-    At scale the state store grows with key cardinality; for unbounded
-    key spaces the production form is ``dropDuplicatesWithinWatermark``
-    (same plan with a TTL on state), covered in tests.
-    """
-    keys = events_stream(spark, sf_dir).select("user_id", "event_type")
-    out = run_stream_to_memory(
-        spark,
-        keys.dropDuplicates(["user_id", "event_type"]),
-        name="stream_dedup_keys",
-        output_mode="append",
-        state_partitions=2,  # key-pair state only (measured 1.0 -> 0.6 s)
-    )
-    return out
-
-
-def streaming_dedup_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming dedup with BOUNDED state: ``dropDuplicatesWithinWatermark``
-    keeps a key in the store only until the watermark passes its event
-    time plus the delay — the production dedup for UNBOUNDED key spaces
-    (plain dropDuplicates state grows forever).  The plan carries the
-    dedup-within-watermark operator with a state TTL.
-
-    Graded deterministically: the delay (365 days) exceeds the replay's
-    whole time span, so no key expires mid-replay and the emitted key
-    set equals batch DISTINCT; the projection to key columns before the
-    dedup makes WHICH row wins irrelevant.  The per-type unique-user
-    counts are then a plain batch aggregate over the sink —
-    DuckDB-checkable.  In production the delay is the real dedup
-    horizon (hours), and state is bounded by keys-per-horizon instead
-    of all-keys-ever.
-
-    The delay > span precondition is ASSERTED at runtime (one 1-row
-    aggregate on the static table): on a dataset spanning longer than
-    the delay, expired keys would re-emit and silently overcount vs the
-    batch-DISTINCT oracle — better to fail loudly than grade wrong."""
-    from rdbms_subsetter_spark.catalog import Catalog
-
-    delay_s = 365 * 24 * 3600
-    span_row = (
-        Catalog(spark, sf_dir)["events"]
-        .agg(
-            (
-                F.unix_timestamp(F.max("ts")) - F.unix_timestamp(F.min("ts"))
-            ).alias("span_s")
-        )
-        .collect()[0]
-    )
-    span_s = span_row["span_s"] or 0
-    if span_s >= delay_s:
-        raise ValueError(
-            f"streaming_dedup_ttl: events span {span_s}s >= dedup delay "
-            f"{delay_s}s; emitted keys would no longer equal batch DISTINCT "
-            "(expired keys re-emit). Raise the delay for this dataset."
-        )
-    keys = (
-        events_stream(spark, sf_dir)
-        .select("ts", "user_id", "event_type")
-        .withWatermark("ts", "365 days")
-        .dropDuplicatesWithinWatermark(["user_id", "event_type"])
-        .select("user_id", "event_type")
-    )
-    out = run_stream_to_memory(
-        spark,
-        keys,
-        name="stream_dedup_ttl",
-        output_mode="append",
-        state_partitions=2,
-    )
-    return out.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_unique_users")
-    )
-
-
-def streaming_state_introspection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Read a stateful streaming query's STATE STORE as a table — the
-    Spark 4 state data source (``spark.read.format("statestore")``),
-    the production tool for auditing/debugging stateful pipelines
-    without touching the live query (state cardinality, key skew by
-    partition, stuck-key forensics).
-
-    The run: the exactly-once key dedup replays bounded input to a noop
-    sink with a DURABLE checkpoint (``availableNow`` trigger), then the
-    dropDuplicates state files are loaded directly — no replay, no
-    running query.  dropDuplicates state IS the distinct key set, so
-    the read-back equals batch ``SELECT DISTINCT`` → hash-graded
-    against that oracle.
-
-    Scale shape: state files are already partitioned by shuffle
-    partition and the reader is a partition-parallel scan of the store
-    (HDFS/RocksDB-backed), so the audit cost is ∝ state size, never
-    ∝ stream history.  State partitions sized to state volume (4), as
-    fleet-wide for bounded local replays; the checkpoint dir is
-    process-stable (md5 of sf_dir) and wiped per run for a clean
-    deterministic replay."""
-    import os
-    import shutil
-    import tempfile
-
-    from rdbms_subsetter_spark.session import stable_suffix
-
-    ckpt = os.path.join(
-        tempfile.gettempdir(), f"rss_state_intro_{stable_suffix(sf_dir)}"
-    )
-    shutil.rmtree(ckpt, ignore_errors=True)
-    keys = (
-        events_stream(spark, sf_dir)
-        .select("user_id", "event_type")
-        .dropDuplicates(["user_id", "event_type"])
-    )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            keys.writeStream.format("noop")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            # fail loudly on timeout: a False return means the trigger
-            # did not finish, and reading the statestore from a
-            # partially-processed checkpoint would grade an incomplete
-            # key set silently (same policy as streaming_dedup_ttl)
-            if not q.awaitTermination(300):
-                raise TimeoutError(
-                    "state-introspection query did not finish in 300s"
-                )
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    state = spark.read.format("statestore").load(ckpt)
-    return state.select(
-        F.col("key.user_id").alias("user_id"),
-        F.col("key.event_type").alias("event_type"),
-    )
-
-
-def streaming_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-static join: the event stream enriched with the static
-    customer dimension (no watermark needed — the static side is simply
-    looked up per micro-batch, broadcast by AQE), then aggregated per
-    market segment in complete mode.
-
-    The canonical streaming-enrichment shape at scale: the dimension is
-    re-resolved every batch, so slowly-changing dims are picked up
-    without restarts.  Bounded replay ≡ the batch join+agg → oracle.
-    """
-    from rdbms_subsetter_spark.catalog import Catalog
-
-    ev = events_stream(spark, sf_dir)
-    cust = Catalog(spark, sf_dir)["customer"].select("c_custkey", "c_mktsegment")
-    agg = (
-        ev.join(cust, ev["user_id"] == cust["c_custkey"])
-        .groupBy("c_mktsegment")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-    )
-    return run_stream_to_memory(
-        spark, agg, name="stream_static_join", output_mode="complete"
-    )
-
-
-def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream inner join with event-time bounds: each click joined
-    to the same user's purchases within the following hour.  Both sides
-    carry watermarks and the join condition bounds event time in BOTH
-    directions — that pair is what lets Spark expire join state; without
-    it state grows forever.
-
-    Append-mode inner joins emit every match (the watermark governs
-    state cleanup, not emission), so a bounded replay emits exactly the
-    batch interval join → DuckDB-checkable.  At scale both sides shuffle
-    on user_id once and matching is per-partition; state per key is
-    bounded by the 1h window × arrival rate.
-    """
-    clicks = (
-        events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .select(
-            "user_id",
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "1 hour")
-    )
-    purchases = (
-        events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user_id"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "1 hour")
-    )
-    joined = clicks.join(
-        purchases,
-        F.expr(
-            "user_id = p_user_id AND "
-            "purchase_ts >= click_ts AND "
-            "purchase_ts <= click_ts + INTERVAL 1 HOUR"
-        ),
-    ).select("user_id", "click_id", "purchase_id", "click_ts", "purchase_ts")
-    return run_stream_to_memory(
-        spark, joined, name="stream_stream_join", output_mode="append"
-    )
-
-
-def streaming_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """foreachBatch sink: each micro-batch is written to a parquet
-    directory through the batch writer API — the pattern for sinks
-    Structured Streaming has no native writer for (JDBC, MERGE
-    targets...).  batchId is the idempotence key: reprocessed batches
-    overwrite their own subdirectory instead of double-appending
-    (exactly-once on top of at-least-once delivery).
-
-    Bounded replay → the sink holds exactly the filtered stream →
-    DuckDB-checkable.
-    """
-    import hashlib
-    import shutil
-    import tempfile
-
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"rss_febatch_{hashlib.md5(sf_dir.encode()).hexdigest()[:12]}",
-    )
-    shutil.rmtree(out_dir, ignore_errors=True)
-
-    ev = events_stream(spark, sf_dir).filter(F.col("value") > 50.0).select(
-        "event_id", "user_id", "event_type", F.round("value", 2).alias("value")
-    )
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
-
-    q = ev.writeStream.foreachBatch(write_batch).outputMode("append").start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    sunk = spark.read.option("basePath", out_dir).parquet(f"{out_dir}/batch_id=*")
-    return sunk.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.round(F.sum("value"), 2).alias("sum_value"),
-        F.min("event_id").alias("min_event"),
-        F.max("event_id").alias("max_event"),
-    )
-
-
 def stateful_user_totals_v2(events: DataFrame) -> DataFrame:
     """Per-user running totals via the Spark 4 ``transformWithState``
     API: a ``StatefulProcessor`` with a typed ValueState variable —
@@ -559,481 +261,3 @@ def transform_with_state_available() -> bool:
         return True
     except ImportError:
         return False
-
-
-def streaming_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end transformWithState run: final running totals per user
-    after the bounded replay (update mode → keep each user's last
-    emission); equals the batch per-user aggregate → oracle-checked.
-
-    The v2 API additionally requires the RocksDB state store (set for
-    this run) and protobuf; where protobuf is missing the query falls
-    back to the applyInPandasWithState operator — identical semantics,
-    same oracle, so the correctness gate grades the same contract
-    either way."""
-    if transform_with_state_available():
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        agg = stateful_user_totals_v2(events_stream(spark, sf_dir))
-    else:
-        agg = stateful_user_totals(events_stream(spark, sf_dir))
-    out = run_stream_to_memory(
-        spark, agg, name="stream_transform_with_state", output_mode="update"
-    )
-    return out.groupBy("user_id").agg(
-        F.max("n_events").alias("n_events"),
-        F.max("sum_value").alias("sum_value"),
-    )
-
-
-def sliding_agg(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Watermarked sliding-window aggregation (1h window, 30min slide —
-    each event lands in exactly two windows, Expand ×2)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
-def streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end sliding windows over the replayed event stream —
-    complete mode (same reasoning as streaming_hourly_counts), so the
-    bounded replay equals the batch sliding aggregate and shares its
-    DuckDB oracle."""
-    out = run_stream_to_memory(
-        spark,
-        sliding_agg(events_stream(spark, sf_dir)),
-        name="stream_sliding_counts",
-        output_mode="complete",
-        state_partitions=2,  # sliding-window state (measured 1.5 -> 1.3 s)
-    )
-    return out.orderBy("window_start", "event_type")
-
-
-def documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The documents parquet table as a bounded replay stream (same
-    symlink staging as events_stream) — the LLM-ingest scenario: a
-    corpus arriving file-by-file from a crawler."""
-    import hashlib
-    import os
-    import tempfile
-
-    from rdbms_subsetter_spark.session import pin_session_conf
-
-    pin_session_conf(spark)
-    path = f"{sf_dir}/documents.parquet"
-    if os.path.isdir(path):
-        stream_dir = path
-    else:
-        tag = hashlib.md5(path.encode()).hexdigest()[:12]
-        stream_dir = os.path.join(tempfile.gettempdir(), f"rss_docstream_{tag}")
-        os.makedirs(stream_dir, exist_ok=True)
-        link = os.path.join(stream_dir, "documents.parquet")
-        if os.path.lexists(link) and not os.path.exists(link):
-            os.remove(link)  # stale link to a rebuilt/removed target
-        if not os.path.lexists(link):
-            os.symlink(path, link)
-    schema = spark.read.parquet(path).schema
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-    )
-
-
-def streaming_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming ingest-quality monitor: the curation funnel's rule
-    stages (lang → quality → length) as ONE running aggregate over the
-    document stream — what a crawler-ingest dashboard shows live.
-
-    Complete mode: the running totals after a bounded replay equal the
-    batch funnel counts, so the query is DuckDB-oracle-checkable.  The
-    dedup stage is deliberately absent here: count(DISTINCT) is
-    unsupported in streaming aggregation, and its streaming analogue
-    (dropDuplicates state) is covered by streaming_dedup_keys.
-    """
-    from rdbms_subsetter_spark.operators import text as text_ops
-
-    docs = documents_stream(spark, sf_dir)
-    t = F.col("text")
-    s1 = F.col("lang") == "en"
-    s2 = s1 & (text_ops.quality_score(t) >= 0.5)
-    s3 = s2 & text_ops.token_count(t).between(20, 1000)
-    agg = docs.agg(
-        F.count(F.lit(1)).alias("n_total"),
-        F.sum(s1.cast("long")).alias("n_lang"),
-        F.sum(s2.cast("long")).alias("n_quality"),
-        F.sum(s3.cast("long")).alias("n_length"),
-    )
-    return run_stream_to_memory(
-        spark,
-        agg,
-        name="stream_curation_funnel",
-        output_mode="complete",
-        state_partitions=2,  # one global-aggregate row of state
-    )
-
-
-def streaming_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream LEFT OUTER join: clicks joined to same-user
-    purchases within the following hour; clicks with NO purchase emit a
-    null-extended row once the watermark passes their join window (state
-    eviction is the emission trigger — the semantics inner joins never
-    exercise).
-
-    Determinism under bounded replay: the GLOBAL watermark is the min
-    over both inputs' per-stream watermarks — least(max click_ts, max
-    purchase_ts) − 1 h — so null rows are guaranteed emitted exactly
-    for clicks whose join window closed before it.  The result is
-    restricted to that fully-determined region, click_ts < watermark −
-    1 h − 1 s, where the watermark is taken from the finished query's
-    OWN progress report (no separate pre-stream scan; the extra second
-    covers Spark's millisecond watermark truncation and
-    eviction-compare strictness): inside it, every match AND every
-    null-extension has provably been emitted, making the output equal
-    to a batch LEFT JOIN over the same region — hash-checkable.  At
-    scale the cut is exactly the "completed region" a production job
-    would publish downstream; the tail stays in state.
-    """
-    # one source instance for both sides (stream-stream SELF-join):
-    # the micro-batch scans the arriving files once, not once per side
-    src = events_stream(spark, sf_dir)
-    clicks = (
-        src.filter(F.col("event_type") == "click")
-        .select(
-            "user_id",
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "1 hour")
-    )
-    purchases = (
-        src.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user_id"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "1 hour")
-    )
-    joined = clicks.join(
-        purchases,
-        F.expr(
-            "user_id = p_user_id AND "
-            "purchase_ts >= click_ts AND "
-            "purchase_ts <= click_ts + INTERVAL 1 HOUR"
-        ),
-        "left_outer",
-    ).select("user_id", "click_id", "purchase_id", "click_ts", "purchase_ts")
-    # state volume at gate scale is ~1e5 rows per side: 2 partitions
-    # keep per-store open/commit overhead (4 stores per partition for an
-    # interval join) off the critical path; results are width-independent
-    progress: dict = {}
-    out = run_stream_to_memory(
-        spark,
-        joined,
-        name="stream_stream_join_outer",
-        output_mode="append",
-        state_partitions=2,
-        progress_out=progress,
-    )
-    # final global watermark = least(max click_ts, max purchase_ts) − 1 h,
-    # reported by the query itself — no separate pre-stream scan; the
-    # fully-determined region is one more hour (the join window) behind
-    # it, minus 1 s for ms truncation / eviction-compare strictness
-    wm = progress.get("watermark")
-    if wm is None:
-        # a bounded replay over real events must report a watermark;
-        # its absence is a harness fault, not an empty region — fail
-        # loudly rather than publish a silently-wrong empty result
-        raise RuntimeError(
-            "streaming_stream_join_outer: finished query reported no "
-            "event-time watermark (noDataMicroBatches disabled, or no "
-            "input rows?)"
-        )
-    return out.filter(
-        F.col("click_ts")
-        < F.lit(wm) - F.expr("INTERVAL 1 HOUR") - F.expr("INTERVAL 1 SECOND")
-    ).orderBy("click_id", "purchase_id")
-
-
-def streaming_asof_enrich(
-    spark: SparkSession, sf_dir: str, progress_out: dict | None = None
-) -> DataFrame:
-    """Stream-static AS-OF enrichment: every purchase event picks up the
-    user's most recent order at-or-before the event time (inclusive
-    backward as-of, ties broken by highest o_orderkey) — the streaming
-    twin of the batch ``asof_join_latest_order`` entry, via a different
-    physical strategy that needs NO stream state at all.
-
-    The batch as-of uses a union+window sort; a window over a stream
-    would be a stateful operator with per-key ordering state.  Instead
-    the STATIC side is pre-shaped per micro-batch into one row per user
-    holding the sorted order history as an array of structs, the
-    stream-static join is a plain stateless 1:1 equi-join (AQE
-    broadcasts the dimension), and the as-of extraction is pure codegen
-    array algebra: ``array_max(filter(hist, h -> h.o_ts <= ts))`` —
-    struct comparison is lexicographic, so (o_ts, o_orderkey) ordering
-    gives exactly the inclusive-backward pick with the orderkey
-    tiebreak.  No watermark, no state store, append mode: a bounded
-    replay emits exactly the batch join, which is what the oracle
-    checks.
-
-    100 TB shape: the dimension array is bounded by per-user order
-    count (TPC-H ~10; any bounded-history dimension qualifies), the
-    stream side never shuffles (broadcast join), and slowly-changing
-    history is picked up per micro-batch without restarts — the same
-    property streaming_static_join documents, extended to temporal
-    lookup.  For unbounded histories the array would be bucketed by
-    time range first; that variant needs the same join + one more
-    filter, not a different operator."""
-    from rdbms_subsetter_spark.catalog import Catalog
-
-    ev = (
-        events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select("event_id", "user_id", "ts")
-    )
-    orders = Catalog(spark, sf_dir)["orders"].select(
-        "o_custkey",
-        "o_orderkey",
-        F.to_timestamp("o_orderdate").alias("o_ts"),
-        # money as exact cents — the established ULP-proof oracle form
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("o_cents"),
-    )
-    hist = orders.groupBy("o_custkey").agg(
-        F.sort_array(
-            F.collect_list(F.struct("o_ts", "o_orderkey", "o_cents"))
-        ).alias("__hist")
-    )
-    j = ev.join(hist, ev["user_id"] == hist["o_custkey"], "left")
-    best = F.array_max(F.filter(F.col("__hist"), lambda h: h["o_ts"] <= F.col("ts")))
-    out = j.select(
-        "event_id",
-        "user_id",
-        best["o_orderkey"].alias("asof_orderkey"),
-        best["o_cents"].alias("asof_cents"),
-    )
-    return run_stream_to_memory(
-        spark,
-        out,
-        name="stream_asof_enrich",
-        output_mode="append",
-        progress_out=progress_out,
-    )
-
-
-def streaming_chained_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CHAINED stateful aggregations in one streaming query (Spark 4:
-    multiple stateful operators per query): watermarked hourly tumbling
-    counts re-aggregated into daily totals downstream, both stateful,
-    both watermark-driven — the streaming form of the hypertable
-    hourly→daily rollup (`events_rollup_daily`) without a second job or
-    an intermediate sink.
-
-    Append mode is REQUIRED between chained aggs (the upstream agg must
-    finalize a window before the downstream one consumes it), so the
-    bounded replay emits exactly the daily windows whose end the final
-    watermark passed; the result is restricted to that region
-    (day_end < watermark − 1 s, the watermark read from the finished
-    query's own progress report — no separate pre-stream scan) where it
-    provably equals the batch hourly→daily rollup."""
-    ev = events_stream(spark, sf_dir).withWatermark("ts", "1 hour")
-    hourly = ev.groupBy(
-        F.window("ts", "1 hour").alias("w1"), "event_type"
-    ).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("value").alias("v"),
-    )
-    daily = (
-        hourly.groupBy(F.window(F.col("w1"), "1 day").alias("w2"), "event_type")
-        .agg(
-            F.sum("n").alias("n_events"),
-            F.count(F.lit(1)).alias("n_active_hours"),
-            F.round(F.sum("v"), 2).alias("sum_value"),
-        )
-        .select(
-            F.col("w2.start").alias("day_start"),
-            F.col("w2.end").alias("day_end"),
-            "event_type",
-            "n_events",
-            "n_active_hours",
-            "sum_value",
-        )
-    )
-    # two chained stateful aggs = two store sets per partition; hourly
-    # and daily window state is tiny at gate scale, so 2 partitions
-    # minimize the per-store fixed cost (results width-independent)
-    progress: dict = {}
-    out = run_stream_to_memory(
-        spark,
-        daily,
-        name="stream_chained_agg",
-        output_mode="append",
-        state_partitions=2,
-        progress_out=progress,
-    )
-    wm = progress.get("watermark")
-    if wm is None:
-        raise RuntimeError(
-            "streaming_chained_agg: finished query reported no "
-            "event-time watermark (noDataMicroBatches disabled, or no "
-            "input rows?)"
-        )
-    return out.filter(
-        F.col("day_end") < F.lit(wm) - F.expr("INTERVAL 1 SECOND")
-    ).drop("day_end")
-
-
-def streaming_session_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """APPEND-mode session windows restricted to the watermark-determinate
-    region — the twin the complete-mode ``streaming_session_counts``
-    entry deliberately avoids.
-
-    In append mode a session is emitted exactly once, when the
-    watermark passes its end (last event + gap): that is the
-    production shape — finalized sessions flow downstream incrementally
-    and state is evicted, instead of re-emitting the whole result every
-    batch.  A bounded replay therefore emits only sessions whose end
-    the final watermark passed; the still-open tail is withheld.  To
-    make that deterministic the result is cut to the provably-complete
-    region: sessions with ``session_end < floor_s(final watermark)``
-    (the cut derives from the finished query's own ``lastProgress``
-    watermark — see ``_final_watermark`` for why whole seconds are the
-    cross-engine-safe grid).  The batch gaps-and-islands oracle applies
-    the same cut as ``max(ts) + gap < date_trunc('second', max(ts))
-    - delay``, so the emitted-and-finalized set is hash-checkable.
-
-    State shape at scale: session state lives only until eviction
-    (watermark-bounded, per-user), and each micro-batch shuffles only
-    its own events into the per-user session store — the unbounded
-    complete-mode result table never exists."""
-    progress: dict = {}
-    out = run_stream_to_memory(
-        spark,
-        session_windows(events_stream(spark, sf_dir)),
-        name="stream_session_append",
-        output_mode="append",
-        # sessions-per-user state: small domain, same sizing reasoning
-        # as streaming_hourly_counts
-        state_partitions=4,
-        progress_out=progress,
-    )
-    cut = progress.get("watermark")
-    if cut is None:
-        return out.limit(0).select(
-            "session_start", "session_end", "user_id", "n_events"
-        )
-    return (
-        out.filter(F.col("session_end") < F.lit(cut))
-        .select("session_start", "session_end", "user_id", "n_events")
-    )
-
-
-def streaming_ttl_activity(
-    spark: SparkSession, sf_dir: str, ttl_days: int = 7
-) -> DataFrame:
-    """Per-user trailing-window activity with EVENT-TIME TTL state: a
-    grouped ``applyInPandasWithState`` operator whose state is the list
-    of (event-time µs, event_type) pairs no older than ``ttl_days``
-    behind the user's own running max event time — old entries are
-    EVICTED as the user's clock advances, so state is bounded by
-    events-per-user-per-window, never by history (the custom-state
-    analog of ``dropDuplicatesWithinWatermark``'s TTL).
-
-    Determinism across ANY replay batching (the property that makes
-    this gradable where processing-time TTL is not):
-
-    * eviction is SAFE — an entry evicted at batch b satisfies
-      ts < max_b − TTL ≤ max_final − TTL, so it can never belong to
-      the final trailing window (the user's max only grows);
-    * the user's running max comes from his OWN rows, so after the
-      user's last input batch it equals his final max, and his last
-      emission is exactly the trailing window vs that final max;
-    * counts within a fixed window only grow, so taking each (user,
-      type)'s max count among rows carrying the user's final max
-      timestamp resolves same-max multi-batch emissions.
-
-    The batch oracle is therefore plain SQL: events within
-    ``ttl_days`` of the per-user max(ts), grouped by (user, type).
-
-    Scale shape: state per user is O(events in window); emission per
-    batch is O(types per user); one shuffle on user_id per micro-batch
-    (the stateful exchange); the final selection is a window + agg over
-    the (users × types)-sized sink table.
-    """
-    import pandas as pd
-
-    from pyspark.sql import Window
-
-    ttl_us = ttl_days * 24 * 3600 * 1_000_000
-
-    def update(key, pdfs, state):
-        ts0, ty0 = state.get if state.exists else ([], [])
-        ts = list(ts0)
-        ty = list(ty0)
-        for pdf in pdfs:
-            ts.extend(int(v) for v in pdf["ts_us"])
-            ty.extend(pdf["event_type"])
-        umax = max(ts)
-        kept = [(a, b) for a, b in zip(ts, ty) if a >= umax - ttl_us]
-        ts = [a for a, _ in kept]
-        ty = [b for _, b in kept]
-        state.update((ts, ty))
-        counts: dict = {}
-        for b in ty:
-            counts[b] = counts.get(b, 0) + 1
-        items = sorted(counts.items())
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]] * len(items),
-                "event_type": [k for k, _ in items],
-                "n_recent": [v for _, v in items],
-                "user_last_us": [umax] * len(items),
-            }
-        )
-
-    rows = (
-        events_stream(spark, sf_dir)
-        .select(
-            "user_id",
-            "event_type",
-            F.unix_micros(F.col("ts")).alias("ts_us"),
-        )
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            update,
-            outputStructType=(
-                "user_id long, event_type string, n_recent long, user_last_us long"
-            ),
-            stateStructType="ts array<long>, ty array<string>",
-            outputMode="update",
-            timeoutConf="NoTimeout",
-        )
-    )
-    out = run_stream_to_memory(
-        spark, rows, name="stream_ttl_activity", output_mode="update"
-    )
-    w = Window.partitionBy("user_id")
-    return (
-        out.withColumn("final_us", F.max("user_last_us").over(w))
-        .filter(F.col("user_last_us") == F.col("final_us"))
-        .groupBy("user_id", "event_type")
-        .agg(
-            F.max("n_recent").alias("n_recent"),
-            F.max("user_last_us").alias("user_last_us"),
-        )
-    )

@@ -104,7 +104,7 @@ def test_approx_sketches_close_to_exact(spark):
 
 
 def test_stateful_streaming_equals_batch(spark, tmp_path):
-    from rdbms_subsetter_spark.streaming import events as se
+    from rdbms_subsetter_spark.queries.events import q_streaming_stateful_totals
 
     src = spark.createDataFrame(
         [(i, ts(i % 50), i % 3, "t", float(i)) for i in range(60)],
@@ -112,7 +112,7 @@ def test_stateful_streaming_equals_batch(spark, tmp_path):
     )
     path = str(tmp_path / "events.parquet")
     src.coalesce(2).write.parquet(path)
-    out = se.streaming_stateful_totals(spark, str(tmp_path))
+    out = q_streaming_stateful_totals(spark, str(tmp_path))
     got = {r["user_id"]: (r["n_events"], r["sum_value"]) for r in out.collect()}
     exp = {
         r["user_id"]: (r["n"], r["s"])

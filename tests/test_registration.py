@@ -1,12 +1,18 @@
 """Registration-integrity guards for the driver contract: no entry may
 silently shadow another (a collision once hid round 1's agg_unpivot
-behind a round-2 namesake), every oracle key must have a query, and
-``GRADING_ORDER`` must name each registered entry exactly once.
+behind a round-2 namesake), every oracle key must have a query,
+``GRADING_ORDER`` must name each registered entry exactly once, and an
+entry's code lives where it is registered.
 """
 
 from __future__ import annotations
 
+import ast
+from pathlib import Path
+
 import pytest
+
+QUERIES_DIR = Path(__file__).resolve().parents[1] / "rdbms_subsetter_spark" / "queries"
 
 
 def test_register_raises_on_duplicate_name():
@@ -69,3 +75,38 @@ def test_oracle_changes_carry_a_regrade_marker():
         f"tests/oracle_manifest.json out of date (added/retired entries: "
         f"{sorted(stale)}) — regenerate with `python tools/update_oracle_manifest.py`"
     )
+
+
+def _forwarding_entries(path: Path) -> list[str]:
+    """Registered functions in ``path`` whose body, apart from its
+    docstring and imports, is one ``return f(spark, sf_dir, ...)``."""
+    found = []
+    for fn in ast.walk(ast.parse(path.read_text())):
+        if not isinstance(fn, ast.FunctionDef) or not any(
+            isinstance(d, ast.Call) and getattr(d.func, "id", None) == "register"
+            for d in fn.decorator_list
+        ):
+            continue
+        body = [
+            s for s in fn.body
+            if not isinstance(s, (ast.Import, ast.ImportFrom))
+            and not (isinstance(s, ast.Expr) and isinstance(s.value, ast.Constant))
+        ]
+        if (
+            len(body) == 1
+            and isinstance(body[0], ast.Return)
+            and isinstance(body[0].value, ast.Call)
+            and [ast.unparse(a) for a in body[0].value.args] == ["spark", "sf_dir"]
+        ):
+            found.append(f"{path.name}::{fn.name}")
+    return found
+
+
+def test_no_registered_entry_only_forwards():
+    """An entry's DataFrame code is written where it is registered: a
+    registered function that only forwards ``(spark, sf_dir)`` to a body
+    elsewhere is a second definition of the same entry."""
+    paths = sorted(QUERIES_DIR.glob("*.py"))
+    assert len(paths) > 1
+    forwards = [f for p in paths for f in _forwarding_entries(p)]
+    assert not forwards, f"registered entries that only forward: {forwards}"

@@ -15,7 +15,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-TTL_DAYS = 7
+TTL_DAYS = 7  # the trailing window of q_streaming_ttl_activity
 
 
 @pytest.fixture(scope="module")
@@ -70,13 +70,11 @@ def test_ttl_activity_multibatch_replay_matches_batch(spark, multibatch_events_d
     out-of-order multi-batch replay: 4 part files = 4 micro-batches
     delivering late data, evictions firing mid-replay — the final
     result still equals the batch trailing-window computation."""
-    from rdbms_subsetter_spark.streaming.events import streaming_ttl_activity
+    from rdbms_subsetter_spark.queries.events import q_streaming_ttl_activity
 
     got = {
         (r["user_id"], r["event_type"]): (r["n_recent"], r["user_last_us"])
-        for r in streaming_ttl_activity(
-            spark, multibatch_events_dir, ttl_days=TTL_DAYS
-        ).collect()
+        for r in q_streaming_ttl_activity(spark, multibatch_events_dir).collect()
     }
     ev = spark.read.parquet(os.path.join(multibatch_events_dir, "events.parquet"))
     umax = {

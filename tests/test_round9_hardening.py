@@ -156,12 +156,12 @@ def test_streaming_asof_enrich_equals_batch_asof(spark):
 
     from rdbms_subsetter_spark.catalog import Catalog
     from rdbms_subsetter_spark.operators import joins
-    from rdbms_subsetter_spark.streaming import events as se
+    from rdbms_subsetter_spark.queries.events import q_streaming_asof_enrich
     from tests.conftest import SF_SMALL
 
     got = {
         r["event_id"]: (r["asof_orderkey"], r["asof_cents"])
-        for r in se.streaming_asof_enrich(spark, SF_SMALL).collect()
+        for r in q_streaming_asof_enrich(spark, SF_SMALL).collect()
     }
 
     cat = Catalog(spark, SF_SMALL)
@@ -193,11 +193,11 @@ def test_streaming_asof_enrich_is_stateless(spark):
     codegen array algebra, not stream state).  Asserted from the
     finished query's own progress report — a stateful regression (e.g.
     someone 'fixing' it with a stream-side window) flips the count."""
-    from rdbms_subsetter_spark.streaming import events as se
+    from rdbms_subsetter_spark.queries.events import q_streaming_asof_enrich
     from tests.conftest import SF_SMALL
 
     progress: dict = {}
-    out = se.streaming_asof_enrich(spark, SF_SMALL, progress_out=progress)
+    out = q_streaming_asof_enrich(spark, SF_SMALL, progress_out=progress)
     assert out.count() > 0
     assert progress.get("n_state_operators") == 0, progress
 

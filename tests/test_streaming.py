@@ -14,6 +14,10 @@ from __future__ import annotations
 import datetime as dt
 import time
 
+from rdbms_subsetter_spark.queries.events import (
+    q_streaming_sessions,
+    q_streaming_state_introspection,
+)
 from rdbms_subsetter_spark.streaming import events as se
 
 
@@ -35,7 +39,7 @@ def test_watermark_drops_rows_behind_evicted_state(spark, tmp_path):
     # batch 2: VERY late row for hour 0 — state is gone → dropped
     _write_batch(spark, path, [(100, t, 1, "a", 100.0)])
 
-    agg = se.hourly_agg(se.events_stream(spark, str(tmp_path)), watermark="1 hour")
+    agg = se.hourly_agg(se.events_stream(spark, str(tmp_path)))
     out = se.run_stream_to_memory(spark, agg, "wm_drop_test", output_mode="append")
     got = {r["hour_start"]: r["sum_value"] for r in out.collect()}
     assert got[t] == 1.0, got  # late 100.0 did NOT resurrect hour 0
@@ -55,7 +59,7 @@ def test_session_windows_emitted_after_watermark(spark, tmp_path):
     # advance the watermark far enough to close and emit every session
     _write_batch(spark, path, [(99, t + 300 * m, 3, "a", 1.0)])
 
-    out = se.streaming_session_counts(spark, str(tmp_path))
+    out = q_streaming_sessions(spark, str(tmp_path))
     got = {(r["user_id"], r["n_events"]) for r in out.collect()}
     assert (1, 2) in got, got   # first session of user 1: events 1+2
     assert (1, 1) in got, got   # second session of user 1: event 3
@@ -105,8 +109,6 @@ def test_transform_with_state_v2_when_available(spark):
     fallback twin is covered by the oracle parity suite either way."""
     import pytest
 
-    from rdbms_subsetter_spark.streaming import events as se
-
     if not se.transform_with_state_available():
         pytest.skip(
             "protobuf absent (pyspark does not vendor google.protobuf, and "
@@ -117,16 +119,19 @@ def test_transform_with_state_v2_when_available(spark):
             "same batch-aggregate oracle — and that fallback IS the path "
             "the oracle-parity suite and the driver grade in this env."
         )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    out = se.run_stream_to_memory(
-        spark,
-        se.stateful_user_totals_v2(se.events_stream(spark, "/root/testdata/sf0.001")),
-        name="tws_v2_test",
-        output_mode="update",
-    )
+    from rdbms_subsetter_spark.session import conf_window
+
+    rocksdb = {
+        "spark.sql.streaming.stateStore.providerClass":
+            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    }
+    with conf_window(spark, rocksdb):
+        out = se.run_stream_to_memory(
+            spark,
+            se.stateful_user_totals_v2(se.events_stream(spark, "/root/testdata/sf0.001")),
+            name="tws_v2_test",
+            output_mode="update",
+        )
     assert out.count() > 0
 
 
@@ -140,11 +145,10 @@ def test_state_introspection_partition_parallel_and_restores_conf(spark):
     import tempfile
 
     from rdbms_subsetter_spark.session import stable_suffix
-    from rdbms_subsetter_spark.streaming import events as se
 
     sf = "/root/testdata/sf0.001"
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    out = se.streaming_state_introspection(spark, sf)
+    out = q_streaming_state_introspection(spark, sf)
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
 
     ckpt = os.path.join(
@@ -154,3 +158,20 @@ def test_state_introspection_partition_parallel_and_restores_conf(spark):
     n_parts = raw.select("partition_id").distinct().count()
     assert n_parts > 1, "state read collapsed to a single partition"
     assert out.count() == raw.count()
+
+
+def test_transform_with_state_restores_state_store_provider(spark, monkeypatch):
+    """The transformWithState entry switches the session to the RocksDB
+    state store for its own run only: every later streaming query in
+    the session must get the provider it had before.  The v2 operator
+    is stood in by its applyInPandasWithState twin, which runs without
+    protobuf; the RocksDB switch is what is tested."""
+    from rdbms_subsetter_spark.queries import events as qe
+
+    key = "spark.sql.streaming.stateStore.providerClass"
+    monkeypatch.setattr(qe, "transform_with_state_available", lambda: True)
+    monkeypatch.setattr(qe, "stateful_user_totals_v2", se.stateful_user_totals)
+    before = spark.conf.get(key)
+    out = qe.q_streaming_transform_with_state(spark, "/root/testdata/sf0.001")
+    assert spark.conf.get(key) == before
+    assert out.count() > 0
