@@ -25,7 +25,7 @@ columns, distinct — orders of magnitude smaller than rows).  Every key
 set that gains a contribution is computed ONCE, where it is made, as
 an eager ``localCheckpoint``: each parent-closure merge, each
 child-pull edge, and each cyclic fixpoint iteration (which also stops
-lineage growth, the real scale risk of iterative Spark).  Downstream
+lineage growth, and observes whether the round added keys).  Downstream
 consumers — every written table, every FK edge of the integrity check,
 every summary count branch — reuse that computed relation instead of
 replaying the closure subtree per branch.  The final materialization
@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from rdbms_subsetter_spark.catalog import Catalog
 from rdbms_subsetter_spark.constraints import ConstraintRegistry, ForeignKey
 from rdbms_subsetter_spark.sampling import SamplePlan, sample_exact_n
+from rdbms_subsetter_spark.session import observed_checkpoint
 
 
 def _key_cols(registry: ConstraintRegistry, catalog: Catalog, table: str) -> list[str]:
@@ -210,12 +211,15 @@ class ClosureEngine:
                                 continue
                             needed = self._required_parent_keys(fk, rows)
                             if fk.ref_table in keys:
-                                new = needed.join(
-                                    keys[fk.ref_table],
-                                    on=list(needed.columns),
-                                    how="left_anti",
-                                ).localCheckpoint(eager=True)
-                                if new.count() == 0:
+                                new, seen = observed_checkpoint(
+                                    needed.join(
+                                        keys[fk.ref_table],
+                                        on=list(needed.columns),
+                                        how="left_anti",
+                                    ),
+                                    n=F.count(F.lit(1)),
+                                )
+                                if seen["n"] == 0:
                                     continue
                                 keys[fk.ref_table] = (
                                     keys[fk.ref_table]

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from rdbms_subsetter_spark.operators.text import fingerprint, normalize, tokens
+from rdbms_subsetter_spark.session import conf_window, observed_checkpoint
 
 # ---------------------------------------------------------------------------
 # exact dedup
@@ -782,9 +783,10 @@ def connected_components(
       shuffles are sized from the edge count (~1M edges per partition,
       8 to 2048 partitions), not inherited from the session.
 
-    Per-round ``localCheckpoint`` cuts lineage growth, the same
-    discipline as the FK-closure fixpoint (closure.py) — an iterative
-    driver loop is exactly how the reference's recursive
+    Each round's eager ``localCheckpoint`` cuts lineage growth and also
+    observes the round's stop signal (``session.observed_checkpoint``),
+    the same discipline as the FK-closure fixpoint (closure.py) — an
+    iterative driver loop is exactly how the reference's recursive
     ``create_row_in`` closure (subsetter.py::create_row_in) maps onto
     set-at-a-time Spark.
 
@@ -798,40 +800,30 @@ def connected_components(
     singleton rows for self-loop-only nodes should union those nodes
     back in themselves.
     """
-    from rdbms_subsetter_spark.session import conf_window
-
     if algorithm == "star":
         # star works on each undirected edge represented ONCE as
         # (hi, lo) — derive it straight from the input without the
         # symmetric-union materialization minlabel needs (one less
         # shuffle + checkpoint of the doubled edge set)
-        e = (
+        e, start = observed_checkpoint(
             edges.select(
                 F.greatest(F.col(left), F.col(right)).alias("u"),
                 F.least(F.col(left), F.col(right)).alias("v"),
             )
             .filter(F.col("u") != F.col("v"))
-            .distinct()
-            # lazy, but under AQE making it already runs the distinct's
-            # shuffle stage; only the final stage waits for the n_part
-            # count() below, which fills the checkpoint
-            .localCheckpoint(eager=False)
+            .distinct(),
+            **_edge_checksum(),
         )
-        # iterative rounds over a label/edge set sized ∝ nodes: per-round
-        # fixed cost scales with shuffle-partition count, so size the
-        # round shuffles to the GRAPH instead of inheriting the batch
-        # width.  Derived from the edge count (cheap: e is checkpointed)
-        # rather than hardcoded — AQE only coalesces partitions DOWN, so
-        # a fixed small count would cap per-round parallelism on a real
-        # cluster regardless of graph size; ~1M edge rows per partition
-        # keeps tiny graphs at the low fixed cost measured in round 7
-        # while a 10B-edge graph gets its full width.  Results are
+        # size the round shuffles to the GRAPH, not the batch width:
+        # ~1M observed edge rows per partition, 8 to 2048 (AQE only
+        # coalesces DOWN, so a fixed small count would cap a real
+        # cluster's per-round parallelism).  Results are
         # partitioning-independent.
-        n_part = max(8, min(2048, -(-e.count() // 1_000_000)))
+        n_part = max(8, min(2048, -(-start["n"] // 1_000_000)))
         with conf_window(
             edges.sparkSession, {"spark.sql.shuffle.partitions": str(n_part)}
         ):
-            labels = _cc_star_labels(e, max_iter)
+            labels = _cc_star_labels(e, start, max_iter)
             sizes = labels.groupBy("label").agg(F.count(F.lit(1)).alias("cluster_size"))
             out = labels.join(sizes, on="label").select(
                 F.col("node"), F.col("label").alias("cluster_id"), "cluster_size"
@@ -861,21 +853,16 @@ def connected_components(
             .groupBy("src")
             .agg(F.min("label").alias("nbr_min"))
         )
-        stepped = (
-            labels.join(nbr_min, labels["node"] == nbr_min["src"], "left")
-            .select(
+        stepped, seen = observed_checkpoint(
+            labels.join(nbr_min, labels["node"] == nbr_min["src"], "left").select(
                 "node",
                 F.least(F.col("label"), F.coalesce("nbr_min", "label")).alias("label"),
                 (F.col("nbr_min") < F.col("label")).alias("changed"),
-            )
-            # lazy, but under AQE making it already runs the round's
-            # join and aggregation stages; only the final stage waits
-            # for the n_changed count below, which fills the checkpoint
-            .localCheckpoint(eager=False)
+            ),
+            n_changed=F.count(F.when(F.col("changed"), 1)),
         )
-        n_changed = stepped.filter(F.col("changed")).count()
         labels = stepped.drop("changed")
-        if n_changed == 0:
+        if seen["n_changed"] == 0:
             converged = True
             break
     if not converged:
@@ -895,7 +882,14 @@ def connected_components(
     )
 
 
-def _cc_star_labels(e: DataFrame, max_iter: int) -> DataFrame:
+def _edge_checksum() -> dict:
+    """Count + order-independent hash of an ``(u, v)`` edge set, as
+    aggregates for ``observed_checkpoint``; bit_xor, not a sum, because
+    a sum of 64-bit hashes overflows under ANSI."""
+    return {"n": F.count(F.lit(1)), "h": F.bit_xor(F.xxhash64("u", "v"))}
+
+
+def _cc_star_labels(e: DataFrame, start: dict, max_iter: int) -> DataFrame:
     """Alternating large-star/small-star contraction on a self-loop-free
     distinct edge list ``(u, v)`` with u > v (each undirected edge
     represented once); returns ``(node, label)`` with label = component
@@ -914,24 +908,15 @@ def _cc_star_labels(e: DataFrame, max_iter: int) -> DataFrame:
     function of the edge set, giving O(log² n) rounds (vs O(diameter)
     for label propagation).  Convergence is detected when the
     small-star output is a fixpoint (same edge multiset two rounds
-    running — checked with a count + hash checksum, one tiny
-    aggregate, not a full comparison join).  At the fixpoint every
-    edge is (node → its component min), i.e. the label table itself.
+    running — checked with ``_edge_checksum``, not a full comparison
+    join; ``start`` is that of ``e``).  At the fixpoint every edge is
+    (node → its component min), i.e. the label table itself.
 
     Scale shape per round: two shuffles on the node key (the groupBys);
-    edges localCheckpoint'ed so each round's DAG starts from
-    materialized state instead of replaying all prior rounds.
+    each round's edges are checkpointed eagerly, observing their
+    checksum, so the next round's DAG starts from materialized state.
     """
-    def checksum(df: DataFrame):
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            # bit_xor: order-independent and overflow-free under ANSI
-            # (a sum of 64-bit hashes overflows)
-            F.bit_xor(F.xxhash64("u", "v")).alias("h"),
-        ).collect()[0]
-        return (row["n"], row["h"])
-
-    prev = checksum(e)
+    prev = start
     converged = False
     for _ in range(max_iter):
         # ---- large-star: neighborhoods from BOTH directions
@@ -955,7 +940,7 @@ def _cc_star_labels(e: DataFrame, max_iter: int) -> DataFrame:
             large.groupBy("u")
             .agg(F.min("v").alias("m"))
         )  # v < u always holds here, so min(Γ_small ∪ {u}) = min(v)
-        small = (
+        e, cur = observed_checkpoint(
             large.join(m2, "u")
             .select(
                 F.explode(
@@ -967,14 +952,9 @@ def _cc_star_labels(e: DataFrame, max_iter: int) -> DataFrame:
             )
             .select("s.u", "s.v")
             .filter(F.col("u") != F.col("v"))
-            .distinct()
-            # lazy, but under AQE making it already runs the round's
-            # shuffle stages; only the final stage waits for the
-            # checksum below, which fills the checkpoint
-            .localCheckpoint(eager=False)
+            .distinct(),
+            **_edge_checksum(),
         )
-        cur = checksum(small)
-        e = small
         if cur == prev:
             converged = True
             break

@@ -12,6 +12,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from rdbms_subsetter_spark.session import observed_checkpoint
+
 
 def symmetrize(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     """Undirected view of a directed edge list (both orientations,
@@ -21,11 +23,16 @@ def symmetrize(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFram
     return fwd.unionByName(rev).filter(F.col("src") != F.col("dst")).distinct()
 
 
+# rounds between rank checkpoints when no node is dangling: the rounds
+# in between run as ONE job (k joins + k shuffles in a single DAG),
+# paying the job-boundary overhead once while still bounding lineage
+CHECKPOINT_INTERVAL = 3
+
+
 def pagerank(
     edges: DataFrame,
     iterations: int = 8,
     damping: float = 0.85,
-    checkpoint_interval: int = 4,
     broadcast_ranks: bool = False,
     nodes_are_sources: bool = False,
 ) -> DataFrame:
@@ -39,13 +46,14 @@ def pagerank(
 
     Scale design: out-degree is joined into the rank STATE once, before
     the loop, so each iteration is edges ⋈ ranks + one groupBy(dst)
-    shuffle of the map-side-combined contributions.  Whether dangling
-    nodes exist is decided once; a fully-symmetrized graph has none, so
-    the per-iteration driver scalar (an extra job per round) is skipped
-    entirely on that path.  The rank vector is coalesced small and
-    ``localCheckpoint``ed every ``checkpoint_interval`` rounds to cut
-    lineage, exactly the scheme closure.py uses for the FK fixpoint.
-    Degree skew on hub nodes is AQE's skew-join case.
+    shuffle of the map-side-combined contributions.  Its checkpoint
+    observes N and the dangling-node count (``observed_checkpoint``);
+    with dangling nodes each round's rank checkpoint observes the mass
+    the next round redistributes (round 1: n_dangling / N).  Otherwise
+    (always so when symmetrized) the coalesced rank vector is
+    checkpointed every ``CHECKPOINT_INTERVAL`` rounds to cut lineage,
+    the scheme closure.py uses for the FK fixpoint.  Degree skew on hub
+    nodes is AQE's skew-join case.
 
     Join strategy: with ``broadcast_ranks`` the O(|V|) rank vector is
     broadcast each round and the edge list NEVER moves — right whenever
@@ -66,35 +74,29 @@ def pagerank(
         # set, so the union+distinct over both endpoints — a second
         # full pass over the edges — is skipped, and dangling nodes
         # are impossible by construction.
-        node_deg = outdeg.coalesce(4).localCheckpoint(eager=True)
-        has_dangling = False
+        nodes = outdeg
     else:
-        node_deg = (
+        nodes = (
             edges.select(F.col("src").alias("node"))
             .unionByName(edges.select(F.col("dst").alias("node")))
             .distinct()
             .join(outdeg, "node", "left")
-            .coalesce(4)
-            .localCheckpoint(eager=True)
         )
-        has_dangling = (
-            node_deg.filter(F.col("outdeg").isNull()).limit(1).count() > 0
-        )
-    n = node_deg.count()
+    node_deg, seen = observed_checkpoint(
+        nodes.coalesce(4),
+        n=F.count(F.lit(1)),
+        n_dangling=F.count(F.when(F.col("outdeg").isNull(), 1)),
+    )
+    n = seen["n"]
     # empty graph: no nodes -> no ranks (the (1-d)/N base is undefined)
     if n == 0:
         return node_deg.select("node", F.lit(0.0).alias("rank")).limit(0)
+    n_dangling = seen["n_dangling"]
+    dangling = n_dangling / n
     base = (1.0 - damping) / n
 
     ranks = node_deg.withColumn("rank", F.lit(1.0 / n))
     for i in range(iterations):
-        dangling = (
-            ranks.filter(F.col("outdeg").isNull())
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("m"))
-            .collect()[0]["m"]
-            if has_dangling
-            else 0.0
-        )
         live = ranks.filter(F.col("outdeg").isNotNull())
         if broadcast_ranks:
             live = F.broadcast(live)
@@ -114,11 +116,12 @@ def pagerank(
                 + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))
             ).alias("rank"),
         )
-        # checkpoint every k rounds, not every round: the k-round chain
-        # runs as ONE job (k joins + k shuffles in a single DAG), paying
-        # the job-boundary overhead once while still bounding lineage.
-        # With dangling nodes the driver scalar forces per-round
-        # materialization anyway, so checkpoint every round then.
-        if has_dangling or (i + 1) % checkpoint_interval == 0 or i == iterations - 1:
+        if n_dangling:
+            ranks, seen = observed_checkpoint(
+                ranks.coalesce(4),
+                m=F.sum(F.when(F.col("outdeg").isNull(), F.col("rank"))),
+            )
+            dangling = seen["m"]
+        elif (i + 1) % CHECKPOINT_INTERVAL == 0 or i == iterations - 1:
             ranks = ranks.coalesce(4).localCheckpoint(eager=True)
     return ranks.select("node", "rank")

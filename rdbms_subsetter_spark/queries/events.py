@@ -626,9 +626,10 @@ def q_streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     on user_id once and matching is per-partition; state per key is
     bounded by the 1h window × arrival rate.
     """
+    # one source for both sides: each micro-batch scans new files once
+    src = events_stream(spark, sf_dir)
     clicks = (
-        events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
+        src.filter(F.col("event_type") == "click")
         .select(
             "user_id",
             F.col("event_id").alias("click_id"),
@@ -637,8 +638,7 @@ def q_streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("click_ts", "1 hour")
     )
     purchases = (
-        events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
+        src.filter(F.col("event_type") == "purchase")
         .select(
             F.col("user_id").alias("p_user_id"),
             F.col("event_id").alias("purchase_id"),
@@ -654,8 +654,9 @@ def q_streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "purchase_ts <= click_ts + INTERVAL 1 HOUR"
         ),
     ).select("user_id", "click_id", "purchase_id", "click_ts", "purchase_ts")
+    # small interval-join state: 2 partitions, as in the outer twin
     return run_stream_to_memory(
-        spark, joined, name="stream_stream_join", output_mode="append"
+        spark, joined, name="stream_stream_join", output_mode="append", state_partitions=2
     )
 
 

@@ -150,10 +150,10 @@ def q_graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("graph_pagerank")
 def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the undirected part↔supplier supply graph (edges =
-    distinct (l_partkey, l_suppkey) pairs observed in lineitem), 8 power
+    distinct (l_partkey, l_suppkey) pairs observed in lineitem), 6 power
     iterations, d=0.85 — the iterative-algorithm showcase: a driver loop
-    of one-shuffle Spark jobs with per-round localCheckpoint, same
-    pattern as the FK-closure fixpoint (closure.py).  Non-SQL-
+    of one-shuffle Spark jobs with a localCheckpoint every few rounds,
+    same pattern as the FK-closure fixpoint (closure.py).  Non-SQL-
     expressible → rows-only gate; the operator itself is verified
     against a dense numpy power iteration in tests/test_operators.py.
     Top 25 nodes by rounded rank, doc-id tiebreak, so the output is
@@ -184,7 +184,6 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         und,
         iterations=6,
         damping=0.85,
-        checkpoint_interval=3,
         broadcast_ranks=True,  # ~21k nodes: the rank vector is tiny
         nodes_are_sources=True,  # symmetrized: every node has out-edges
     )

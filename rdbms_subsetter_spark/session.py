@@ -11,7 +11,7 @@ from __future__ import annotations
 import os
 from pathlib import Path
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 
 def _worker_pythonpath() -> str:
@@ -104,3 +104,13 @@ def conf_window(spark: SparkSession, confs: dict):
                     spark.conf.set(k, v)
 
     return _window()
+
+
+def observed_checkpoint(df: DataFrame, **aggs) -> tuple[DataFrame, dict]:
+    """Eager ``localCheckpoint`` of ``df``, returned with the aggregates
+    ``aggs`` (name → Column) observed over its rows by the checkpoint's
+    own job: a driver loop's stop signal at no extra action.  Over no
+    rows ``count`` observes 0 and ``sum``/``bit_xor`` observe None."""
+    obs = Observation()
+    df = df.observe(obs, *(col.alias(name) for name, col in aggs.items()))
+    return df.localCheckpoint(eager=True), obs.get

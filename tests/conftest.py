@@ -1,3 +1,4 @@
+import itertools
 import sys
 from pathlib import Path
 
@@ -58,3 +59,22 @@ def register_views(con, sf_dir: str) -> None:
 
     for t in TPCH_TABLES:
         con.execute(f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+
+
+_job_groups = itertools.count()
+
+
+def count_jobs(spark, fn):
+    """Run ``fn()`` under a fresh Spark job group; return its result and
+    the number of Spark jobs it started, read from the ``StatusTracker``
+    once the listener bus has drained."""
+    sc = spark.sparkContext
+    group = f"count_jobs_{next(_job_groups)}"
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))

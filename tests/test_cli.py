@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from rdbms_subsetter_spark.cli import main, parse_force
 from rdbms_subsetter_spark.catalog import Catalog
 from rdbms_subsetter_spark.closure import ClosureEngine
-from tests.conftest import SF_MED, SF_SMALL
+from tests.conftest import SF_MED, SF_SMALL, count_jobs
 
 
 def _printed_counts(out: str) -> dict[str, int]:
@@ -141,20 +141,12 @@ def test_cli_spark_job_budget(spark, tmp_path, capsys):
     closure, and counts and resync values come from the writes.  A
     change that brings back replayed writes or post-write actions
     moves the figure (the same at 4 and 8 local cores)."""
-    sc = spark.sparkContext
-    group = "test_cli_spark_job_budget"
     argv = [SF_MED, str(tmp_path / "subset"), "0.05", "--seed", "1", "--yes",
             "--exclude-tables", *_only_tables(spark, SF_MED, {"customer", "orders"})]
-    sc.setJobGroup(group, group)
-    try:
-        rc = main(argv)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+    rc, jobs = count_jobs(spark, lambda: main(argv))
     capsys.readouterr()
     assert rc == 0
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 25
+    assert jobs == 25
 
 
 def test_cli_config_merge(spark, tmp_path):

@@ -94,6 +94,33 @@ def test_star_and_minlabel_agree_on_shallow_graph(spark):
     assert a == b
 
 
-def test_star_cc_empty_edges(spark):
+def _bounded(fn, timeout=300):
+    """Run ``fn`` in a daemon thread and return its result; fail if it
+    has not finished within ``timeout`` seconds — a round's observed
+    stop signal must be available even when the round has no rows."""
+    import threading
+
+    result: dict = {}
+    worker = threading.Thread(target=lambda: result.setdefault("v", fn()), daemon=True)
+    worker.start()
+    worker.join(timeout=timeout)
+    assert not worker.is_alive(), "blocked on an empty round"
+    return result["v"]
+
+
+@pytest.mark.parametrize("algorithm", ["minlabel", "star"])
+def test_star_cc_empty_edges(spark, algorithm):
     df = spark.createDataFrame([], "doc_id_1 long, doc_id_2 long")
-    assert dedup.connected_components(df, algorithm="star").count() == 0
+    assert _bounded(
+        lambda: dedup.connected_components(df, algorithm=algorithm).count()
+    ) == 0
+
+
+@pytest.mark.parametrize("nodes_are_sources", [False, True])
+def test_pagerank_empty_graph(spark, nodes_are_sources):
+    from rdbms_subsetter_spark.operators import graph
+
+    edges = spark.createDataFrame([], "src long, dst long")
+    assert _bounded(
+        lambda: graph.pagerank(edges, nodes_are_sources=nodes_are_sources).collect()
+    ) == []

@@ -17,7 +17,7 @@ from rdbms_subsetter_spark.plans import (
     pushed_filters,
     wholestage_codegen_spans,
 )
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_MED, SF_SMALL, count_jobs
 
 
 @pytest.fixture(scope="module")
@@ -238,6 +238,29 @@ def test_no_cartesian_product_anywhere(name, fn, spark):
             f"{name}: unexpected BroadcastNestedLoopJoin (allowlist it only "
             "if the broadcast side is bounded by construction)"
         )
+
+
+# Spark jobs of a warm build + collect at sf0.01 (the same at 4 and 8
+# local cores).  Each round of the CC and PageRank driver loops is one
+# observed checkpoint that also yields the round's stop signal; a
+# separate count or collect per round raises these figures.
+_FIXPOINT_ENTRY_JOBS = {
+    "graph_pagerank_fixture": 91,
+    "dedup_cc_clusters": 28,
+    "dedup_minhash_keep": 40,
+    "dedup_cc_clusters_minlabel": 20,
+    "graph_pagerank": 28,
+}
+
+
+@pytest.mark.parametrize("name", sorted(_FIXPOINT_ENTRY_JOBS))
+def test_fixpoint_entry_job_count(spark, name):
+    import __spark_entry__ as entry_mod
+
+    fn = entry_mod.queries()[name]
+    fn(spark, SF_MED).collect()  # warm
+    _, jobs = count_jobs(spark, lambda: fn(spark, SF_MED).collect())
+    assert jobs == _FIXPOINT_ENTRY_JOBS[name]
 
 
 def test_per_source_cap_uses_window_group_limit(spark):

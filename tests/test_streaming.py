@@ -19,6 +19,7 @@ from rdbms_subsetter_spark.queries.events import (
     q_streaming_state_introspection,
 )
 from rdbms_subsetter_spark.streaming import events as se
+from tests.conftest import SF_SMALL
 
 
 def _write_batch(spark, path, rows):
@@ -175,3 +176,29 @@ def test_transform_with_state_restores_state_store_provider(spark, monkeypatch):
     out = qe.q_streaming_transform_with_state(spark, "/root/testdata/sf0.001")
     assert spark.conf.get(key) == before
     assert out.count() > 0
+
+
+def test_stream_join_reads_one_source(spark, monkeypatch):
+    """The stream-stream self-join builds one ``events_stream`` source
+    for both sides, so each micro-batch scans the arriving files once:
+    the query handed to ``run_stream_to_memory`` has one distinct
+    ``StreamingRelation`` leaf (the self-join shows it under both
+    sides; two sources would differ in their attribute ids)."""
+    from rdbms_subsetter_spark.queries import events as qe
+
+    handed = {}
+
+    def capture(spark, agg, **kw):
+        handed["plan"] = agg._jdf.queryExecution().logical().toString()
+        handed["kw"] = kw
+        return agg
+
+    monkeypatch.setattr(qe, "run_stream_to_memory", capture)
+    qe.q_streaming_stream_join(spark, SF_SMALL)
+    leaves = {
+        line[line.index("StreamingRelation "):]
+        for line in handed["plan"].splitlines()
+        if "StreamingRelation " in line
+    }
+    assert len(leaves) == 1, handed["plan"]
+    assert handed["kw"]["state_partitions"] == 2
